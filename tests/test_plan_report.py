@@ -13,7 +13,6 @@ def test_global_window_detector_is_structural():
     false-negative of VERDICT r6 #1), and must NOT flag partitioned
     windows — including the partitionBy-without-orderBy shape whose node
     also prints only two bracket groups."""
-    sys.path.insert(0, "/root/repo")
     from tools.plan_report import _has_global_window
 
     # q184 shape: global window with >4 lines of Project/Generate chrome
@@ -73,7 +72,6 @@ def test_checkpoint_hidden_window_is_captured(spark):
     NO trace in the downstream plan (only Scan ExistingRDD) — the audit
     must see it via the capture hook, or any scale-killer could hide
     behind a checkpoint (ADVICE r7, q184)."""
-    sys.path.insert(0, "/root/repo")
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -105,7 +103,6 @@ def test_checkpoint_hidden_window_is_captured(spark):
 
 
 def test_plan_report_no_violations(spark, sf_dir):
-    sys.path.insert(0, "/root/repo")
     import tools.plan_report as pr
 
     old_argv = sys.argv

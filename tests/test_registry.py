@@ -1,6 +1,9 @@
 """Registry contract tests: every declared query runs at sf0.001 with a
 stable schema, and the entry-point wiring matches the driver contract."""
 
+import os
+import time
+
 import pytest
 
 import __spark_entry__ as entry
@@ -20,9 +23,27 @@ def test_entry_returns_rows(spark):
     assert len(df.schema.fields) > 0
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _active_jobs(spark, timeout_s: float = 5.0) -> list[int]:
+    """Spark job ids still running, polled until empty or timeout — a
+    single read races the listener bus that retires finished jobs."""
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + timeout_s
+    ids = list(tracker.getActiveJobsIds())
+    while ids and time.monotonic() < deadline:
+        time.sleep(0.1)
+        ids = list(tracker.getActiveJobsIds())
+    return ids
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_runs_and_schema_stable(spark, sf_dir, name):
     spec = QUERIES[name]
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    views = _temp_views(spark)
     df = spec.fn(spark, sf_dir)
     cols = df.columns
     assert len(cols) == len(set(cols)), "duplicate column names"
@@ -37,6 +58,11 @@ def test_query_runs_and_schema_stable(spark, sf_dir, name):
     ]
     assert not nested, f"nested output column(s) {nested} break the driver hash"
     df.limit(5).collect()  # executes the plan
+    # Lifecycle: nothing the query started may outlive it.
+    assert not spark.streams.active, "streaming query left running"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+    assert _temp_views(spark) == views, "temp views leaked"
+    assert not _active_jobs(spark), "Spark job left running"
 
 
 def test_pins_name_declared_queries():
@@ -66,8 +92,12 @@ def test_worker_imports_survive_foreign_cwd():
     import subprocess
     import sys
 
+    # The checkout root goes on the probe process's sys.path only:
+    # PYTHONPATH would also reach the Python workers and mask the
+    # addPyFile path.
+    root = os.path.dirname(os.path.abspath(entry.__file__))
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {root!r})\n"
         "import __spark_entry__ as e\n"
         "from pyspark.sql import SparkSession\n"
         "spark = SparkSession.builder.master('local[4]')"

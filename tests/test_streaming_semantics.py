@@ -351,6 +351,25 @@ def test_streaming_distinct_single_batch_raises(spark, sf_dir, tmp_path):
         )
 
 
+def test_drain_partitions_restores_conf_when_body_raises(spark):
+    """drain_partitions lowers a session-global conf, so its error path
+    matters as much as its happy path: a drain that raises must leave
+    spark.sql.shuffle.partitions as it found it and re-raise unchanged."""
+    import pytest
+
+    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
+        drain_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with pytest.raises(ValueError, match="drain body failed"):
+        with drain_partitions(spark, 3):
+            assert spark.conf.get(key) == "3"
+            raise ValueError("drain body failed")
+    assert spark.conf.get(key) == before
+
+
 def test_ttl_eviction_boundaries(spark, sf_dir):
     """State GC fires exactly per the TTL rule: an infinite TTL evicts
     nobody; a zero TTL evicts every user except those whose last event

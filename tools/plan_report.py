@@ -20,10 +20,12 @@ Usage: python tools/plan_report.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Queries allowed to contain a partition-less Window in the PHYSICAL plan:
 # every entry must be bounded by something that does NOT grow with the
@@ -80,17 +82,14 @@ def row_staleness(declared: list[str]) -> dict:
     docstring arithmetic — the driver budget covers ~50 of the declared
     queries per round, so the honest staleness bound is the rotation
     cycle length, and this metric makes drift beyond it visible."""
-    import os
-
     latest: dict[str, int] = {}
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for fname in sorted(os.listdir(root)):
+    for fname in sorted(os.listdir(ROOT)):
         m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
         if not m:
             continue
         rnd = int(m.group(1))
         try:
-            with open(os.path.join(root, fname)) as f:
+            with open(os.path.join(ROOT, fname)) as f:
                 names = json.load(f).keys()
         except (OSError, ValueError):
             continue

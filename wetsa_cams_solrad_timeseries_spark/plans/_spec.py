@@ -100,44 +100,6 @@ def maybe_broadcast(df: DataFrame) -> DataFrame:
     return F.broadcast(df) if size <= threshold else df
 
 
-def checkpoint_parallel(dfs: list[DataFrame]) -> list[DataFrame]:
-    """Eagerly localCheckpoint several INDEPENDENT frames from a small
-    thread pool (guide §2.6 "overlap independent jobs"): Spark's
-    scheduler happily runs several jobs at once — the checkpoint jobs
-    were only sequential because driver code called them sequentially,
-    leaving executors idle through each job's tail and paying each
-    plan's driver-side analysis back-to-back. FIFO scheduling backfills
-    freed cores, so results are identical frames, just materialized
-    concurrently (in-session A-B on the q232-family setup: q232
-    4.8 -> 3.8 s, q235 6.5 -> 5.1 s, q258 8.1 -> 6.6 s at sf0.1).
-
-    Use ONLY for frames with no dependency on one another — a frame
-    that reads another's checkpoint must stay outside the pool."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(dfs) <= 1:
-        return [d.localCheckpoint(eager=True) for d in dfs]
-    with ThreadPoolExecutor(max_workers=min(4, len(dfs))) as ex:
-        return list(ex.map(lambda d: d.localCheckpoint(eager=True), dfs))
-
-
-def checkpoint_async(df: DataFrame):
-    """Eagerly localCheckpoint ONE independent frame on a background
-    thread and return the Future — the §2.6 overlap for callers whose
-    main thread runs an inherently SEQUENTIAL build (a descent round
-    loop, a stream drain) while an independent artifact (the exact
-    truth, a base kNN) can materialize on idle cores. Call
-    ``fut.result()`` at the first consumption point. The checkpointed
-    frame is identical to a sequentially-built one (deterministic
-    build, same plan)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    ex = ThreadPoolExecutor(max_workers=1)
-    fut = ex.submit(lambda: df.localCheckpoint(eager=True))
-    ex.shutdown(wait=False)  # worker finishes the submitted job
-    return fut
-
-
 @dataclass(frozen=True)
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]

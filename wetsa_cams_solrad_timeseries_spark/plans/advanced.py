@@ -1406,12 +1406,12 @@ def q165_udtf_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
                 start += _Q165_STRIDE
 
     spark.udtf.register("chunk_docs", ChunkDocs)
-    table(spark, sf_dir, "documents").createOrReplaceTempView("__q165_docs")
     return spark.sql(
         """
         SELECT d.doc_id, c.chunk_id, c.n_tokens, c.chunk_text
-        FROM __q165_docs d, LATERAL chunk_docs(d.text) c
-        """
+        FROM {docs} d, LATERAL chunk_docs(d.text) c
+        """,
+        docs=table(spark, sf_dir, "documents"),
     )
 
 
@@ -1529,12 +1529,11 @@ def q167_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size), so the unrolled plan stays shallow. The closure
     (n x depth rows) exists only as the union feeding the aggregate —
     never driver-side."""
-    table(spark, sf_dir, "part").createOrReplaceTempView("__q167_part")
     return spark.sql(
         """
         WITH RECURSIVE anc AS (
           SELECT p_partkey AS node, p_partkey AS cur, 0 AS depth
-          FROM __q167_part
+          FROM {part}
           UNION ALL
           SELECT node, cur DIV 10, depth + 1 FROM anc WHERE cur >= 10
         )
@@ -1542,7 +1541,8 @@ def q167_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(max(depth) AS INT) AS max_depth,
                CAST(sum(node) AS BIGINT) AS sum_nodes
         FROM anc WHERE cur < 10 GROUP BY cur
-        """
+        """,
+        part=table(spark, sf_dir, "part"),
     )
 
 

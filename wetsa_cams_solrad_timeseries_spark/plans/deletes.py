@@ -1566,7 +1566,6 @@ def q264_streaming_graph_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         _Q232_HOPS,
         _Q232_K,
         _Q232_M,
-        _split_embeddings,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming.graph_insert_stream import (
         streaming_graph_insert,
@@ -1585,11 +1584,22 @@ def q264_streaming_graph_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist.select("vec_id", to_double_array(F.col("embedding")).alias("__v")),
         on="vec_id",
     ).select("vec_id", "cell", "__v")
-    # Batch-side artifacts independent of the drained state — sidework:
-    # they materialize concurrently with the CDC drain (guide §2.6).
+    new_knn, tombs = streaming_graph_insert(
+        spark,
+        split_dir,
+        hist_members,
+        cents,
+        m=_Q232_M,
+        op_col="op",
+    )
+    tombs = tombs.localCheckpoint(eager=True)
+    # Batch-side artifacts independent of the drained state.
+    base_knn = cell_knn_edges(hist, cents, m=_Q232_M).localCheckpoint(
+        eager=True
+    )
     probes_all = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
     q_bound = F.col("vec_id") < _Q197_QBOUND
-    entry0_lazy = (
+    entry0 = (
         probes_all.filter(F.col("probe_rank") == 0)
         .join(emb.filter(is_new & q_bound).select("vec_id"), on="vec_id",
               how="semi")
@@ -1597,17 +1607,8 @@ def q264_streaming_graph_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("query_id"),
                 F.col("medoid").alias("node"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    new_knn, tombs, (base_knn, entry0) = streaming_graph_insert(
-        spark,
-        split_dir,
-        hist_members,
-        cents,
-        m=_Q232_M,
-        op_col="op",
-        sidework=[cell_knn_edges(hist, cents, m=_Q232_M), entry0_lazy],
-    )
-    tombs = tombs.localCheckpoint(eager=True)
 
     bridges = (
         probes_all.filter(F.col("probe_rank") >= 1)

@@ -51,63 +51,35 @@ from wetsa_cams_solrad_timeseries_spark.plans._spec import QuerySpec
 # MUST be pinned ahead of the automatic rotation so their fresh row
 # lands on the changed code.
 _PIN_FIRST = (
-    # Round 13: the ρ-sampled descent + the delete-lifecycle extensions
-    # land first (tier-1 never-checked — pinned so their first driver
-    # rows land deterministically), then every query whose kernel
-    # changed this round:
-    # - q256 (medoid node ids now persist in a dedicated bigint column
-    #   — ADVICE fix; output must be unchanged, pinned to prove it),
-    # - q259 (compact_partitioned_cells now resolves the tombstone id
-    #   column by name — behavior-identical for its single-column
-    #   tombstones, pinned to prove it),
-    # - q263 (pair kernel factored into _cdc_surviving_pairs for the
-    #   insert-side-delete unit test — behavior-identical),
-    # - q242/q243/q249 (round6_spark's midpoint-suspect band is now
-    #   magnitude-aware — identical at PCA magnitudes, pinned to prove
-    #   the serve surface).
-    # Round-13 second wave (this session): new queries first (tier-1
-    # would front-load them anyway; explicit pins make the order
-    # deterministic)...
-    "q275_bloom_semijoin",
-    "q276_mmr_rerank",
-    "q277_group_auc",
-    "q278_streaming_capped_descent",
-    "q279_dsir_selection",
-    "q280_hll_cardinality",
-    "q281_cms_heavy_hitters",
-    "q282_knn_label_gate",
-    "q283_streaming_bloom_screen",
-    "q284_streaming_hll",
-    "q285_serving_ir_metrics",
-    # ...then the shingle-family representatives: word_shingles now
-    # tokenizes BEFORE the spread shuffle (ICU-interpreted-path fix) —
-    # behavior-identical (18-query sf0.01 oracle sweep in-session), one
-    # pin per caller family to prove it on driver rows too:
-    "q32_ngram_jaccard",
-    "q33_minhash_lsh",
-    "q62_minhash_dedup_verified",
-    "q72_dedup_clusters",
-    "q209_lsh_bucket_cap",
-    "q229_curation_pipeline",
-    "q244_streaming_lsh_neardup",
-    "q253_lsh_tombstone_serve",
-    "q262_decremental_postings",
-    # Round-13 first wave (earlier session):
+    # The descent and graph-drain family: its build artifacts are now
+    # checkpointed in line (one job at a time, in build order) instead
+    # of from Python thread pools. Outputs must be unchanged; the pins
+    # put a fresh correctness row on every rewritten kernel. The
+    # _q232_setup consumers first, then the descent rounds, then the
+    # stream drains.
+    "q232_graph_ann_recall",
+    "q235_graph_ann_sla",
+    "q240_refined_graph_serving",
+    "q250_descent_depth_sla",
+    "q258_hnsw_multilayer",
+    "q273_hnsw_log_layers",
+    "q239_nn_descent_rounds",
     "q266_sampled_nn_descent",
     "q272_capped_descent_ladder",
-    "q273_hnsw_log_layers",
     "q274_capped_descent_sla",
-    "q267_phash_tombstone_serve",
-    "q268_phash_tombstone_compaction",
-    "q269_pq_tombstone_serve",
-    "q270_pq_tombstone_compaction",
-    "q271_opq_tombstone_compaction",
-    "q256_graph_delete_repair",
-    "q259_ivfsq_delete_compaction",
-    "q263_streaming_cdc_index",
-    "q242_pca_ann_gate",
-    "q243_pca_screen_sla",
-    "q249_streaming_pca_encode",
+    "q257_streaming_graph_insert",
+    "q264_streaming_graph_cdc",
+    "q265_hnsw_level_insert",
+    "q278_streaming_capped_descent",
+    # Other kernels round 14 changed that still have no correctness row
+    # on the changed code.
+    "q211_ann_recall_gate",
+    "q237_nn_descent_refine",
+    "q176_kcore_peel",
+    "q192_pagerank_converged",
+    "q71_streaming_sessions",
+    "q77_streaming_multibatch",
+    "q89_streaming_ttl_eviction",
 )
 
 

@@ -4230,9 +4230,13 @@ def _q232_setup(spark: SparkSession, sf_dir: str):
         .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
     )
     directed = knn.unionByName(bridges)
-    edges_lazy = directed.unionByName(
-        directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()  # checkpointed below, in parallel with entry0/exact
+    edges = (
+        directed.unionByName(
+            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .distinct()
+        .localCheckpoint(eager=True)  # consumed once per hop
+    )
 
     qpred = F.col("vec_id") < _Q232_NQ
     entry = (
@@ -4266,22 +4270,11 @@ def _q232_setup(spark: SparkSession, sf_dir: str):
         )
 
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("node"))
-    # The three build artifacts (edge table, entry set, exact baseline)
-    # are independent of one another — materialize them as CONCURRENT
-    # checkpoint jobs instead of three sequential ones (guide §2.6; see
-    # checkpoint_parallel for the A-B numbers).
-    from wetsa_cams_solrad_timeseries_spark.plans._spec import (
-        checkpoint_parallel,
-    )
-
-    edges, entry0, exact = checkpoint_parallel(
-        [
-            edges_lazy,  # consumed once per hop
-            entry.distinct(),
-            brute_force_topk_l2(
-                emb, emb.filter(qpred), k=_Q232_K, dim=_DIM
-            ).select("query_id", "neighbor_id"),  # reused per beam
-        ]
+    entry0 = entry.distinct().localCheckpoint(eager=True)
+    exact = (
+        brute_force_topk_l2(emb, emb.filter(qpred), k=_Q232_K, dim=_DIM)
+        .select("query_id", "neighbor_id")
+        .localCheckpoint(eager=True)  # reused by every measured beam
     )
     # Trailing build parts (checkpointed knn, bridges) let q240 rewire
     # the SAME build with NN-descent without re-paying Σ|cell|²; the
@@ -5457,34 +5450,17 @@ def q239_nn_descent_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_train_centroids,
     )
 
-    from wetsa_cams_solrad_timeseries_spark.plans._spec import (
-        checkpoint_parallel,
-    )
-
     emb = table(spark, sf_dir, "embeddings")
     cents = ivf_train_centroids(emb, k=16, n_iter=2)
+    knn = cell_knn_edges(emb, cents, m=_Q232_M).localCheckpoint(eager=True)
     med = cell_medoids(emb, cents)
     probes = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    # knn, bridges and the exact truth are mutually independent —
-    # materialize them concurrently (guide §2.6); only the round loop
-    # below is inherently sequential (each round reads the previous
-    # round's graph).
-    knn, bridges, strue = checkpoint_parallel(
-        [
-            cell_knn_edges(emb, cents, m=_Q232_M),
-            probes.filter(F.col("probe_rank") >= 1)
-            .join(F.broadcast(med), on="cell")
-            .filter(F.col("vec_id") != F.col("medoid"))
-            .select(
-                F.col("vec_id").alias("src"), F.col("medoid").alias("dst")
-            ),  # re-added to every round's graph
-            brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-            .select(
-                F.col("query_id").alias("src"),
-                F.col("neighbor_id").alias("dst"),
-            ),  # one consumer per round + the count
-        ]
+    bridges = (
+        probes.filter(F.col("probe_rank") >= 1)
+        .join(F.broadcast(med), on="cell")
+        .filter(F.col("vec_id") != F.col("medoid"))
+        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
+        .localCheckpoint(eager=True)  # re-added to every round's graph
     )
 
     lists = {0: knn}
@@ -5498,6 +5474,13 @@ def q239_nn_descent_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             graph = _sym_edges(refined.unionByName(bridges)).localCheckpoint(
                 eager=True
             )
+
+    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
+    strue = (
+        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
+        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
+        .localCheckpoint(eager=True)  # one consumer per round + the count
+    )
     nt = strue.agg(F.count(F.lit(1)).alias("nt"))
     frames = []
     for r, lst in sorted(lists.items()):
@@ -7823,12 +7806,17 @@ def q257_streaming_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         on="vec_id",
     ).select("vec_id", "cell", "__v")
 
-    # Batch-side artifacts that do NOT depend on the drained state —
-    # handed to the drain as sidework so they materialize concurrently
-    # with the micro-batches (guide §2.6) instead of serially after.
+    new_knn, _no_tombs = streaming_graph_insert(
+        spark, split_dir, hist_members, cents, m=_Q232_M
+    )
+
+    # Batch-side artifacts that do NOT depend on the drained state.
+    base_knn = cell_knn_edges(hist, cents, m=_Q232_M).localCheckpoint(
+        eager=True
+    )
     probes_all = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
     q_bound = F.col("vec_id") < _Q197_QBOUND
-    entry0_lazy = (
+    entry0 = (
         probes_all.filter(F.col("probe_rank") == 0)
         .join(emb.filter(is_new & q_bound).select("vec_id"), on="vec_id",
               how="semi")
@@ -7836,14 +7824,7 @@ def q257_streaming_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("query_id"),
                 F.col("medoid").alias("node"))
         .distinct()
-    )
-    new_knn, _no_tombs, (base_knn, entry0) = streaming_graph_insert(
-        spark,
-        split_dir,
-        hist_members,
-        cents,
-        m=_Q232_M,
-        sidework=[cell_knn_edges(hist, cents, m=_Q232_M), entry0_lazy],
+        .localCheckpoint(eager=True)
     )
 
     # Assemble the full graph exactly as q238 does (base + bridges are
@@ -8266,20 +8247,30 @@ def q265_hnsw_level_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layer memberships) — drain them as concurrent streaming queries so
     # their per-batch fixed costs overlap instead of summing; each
     # query's own batch sequence (and so its drained state) is
-    # byte-identical to a solo run (guide §2.6). The history-side build
-    # artifacts (both layers' kNN lists, the L1 membership, the entry
-    # set) are independent of the drained state — sidework: they
-    # materialize concurrently with the drains instead of serially
-    # after them.
+    # byte-identical to a solo run (guide §2.6).
+    [(new_knn0, _t0), (new_knn1, _t1)] = streaming_graph_insert_many(
+        spark,
+        [
+            (split0, hist_members, cents, _Q232_M, None),
+            (split1, hist_members_l1, cents, _Q232_M, None),
+        ],
+    )
+
+    # History-side build artifacts: independent of the drained state.
+    knn0_h = cell_knn_edges(hist, cents, m=_Q232_M).localCheckpoint(eager=True)
+    knn1_h = cell_knn_edges(
+        emb.join(l1_hist_ids, on="vec_id", how="semi"), cents, m=_Q232_M
+    ).localCheckpoint(eager=True)
     probes_all = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    l1_all_ids_lazy = (
+    l1_all_ids = (
         emb.filter(is_l1)
         .select("vec_id")
         .unionByName(med_df.select(F.col("medoid").alias("vec_id")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     q_bound = F.col("vec_id") < _Q197_QBOUND
-    entry0_lazy = (
+    entry0 = (
         probes_all.filter(F.col("probe_rank") == 0)
         .join(emb.filter(is_new & q_bound).select("vec_id"), on="vec_id",
               how="semi")
@@ -8287,26 +8278,7 @@ def q265_hnsw_level_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("query_id"),
                 F.col("medoid").alias("node"))
         .distinct()
-    )
-    (
-        [(new_knn0, _t0), (new_knn1, _t1)],
-        (knn0_h, knn1_h, l1_all_ids, entry0),
-    ) = streaming_graph_insert_many(
-        spark,
-        [
-            (split0, hist_members, cents, _Q232_M, None),
-            (split1, hist_members_l1, cents, _Q232_M, None),
-        ],
-        sidework=[
-            cell_knn_edges(hist, cents, m=_Q232_M),
-            cell_knn_edges(
-                emb.join(l1_hist_ids, on="vec_id", how="semi"),
-                cents,
-                m=_Q232_M,
-            ),
-            l1_all_ids_lazy,
-            entry0_lazy,
-        ],
+        .localCheckpoint(eager=True)
     )
 
     def build_edges(knn_parts, member_ids=None):
@@ -8322,24 +8294,18 @@ def q265_hnsw_level_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         for part in knn_parts[1:]:
             directed = directed.unionByName(part)
         directed = directed.unionByName(bridges)
-        return directed.unionByName(
-            directed.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
+        return (
+            directed.unionByName(
+                directed.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
             )
-        ).distinct()
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
 
-    from wetsa_cams_solrad_timeseries_spark.plans._spec import (
-        checkpoint_parallel,
-    )
-
-    # The two layers' edge tables are independent of one another —
-    # concurrent checkpoint jobs (guide §2.6).
-    edges0, edges1 = checkpoint_parallel(
-        [
-            build_edges([knn0_h, new_knn0]),
-            build_edges([knn1_h, new_knn1], member_ids=l1_all_ids),
-        ]
-    )
+    edges0 = build_edges([knn0_h, new_knn0])
+    edges1 = build_edges([knn1_h, new_knn1], member_ids=l1_all_ids)
 
     v = to_double_array(F.col("embedding"))
     va = emb.select("vec_id", v.alias("__v"))
@@ -8665,23 +8631,8 @@ def q266_sampled_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2sq_cols,
     )
 
-    from wetsa_cams_solrad_timeseries_spark.plans._spec import (
-        checkpoint_async,
-        checkpoint_parallel,
-    )
-
     emb = table(spark, sf_dir, "embeddings")
     graph = _q266_graph(spark, sf_dir)
-    # The exact truth and the vector frame depend only on the corpus —
-    # background-thread checkpoints overlapping the sample/candidate
-    # builds (guide §2.6).
-    v = to_double_array(F.col("embedding"))
-    va_fut = checkpoint_async(emb.select("vec_id", v.alias("__v")))
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue_fut = checkpoint_async(
-        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-    )
     samp = _sampled_neighbors(graph, _Q266_S).localCheckpoint(eager=True)
     # The EXACT variant's candidate set is the same byte-light/compute-
     # dense frame as _nn_descent_round's — AQE's byte-based coalescing
@@ -8690,21 +8641,26 @@ def q266_sampled_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same fixed-N keyed repartition applies; the SAMPLED variant's set
     # is deliberately small (that is the point of the sampling) and
     # keeps the bare distinct (the r14 A-B measured the repartition
-    # flat-to-negative on the capped/sampled sets). The two variants'
-    # candidate sets are independent — concurrent checkpoint jobs.
+    # flat-to-negative on the capped/sampled sets).
     n = spark.sparkContext.defaultParallelism
-    cand_exact, cand_sampled = checkpoint_parallel(
-        [
-            graph.unionByName(_two_hop(graph))
-            .repartition(n, "src", "dst")
-            .dropDuplicates(),
-            graph.unionByName(_local_join(samp)).distinct(),
-        ]
-    )
-    cands = {"exact": cand_exact, "sampled": cand_sampled}
+    cands = {
+        "exact": graph.unionByName(_two_hop(graph))
+        .repartition(n, "src", "dst")
+        .dropDuplicates()
+        .localCheckpoint(eager=True),
+        "sampled": graph.unionByName(_local_join(samp))
+        .distinct()
+        .localCheckpoint(eager=True),
+    }
 
-    va = va_fut.result()
-    strue = strue_fut.result()  # one hits-join per variant + count
+    v = to_double_array(F.col("embedding"))
+    va = emb.select("vec_id", v.alias("__v")).localCheckpoint(eager=True)
+    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
+    strue = (
+        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
+        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
+        .localCheckpoint(eager=True)  # one hits-join per variant + count
+    )
     nt = strue.agg(F.count(F.lit(1)).alias("nt"))
 
     from pyspark.sql import Window
@@ -8993,19 +8949,6 @@ def q272_capped_descent_ladder(
         .localCheckpoint(eager=True)  # re-added to every round's graph
     )
 
-    # The exact truth is independent of every round — materialize it on
-    # a background thread while the main thread walks the inherently
-    # sequential round loop (guide §2.6 overlap).
-    from wetsa_cams_solrad_timeseries_spark.plans._spec import (
-        checkpoint_async,
-    )
-
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue_fut = checkpoint_async(
-        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-    )
-
     lists = {0: knn}
     graph = _sym_edges(knn.unionByName(bridges)).localCheckpoint(eager=True)
     for r in range(1, _Q272_ROUNDS + 1):
@@ -9018,7 +8961,12 @@ def q272_capped_descent_ladder(
                 eager=True
             )
 
-    strue = strue_fut.result()
+    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
+    strue = (
+        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
+        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
+        .localCheckpoint(eager=True)
+    )
     nt = strue.agg(F.count(F.lit(1)).alias("nt"))
     frames = []
     for r, lst in sorted(lists.items()):
@@ -9198,30 +9146,18 @@ def q273_hnsw_log_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_knn_edges,
     )
 
-    from wetsa_cams_solrad_timeseries_spark.plans._spec import (
-        checkpoint_parallel,
-    )
-
     emb = table(spark, sf_dir, "embeddings")
-    # The layers' builds are independent of one another: materialize the
-    # memberships concurrently, then the edge tables concurrently (each
-    # edge build reads its OWN layer's already-checkpointed membership,
-    # so the two-pool staging preserves the dependency) — guide §2.6.
-    levels = list(range(1, _Q273_LEVELS + 1))
-    lid_lazy = []
-    for lvl in levels:
+    layer_edges: dict[int, DataFrame] = {}
+    layer_n: dict[int, DataFrame] = {}
+    for lvl in range(1, _Q273_LEVELS + 1):
         mod = _Q258_L1_MOD ** lvl
-        lid_lazy.append(
+        l_ids = (
             emb.filter(F.col("vec_id") % mod == _Q273_RES[lvl])
             .select("vec_id")
             .unionByName(med.select(F.col("medoid").alias("vec_id")))
-            .distinct()  # membership + the audit count
+            .distinct()
+            .localCheckpoint(eager=True)  # membership + the audit count
         )
-    lids = dict(zip(levels, checkpoint_parallel(lid_lazy)))
-    edges_lazy = []
-    layer_n: dict[int, DataFrame] = {}
-    for lvl in levels:
-        l_ids = lids[lvl]
         l_emb = emb.join(l_ids, on="vec_id", how="semi")
         knn_l = cell_knn_edges(l_emb, cents, m=_Q232_M)
         bridges_l = (
@@ -9232,17 +9168,18 @@ def q273_hnsw_log_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
         )
         directed = knn_l.unionByName(bridges_l)
-        edges_lazy.append(
+        layer_edges[lvl] = (
             directed.unionByName(
                 directed.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
                 )
-            ).distinct()
+            )
+            .distinct()
+            .localCheckpoint(eager=True)
         )
         layer_n[lvl] = l_ids.agg(
             F.count(F.lit(1)).cast("long").alias(f"n_l{lvl}")
         )
-    layer_edges = dict(zip(levels, checkpoint_parallel(edges_lazy)))
 
     # Top-down descent: greedy walk per layer, best node seeds the next.
     entry = entry0
@@ -9510,18 +9447,6 @@ def q274_capped_descent_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    # Exact truth on a background thread, overlapping the sequential
-    # round loop (guide §2.6 — same shape as q272).
-    from wetsa_cams_solrad_timeseries_spark.plans._spec import (
-        checkpoint_async,
-    )
-
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue_fut = checkpoint_async(
-        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-    )
-
     graph = _sym_edges(knn.unionByName(bridges)).localCheckpoint(eager=True)
     lists = {0: knn}
     cands = {0: graph}  # round 0's standing cost: the base graph itself
@@ -9538,7 +9463,12 @@ def q274_capped_descent_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
                 eager=True
             )
 
-    strue = strue_fut.result()
+    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
+    strue = (
+        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
+        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
+        .localCheckpoint(eager=True)
+    )
     nt = strue.agg(F.count(F.lit(1)).alias("nt"))
     frames = []
     for r in sorted(lists):
@@ -9720,22 +9650,21 @@ def q278_streaming_capped_descent(
         )
         .select("vec_id", "cell", "__v")
     )
-    # The history kNN build and the exact truth are independent of the
-    # drained state — sidework: materialized concurrently with the
-    # stream drain (guide §2.6) instead of serially after it.
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue_lazy = brute_force_topk_l2(
-        emb, emb.filter(sample), k=_Q232_M, dim=_DIM
-    ).select(
-        F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
+    new_knn, _no_tombs = streaming_graph_insert(
+        spark, split_dir, hist_members, cents, m=_Q232_M
     )
-    new_knn, _no_tombs, (base_knn, strue) = streaming_graph_insert(
-        spark,
-        split_dir,
-        hist_members,
-        cents,
-        m=_Q232_M,
-        sidework=[cell_knn_edges(hist, cents, m=_Q232_M), strue_lazy],
+    # The history kNN build and the exact truth are independent of the
+    # drained state.
+    base_knn = cell_knn_edges(hist, cents, m=_Q232_M).localCheckpoint(
+        eager=True
+    )
+    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
+    strue = (
+        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
+        .select(
+            F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
+        )
+        .localCheckpoint(eager=True)
     )
     lists0 = base_knn.unionByName(new_knn).localCheckpoint(eager=True)
     probes_all = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)

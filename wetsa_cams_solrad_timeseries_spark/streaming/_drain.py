@@ -122,6 +122,11 @@ def file_replay_reader(
 
 @contextmanager
 def drain_partitions(spark: SparkSession, n: int = DRAIN_PARTITIONS):
+    # The conf is session-global, not scoped to the caller: every job
+    # planned while it is lowered gets n shuffle partitions. That is
+    # safe only because no other thread submits Spark work while a
+    # drain holds the conf (the streaming queries started inside the
+    # block are the drain itself). Do not overlap other jobs with it.
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))

@@ -106,7 +106,6 @@ def streaming_graph_insert(
     centroids,
     m: int,
     op_col: str | None = None,
-    sidework: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Drain the new-shard multi-file replay through the displacement-
     merge insert loop and return ``(latest_lists, tombstones)`` where
@@ -122,19 +121,8 @@ def streaming_graph_insert(
     rewire (hnswlib: deleted nodes stay routable, inserts may still
     link to them — q255's semantics), so the edge state is untouched
     by deletes and the drained (lists, tombstones) pair is independent
-    of how the two event kinds interleave.
-
-    ``sidework`` (optional): INDEPENDENT lazy frames the caller needs
-    eagerly checkpointed anyway — materialized concurrently with the
-    drain (see :func:`streaming_graph_insert_many`); the checkpointed
-    frames are returned appended to the result tuple."""
-    if sidework:
-        [res], sides = streaming_graph_insert_many(
-            spark,
-            [(split_dir, hist_members, centroids, m, op_col)],
-            sidework=sidework,
-        )
-        return (*res, sides)
+    of how the two event kinds interleave. Without ``op_col`` the
+    tombstone frame is empty."""
     [res] = streaming_graph_insert_many(
         spark, [(split_dir, hist_members, centroids, m, op_col)]
     )
@@ -315,7 +303,7 @@ def _graph_insert_drain(
 
 
 def streaming_graph_insert_many(
-    spark: SparkSession, specs, sidework: list[DataFrame] | None = None
+    spark: SparkSession, specs
 ) -> list[tuple[DataFrame, DataFrame]]:
     """Drain several INDEPENDENT replays as concurrent streaming queries
     (guide §2.6 "overlap independent jobs"): each replay's micro-batches
@@ -326,62 +314,33 @@ def streaming_graph_insert_many(
 
     ``specs``: iterable of (split_dir, hist_members, centroids, m,
     op_col) tuples; returns one (latest_lists, tombstones) per spec, in
-    order.
-
-    ``sidework``: optional list of lazy DataFrames that do NOT depend on
-    any drained state (the callers' batch-side build artifacts — base
-    kNN lists, entry sets, exact truths). They are eagerly
-    localCheckpointed from a small thread pool WHILE the drains run, so
-    the drain's fixed micro-batch costs and the batch builds overlap
-    instead of summing (every drained query leaves most cores idle —
-    its per-batch jobs are few-partition-sized). Deterministic builds:
-    the checkpointed frames are identical to sequentially-built ones.
-    Returns ``(results, sides)`` when sidework is given."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    order. The returned frames are lazy reads of the committed
+    generations; callers checkpoint whatever they reuse."""
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
         drain_checkpoint_dir,
         drain_partitions,
         size_partitions,
     )
 
-    pool = (
-        ThreadPoolExecutor(max_workers=min(4, len(sidework)))
-        if sidework
-        else None
-    )
+    drains = [_graph_insert_drain(spark, *spec) for spec in specs]
+    n_rows = max(d[0].count() for d in drains)
+    ckpts = [drain_checkpoint_dir() for _ in drains]
     try:
-        side_futs = [
-            pool.submit(lambda d=d: d.localCheckpoint(eager=True))
-            for d in (sidework or ())
-        ]
-        drains = [_graph_insert_drain(spark, *spec) for spec in specs]
-        n_rows = max(d[0].count() for d in drains)
-        ckpts = [drain_checkpoint_dir() for _ in drains]
-        try:
-            with drain_partitions(spark, size_partitions(spark, n_rows)):
-                queries = []
-                try:
-                    for (_, reader, apply_batch, _fin), ckpt in zip(
-                        drains, ckpts
-                    ):
-                        queries.append(
-                            reader.writeStream.foreachBatch(apply_batch)
-                            .option("checkpointLocation", ckpt)
-                            .start()
-                        )
-                    for q in queries:
-                        q.processAllAvailable()
-                finally:
-                    for q in queries:
-                        q.stop()
-            results = [fin() for (_, _, _, fin) in drains]
-            if pool is None:
-                return results
-            return results, [f.result() for f in side_futs]
-        finally:
-            for ckpt in ckpts:
-                shutil.rmtree(ckpt, ignore_errors=True)
+        with drain_partitions(spark, size_partitions(spark, n_rows)):
+            queries = []
+            try:
+                for (_, reader, apply_batch, _fin), ckpt in zip(drains, ckpts):
+                    queries.append(
+                        reader.writeStream.foreachBatch(apply_batch)
+                        .option("checkpointLocation", ckpt)
+                        .start()
+                    )
+                for q in queries:
+                    q.processAllAvailable()
+            finally:
+                for q in queries:
+                    q.stop()
+        return [fin() for (_, _, _, fin) in drains]
     finally:
-        if pool is not None:
-            pool.shutdown(wait=True)
+        for ckpt in ckpts:
+            shutil.rmtree(ckpt, ignore_errors=True)
