@@ -29,13 +29,14 @@ EXPERT_COLS = [
 ]
 
 
-def make_raw_expert_csv(path, minutes=720, gap=(100, 140), seed=0):
+def make_raw_expert_csv(path, minutes=720, gap=(100, 140), seed=0,
+                        start="2024-01-01 00:00:00"):
     """CAMS csv_expert fixture: '#' metadata, '#' header (last), ';' data,
     a missing-minutes gap, and some empty cells."""
     rng = np.random.RandomState(seed)
     lines = ["# CAMS solar radiation data", "# Metadata: fixture"]
     lines.append("# " + ";".join(EXPERT_COLS))
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
+    t0 = pd.Timestamp(start)
     for m in range(minutes):
         if gap[0] <= m < gap[1]:
             continue  # empty buckets for the grid divergence
@@ -77,6 +78,12 @@ def test_expert_csv_reader(spark, tmp_path):
     got = sdf.agg(F.sum("GHI"), F.count("GHI")).first()
     assert got[1] == pdf["GHI"].notna().sum()
     assert got[0] == pytest.approx(pdf["GHI"].sum(), rel=1e-9)
+    # A multi-file scan parses every file with one declared schema, so a
+    # file whose header differs is refused rather than misaligned.
+    other = tmp_path / "raw_1min_TestSt_clear.csv"
+    other.write_text("# Observation period;GHI\n")
+    with pytest.raises(ValueError, match="header differs"):
+        read_expert_csv(spark, [str(p), str(other)])
 
 
 def test_ingest_aggregate_matches_pandas_resample(spark, tmp_path):
@@ -409,6 +416,130 @@ def test_run_ingest_end_to_end(spark, tmp_path):
     ]
     pdf = pd.read_csv(out / "processed_10min_Makassar_observed_cloud.csv")
     assert pdf.columns[0] == "time" and len(pdf) == 6  # 60 min → 6 buckets
+
+
+def _ingest_files(spark, tmp_path, raw_by_task, sky_types=("observed_cloud",)):
+    """run_ingest over pre-written raw files: ``raw_by_task`` maps
+    "station/sky_type" to the path the fetch returns. Returns the task
+    rows (pandas) and the processed-CSV directory."""
+    from wetsa_cams_solrad_timeseries_spark.pipelines.ingest import run_ingest
+
+    stations = list(dict.fromkeys(k.split("/")[0] for k in raw_by_task))
+    loc = tmp_path / "locations.csv"
+    loc.write_text(
+        "no,station,latitude,longitude,elevation,timezone\n"
+        + "".join(f"{i},{s},-1.0,100.0,10,UTC+7\n" for i, s in enumerate(stations))
+    )
+    out = tmp_path / "processed"
+    out.mkdir()
+    paths = {k: str(p) for k, p in raw_by_task.items()}
+
+    def fetch(task: dict) -> str:  # closes over plain strings only
+        return paths[f"{task['station']}/{task['sky_type']}"]
+
+    res = run_ingest(spark, str(loc), fetch, str(out), sky_types=sky_types)
+    return res.toPandas().set_index("station"), out
+
+
+def _assert_matches_resample(csv_path, raw_path):
+    got = pd.read_csv(csv_path, parse_dates=["time"])
+    exp = (
+        read_expert_pandas(raw_path)
+        .set_index("time")
+        .select_dtypes(include="number")
+        .resample("10min")
+        .mean()
+    )
+    assert list(got.columns) == ["time", *exp.columns]
+    assert list(got["time"]) == list(exp.index)  # own grid, empty buckets kept
+    for c in exp.columns:
+        np.testing.assert_allclose(
+            got[c].to_numpy(), exp[c].to_numpy(), rtol=1e-9, equal_nan=True
+        )
+
+
+def test_run_ingest_batched_edge_cases(spark, tmp_path):
+    """All files go through one aggregation plan: each good file keeps its
+    own time range, gaps and grid (Spaced overlaps Early's gap, so a
+    borrowed bucket would show as a value where pandas has NaN), a
+    header-less file fails only its own row, and a file with no data rows
+    still gets a header-only CSV with the full column list."""
+    spaced_dir = tmp_path / "raw dir with space"
+    spaced_dir.mkdir()
+    good = {
+        "Early": make_raw_expert_csv(
+            tmp_path / "raw_early.csv", minutes=95, gap=(20, 47), seed=1
+        ),
+        "Late": make_raw_expert_csv(
+            tmp_path / "raw_late.csv", minutes=130, gap=(60, 61), seed=2,
+            start="2024-03-05 07:13:00",
+        ),
+        "Spaced": make_raw_expert_csv(
+            spaced_dir / "raw_spaced.csv", minutes=70, gap=(0, 0), seed=3,
+            start="2024-01-01 00:30:00",
+        ),
+    }
+    headerless = tmp_path / "raw_headerless.csv"
+    headerless.write_text(
+        "2024-01-01T00:00:00.0/2024-01-01T00:01:00.0;1.0;2.0\n"
+        "2024-01-01T00:01:00.0/2024-01-01T00:02:00.0;1.5;2.5\n"
+    )
+    empty = make_raw_expert_csv(tmp_path / "raw_empty.csv", minutes=0)
+    files = {**good, "NoHeader": headerless, "Empty": empty}
+
+    res, out = _ingest_files(
+        spark, tmp_path, {f"{s}/observed_cloud": p for s, p in files.items()}
+    )
+    assert list(res.index[~res["ok"]]) == ["NoHeader"]
+    assert res.loc["NoHeader", "error"].startswith("aggregate: ")
+    assert not (out / "processed_10min_NoHeader_observed_cloud.csv").exists()
+    for station, raw in good.items():
+        _assert_matches_resample(
+            out / f"processed_10min_{station}_observed_cloud.csv", raw
+        )
+    header_only = pd.read_csv(out / "processed_10min_Empty_observed_cloud.csv")
+    assert list(header_only.columns) == ["time", *EXPERT_COLS[1:]]
+    assert len(header_only) == 0
+
+
+def test_run_ingest_splits_a_failed_shared_scan(spark, tmp_path):
+    """A file whose header peeks fine but whose scan raises (plain text
+    under a gzip name) fails the shared scan; the files are then scanned
+    one by one, so only that file's row is failed."""
+    files = {
+        "A": make_raw_expert_csv(tmp_path / "raw_a.csv", minutes=60, seed=4),
+        "Bad": make_raw_expert_csv(tmp_path / "raw_bad.csv.gz", minutes=60, seed=5),
+        "B": make_raw_expert_csv(tmp_path / "raw_b.csv", minutes=80, seed=6),
+    }
+    res, out = _ingest_files(
+        spark, tmp_path, {f"{s}/observed_cloud": p for s, p in files.items()}
+    )
+    assert list(res.index[~res["ok"]]) == ["Bad"]
+    assert res.loc["Bad", "error"].startswith("aggregate: ")
+    for station in ("A", "B"):
+        _assert_matches_resample(
+            out / f"processed_10min_{station}_observed_cloud.csv", files[station]
+        )
+
+
+def test_run_ingest_jobs_do_not_grow_with_files(spark, tmp_path, count_jobs):
+    """The aggregation is one plan over all files: 6 files submit as many
+    Spark jobs as 2 (a per-file job chain would add jobs per file)."""
+    def jobs_for(n_stations, sky_types):
+        root = tmp_path / f"n{n_stations * len(sky_types)}"
+        root.mkdir()
+        raw = {
+            f"S{i}/{sky}": make_raw_expert_csv(
+                root / f"raw_{i}_{sky}.csv", minutes=60 + 10 * i, seed=i
+            )
+            for i in range(n_stations)
+            for sky in sky_types
+        }
+        jobs = count_jobs(lambda: _ingest_files(spark, root, raw, sky_types))
+        assert len(list((root / "processed").glob("*.csv"))) == len(raw)
+        return jobs
+
+    assert jobs_for(2, ("observed_cloud",)) == jobs_for(3, ("clear", "observed_cloud"))
 
 
 def test_dense_partitioned_export_roundtrip(spark, tmp_path):

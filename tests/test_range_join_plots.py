@@ -111,3 +111,40 @@ def test_plot_inputs_and_gated_render(spark, tmp_path):
         scan = zlib.decompress(raw[idat_start : idat_start + idat_len])
         assert len(scan) == h * (1 + 3 * w)
         assert any(b not in (0, 255) for b in scan)  # colored marks present
+
+
+def test_plot_inputs_is_one_collect(spark, count_jobs):
+    """plot_inputs collects the merged frame once, whatever the number of
+    panels: its jobs equal those of one collect of the merged frame, with
+    three components or with one."""
+    rng = np.random.RandomState(17)
+    t = pd.date_range("2024-01-01", periods=40, freq="10min")
+    ground = pd.DataFrame(
+        {
+            "Datetime (UTC)": t.astype(str),
+            "GHI": rng.uniform(0, 900, 40),
+            "DHI": rng.uniform(1, 400, 40),
+            "DNI": rng.uniform(0, 800, 40),
+        }
+    )
+    cams = pd.DataFrame(
+        {
+            "time": t.astype(str),
+            "GHI": rng.uniform(0, 15, 40),
+            "DHI": rng.uniform(0, 7, 40),
+            "BNI": rng.uniform(0, 13, 40),
+            "Cloud coverage": rng.uniform(0, 100, 40),
+        }
+    )
+    merged, stats = run_compare(
+        spark.createDataFrame(ground), spark.createDataFrame(cams)
+    )
+    one_collect = count_jobs(lambda: merged.toPandas())
+    assert one_collect >= 1
+    ghi_only = merged.drop("DHI_ground", "DHI_cams", "DNI_ground", "DNI_cams")
+    for frame, n_components in ((merged, 3), (ghi_only, 1)):
+        inputs = {}
+        jobs = count_jobs(lambda: inputs.update(plot_inputs(frame, stats)))
+        assert len(inputs["components"]) == n_components
+        assert "bias_vs_cloud" in inputs and "ratio_series" in inputs
+        assert jobs == one_collect

@@ -44,25 +44,43 @@ def test_query_runs_and_schema_stable(spark, sf_dir, name):
     spec = QUERIES[name]
     partitions = spark.conf.get("spark.sql.shuffle.partitions")
     views = _temp_views(spark)
-    df = spec.fn(spark, sf_dir)
-    cols = df.columns
-    assert len(cols) == len(set(cols)), "duplicate column names"
-    # The driver's canonicalizer pandas-sorts result columns and cannot
-    # hash list/map/struct cells (q126 was red in round 5 for exactly
-    # this) — declared outputs must be flat scalars; flatten with
-    # posexplode per q93's convention.
-    nested = [
-        f.name
-        for f in df.schema.fields
-        if f.dataType.typeName() in ("array", "map", "struct")
-    ]
-    assert not nested, f"nested output column(s) {nested} break the driver hash"
-    df.limit(5).collect()  # executes the plan
-    # Lifecycle: nothing the query started may outlive it.
-    assert not spark.streams.active, "streaming query left running"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
-    assert _temp_views(spark) == views, "temp views leaked"
-    assert not _active_jobs(spark), "Spark job left running"
+    failure = None
+    try:
+        df = spec.fn(spark, sf_dir)
+        cols = df.columns
+        assert len(cols) == len(set(cols)), "duplicate column names"
+        # The driver's canonicalizer pandas-sorts result columns and cannot
+        # hash list/map/struct cells (q126 was red in round 5 for exactly
+        # this) — declared outputs must be flat scalars; flatten with
+        # posexplode per q93's convention.
+        nested = [
+            f.name
+            for f in df.schema.fields
+            if f.dataType.typeName() in ("array", "map", "struct")
+        ]
+        assert not nested, f"nested output column(s) {nested} break the driver hash"
+        df.limit(5).collect()  # executes the plan
+    except BaseException as ex:
+        failure = ex
+        raise
+    finally:
+        # Lifecycle: nothing the query started may outlive it, on the
+        # error path too. A query that raised keeps its own exception as
+        # the reported failure, with any leak attached as a note.
+        leaks = []
+        if spark.streams.active:
+            leaks.append("streaming query left running")
+        if spark.conf.get("spark.sql.shuffle.partitions") != partitions:
+            leaks.append("spark.sql.shuffle.partitions not restored")
+        if _temp_views(spark) != views:
+            leaks.append("temp views leaked")
+        if _active_jobs(spark):
+            leaks.append("Spark job left running")
+        if failure is not None:
+            for msg in leaks:
+                failure.add_note(f"lifecycle: {msg}")
+        else:
+            assert not leaks, leaks
 
 
 def test_pins_name_declared_queries():

@@ -8,9 +8,11 @@ Spark-first restructuring:
   (station × sky_type) task table, with per-task error capture (O2) — a
   cluster downloads in parallel, a failed station yields an error row
   instead of killing the job;
-- the aggregation (A1) is the shared ``tumbling_mean`` operator with the
-  dense-grid reindex so outputs match pandas ``resample`` bucket-for-
-  bucket, including empty buckets;
+- the aggregation (A1) is ONE Spark plan over every fetched file: the
+  shared ``tumbling_mean`` operator keyed by each row's source file, with
+  a per-file dense-grid reindex so outputs match pandas ``resample``
+  bucket-for-bucket, including empty buckets. It is collected once and
+  split per file on the driver — no thread pool, no per-file job chain;
 - the CSV sink keeps one file per (station, sky_type) for reference
   compatibility; the scale-native sink is partitioned Parquet
   (``write_parquet_partitioned``), replacing the reference's
@@ -19,7 +21,9 @@ Spark-first restructuring:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+import os
+from collections.abc import Callable, Iterator, Sequence
+from urllib.parse import unquote, urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +36,10 @@ from wetsa_cams_solrad_timeseries_spark.operators.window_agg import (
     tumbling_mean,
     with_dense_grid,
 )
-from wetsa_cams_solrad_timeseries_spark.sources.expert_csv import read_expert_csv
+from wetsa_cams_solrad_timeseries_spark.sources.expert_csv import (
+    peek_header,
+    read_expert_csv,
+)
 
 SKY_TYPES = ("clear", "observed_cloud")
 
@@ -84,8 +91,6 @@ def make_cds_fetch_fn(
     reference (``raw_1min_{station}_{sky_type}.csv``) and is idempotent:
     a retried task overwrites its own file.
     """
-    import os
-
     from wetsa_cams_solrad_timeseries_spark.functions.scalar import (
         sanitize_filename_str,
     )
@@ -170,37 +175,77 @@ def distributed_fetch(
     return tasks.mapInPandas(run, schema=FETCH_RESULT_SCHEMA)
 
 
-def aggregate_to_10min(
-    spark: SparkSession,
-    raw_path: str,
-    dense_grid: bool = True,
-) -> DataFrame:
-    """A1 — the reference's core transform (get-cams-solrad-ts.py:47-101):
-    expert-CSV scan → bucket-start timestamp → numeric projection →
-    10-minute NaN-skipping means, on pandas' regular grid.
+# Column of ``aggregate_files`` naming each row's raw file, as the file
+# URI Spark reports (``input_file_name``); ``_local_path`` maps it back.
+SOURCE_COL = "source_file"
 
-    Returns the aggregated DataFrame (time + per-column means), ordered by
-    time like the reference CSV output.
+
+def _local_path(path_or_uri: str) -> str:
+    """The absolute local path behind a path or a percent-encoded
+    ``file:`` URI, so the path a ``fetch_fn`` returned and the URI Spark
+    reports for the same file compare equal."""
+    parsed = urlparse(path_or_uri)
+    if parsed.scheme == "file":
+        path_or_uri = unquote(parsed.path)
+    return os.path.abspath(path_or_uri)
+
+
+def aggregate_files(spark: SparkSession, raw_paths: Sequence[str]) -> DataFrame:
+    """A1 — the reference's core transform (get-cams-solrad-ts.py:47-101)
+    for every file in ``raw_paths`` in ONE plan: a multi-path expert-CSV
+    scan whose rows are tagged with their source file → bucket-start
+    timestamp → numeric projection → 10-minute NaN-skipping means keyed
+    by (source file, bucket), reindexed onto each file's own pandas-style
+    regular grid from its first to its last bucket, so no bucket is
+    borrowed from another file.
+
+    The files must share one header (``read_expert_csv``). Returns
+    ``SOURCE_COL`` + time + per-column means, unordered; a file with no
+    data rows has no rows here.
     """
-    raw = read_expert_csv(spark, raw_path)
+    raw = read_expert_csv(spark, raw_paths)
     num_cols = [
         f.name for f in raw.schema.fields if isinstance(f.dataType, T.DoubleType)
     ]
     with_ts = raw.select(
-        interval_start("Observation period").alias("time"), *num_cols
+        F.input_file_name().alias(SOURCE_COL),
+        interval_start("Observation period").alias("time"),
+        *num_cols,
     ).filter(F.col("time").isNotNull())
     agg = tumbling_mean(with_ts, ts_col="time", value_cols=num_cols,
-                        width="10 minutes", bucket_col="time")
-    if dense_grid:
-        grid = time_grid(
-            with_ts,
-            lo=F.timestamp_seconds(F.floor(F.unix_timestamp(F.min("time")) / 600) * 600),
-            hi=F.timestamp_seconds(F.floor(F.unix_timestamp(F.max("time")) / 600) * 600),
-            width="10 minutes",
-            bucket_col="time",
-        )
-        agg = with_dense_grid(agg, grid, bucket_col="time")
-    return agg.orderBy("time")
+                        width="10 minutes", group_cols=[SOURCE_COL],
+                        bucket_col="time")
+    # A file's first and last bucket are the min/max bucket of its own
+    # aggregate, so the grid needs no bucket arithmetic.
+    grid = time_grid(agg, lo=F.min("time"), hi=F.max("time"),
+                     width="10 minutes", bucket_col="time",
+                     group_cols=[SOURCE_COL])
+    return with_dense_grid(agg, grid, bucket_col="time", group_cols=[SOURCE_COL])
+
+
+def aggregate_to_10min(spark: SparkSession, raw_path: str) -> DataFrame:
+    """``aggregate_files`` for one file: time + per-column means, ordered
+    by time like the reference CSV output."""
+    return aggregate_files(spark, [raw_path]).drop(SOURCE_COL).orderBy("time")
+
+
+def _write_processed(
+    spark: SparkSession, raw_paths: list[str], targets: dict[str, list[str]]
+) -> None:
+    """Aggregate ``raw_paths`` (one shared header) with one collect and
+    write each file's buckets, in time order, to its ``targets`` CSVs. A
+    file with no data rows gets a header-only CSV with the full column
+    list."""
+    pdf = aggregate_files(spark, raw_paths).toPandas()
+    parts = {
+        _local_path(src): part.drop(columns=SOURCE_COL).sort_values("time")
+        for src, part in pdf.groupby(SOURCE_COL, sort=False)
+    }
+    empty = pdf.drop(columns=SOURCE_COL).iloc[:0]
+    for path in raw_paths:
+        part = parts.get(_local_path(path), empty)
+        for out in targets[path]:
+            part.to_csv(out, index=False)
 
 
 def run_ingest(
@@ -213,21 +258,19 @@ def run_ingest(
     """EP1 end-to-end (the reference's ``main()`` —
     get-cams-solrad-ts.py:104-176): read + validate the locations
     dimension, fan the (station × sky_type) fetches out across executors,
-    aggregate each fetched raw file to 10-minute means, and write one
-    reference-shaped processed CSV per task. Returns the task-result
-    table (ok/error per task) for orchestration.
+    aggregate every fetched raw file to 10-minute means in one Spark plan
+    (``aggregate_files``, collected once), and write one reference-shaped
+    processed CSV per task. Returns the task-result table (ok/error per
+    task) for orchestration.
 
     O2 parity: the reference's ``try/except: continue`` wraps the WHOLE
     task (download, aggregation, archive — get-cams-solrad-ts.py:140-172),
-    so aggregation/write failures here are captured per task too — a
-    corrupt raw file marks its own row failed and the rest proceed. The
-    per-task aggregation jobs are independent and submitted from a thread
-    pool (Spark schedules concurrent jobs), not the reference's serial
-    70-iteration loop.
+    so aggregation/write failures here are captured per task too. Each
+    file's header is peeked on the driver (a file without one fails only
+    its own row), files that share a header are scanned together, and a
+    shared scan that raises is split into one scan per file, so a corrupt
+    raw file marks its own row failed and the rest proceed.
     """
-    import os
-    from concurrent.futures import ThreadPoolExecutor
-
     from wetsa_cams_solrad_timeseries_spark.functions.scalar import (
         sanitize_filename_str,
     )
@@ -239,26 +282,40 @@ def run_ingest(
     locations = read_locations(spark, locations_path)
     require_columns(locations, ["latitude", "longitude", "elevation", "station"])
     results = distributed_fetch(fetch_tasks(locations, sky_types), fetch_fn)
-    collected = [row.asDict() for row in results.collect()]
+    rows = [row.asDict() for row in results.collect()]
 
-    def aggregate_task(row: dict) -> dict:
-        if not row["ok"]:
-            return row
-        try:
+    targets: dict[str, list[str]] = {}  # raw file -> its tasks' CSVs
+    for row in rows:
+        if row["ok"]:
             safe = sanitize_filename_str(row["station"])
-            agg = aggregate_to_10min(spark, row["output_path"])
-            agg.toPandas().to_csv(
-                os.path.join(
-                    out_dir, f"processed_10min_{safe}_{row['sky_type']}.csv"
-                ),
-                index=False,
+            targets.setdefault(row["output_path"], []).append(
+                os.path.join(out_dir, f"processed_10min_{safe}_{row['sky_type']}.csv")
             )
-        except Exception as ex:  # noqa: BLE001 — O2 per-task isolation
-            row = {**row, "ok": False, "error": f"aggregate: {ex}"}
-        return row
+    errors: dict[str, str] = {}
+    by_header: dict[tuple[str, ...], list[str]] = {}
+    for path in targets:
+        try:
+            by_header.setdefault(tuple(peek_header(path)), []).append(path)
+        except (OSError, ValueError) as ex:  # O2: missing file or no header
+            errors[path] = str(ex)
+    for paths in by_header.values():
+        try:
+            _write_processed(spark, paths, targets)
+        except Exception:  # noqa: BLE001 — O2 per-task isolation
+            # One bad file fails the whole shared scan: rescan each file
+            # alone, so only the bad one's task is marked failed.
+            for path in paths:
+                try:
+                    _write_processed(spark, [path], targets)
+                except Exception as ex:  # noqa: BLE001
+                    errors[path] = str(ex)
 
-    with ThreadPoolExecutor(max_workers=min(8, max(1, len(collected)))) as pool:
-        final_rows = list(pool.map(aggregate_task, collected))
+    final_rows = [
+        {**row, "ok": False, "error": f"aggregate: {errors[row['output_path']]}"}
+        if row["ok"] and row["output_path"] in errors
+        else row
+        for row in rows
+    ]
     return spark.createDataFrame(final_rows, schema=FETCH_RESULT_SCHEMA)
 
 

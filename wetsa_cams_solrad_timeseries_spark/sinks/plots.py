@@ -37,31 +37,38 @@ def plot_inputs(
     merged: DataFrame, stats: list[dict], station: str | None = None
 ) -> dict[str, Any]:
     """Everything the 8-panel figure needs, computed in Spark and
-    collected small:
+    collected small — in ONE collect of every column the panels use,
+    sliced per panel in pandas (a collect per panel would re-execute the
+    whole merged join plan once per panel):
 
     - per-component scatter frames (ground vs cams) + axis max (A3)
     - fitted line endpoints per component (B3)
     - bias-vs-cloud scatter (B4) when cloud_cover exists
-    - GHI/DHI ratio series (B5)
+    - GHI/DHI ratio series (B5), in timestamp order
     """
     df = merged
     if station is not None and "station" in df.columns:
         df = df.filter(F.col("station") == station)
 
+    comps = [
+        comp for comp in COMPONENTS
+        if f"{comp}_ground" in df.columns and f"{comp}_cams" in df.columns
+    ]
+    bias = "cloud_cover" in df.columns and "GHI_bias" in df.columns
+    ratio = "GHI_DHI_ratio" in df.columns
+    cols = ["timestamp"] if comps or ratio else []
+    cols += [f"{comp}_{side}" for comp in comps for side in ("ground", "cams")]
+    cols += ["cloud_cover", "GHI_bias"] if bias else []
+    cols += ["GHI_DHI_ratio"] if ratio else []
+    pdf = df.select(*cols).toPandas()
+
     out: dict[str, Any] = {"station": station, "components": {}}
-    for comp in COMPONENTS:
+    for comp in comps:
         g, c = f"{comp}_ground", f"{comp}_cams"
-        if g not in df.columns or c not in df.columns:
-            continue
-        pdf = df.select(
-            F.col("timestamp"), F.col(g).alias("ground"), F.col(c).alias("cams")
-        ).toPandas()
-        # axis max (A3) derives from the ALREADY-collected scatter frame —
-        # a separate df.agg() would re-execute the whole merged join plan
-        # once more per component (measured: ~2 Spark jobs per panel).
+        scatter = pdf[["timestamp", g, c]].rename(columns={g: "ground", c: "cams"})
         axis_max = (
-            float(max(pdf["ground"].max(), pdf["cams"].max()))
-            if len(pdf)
+            float(max(scatter["ground"].max(), scatter["cams"].max()))
+            if len(scatter)
             else 0.0
         )
         matches = [
@@ -80,18 +87,20 @@ def plot_inputs(
             )
         stat = matches[0] if matches else None
         out["components"][comp] = {
-            "scatter": pdf,
+            "scatter": scatter,
             "axis_max": axis_max,
             "stats": stat,
             "line": fitted_line(stat["slope"], stat["intercept"], axis_max)
             if stat and stat["slope"] is not None
             else None,
         }
-    if "cloud_cover" in df.columns and "GHI_bias" in df.columns:
-        out["bias_vs_cloud"] = df.select("cloud_cover", "GHI_bias").toPandas()  # B4
-    if "GHI_DHI_ratio" in df.columns:
+    if bias:
+        out["bias_vs_cloud"] = pdf[["cloud_cover", "GHI_bias"]]  # B4
+    if ratio:
         out["ratio_series"] = (
-            df.select("timestamp", "GHI_DHI_ratio").orderBy("timestamp").toPandas()
+            pdf[["timestamp", "GHI_DHI_ratio"]]
+            .sort_values("timestamp", kind="stable")
+            .reset_index(drop=True)
         )  # B5
     return out
 
