@@ -8,16 +8,11 @@ side — membership actually leaves the index bytes, the layout contract
 survives, re-applying deletes is a no-op).
 """
 
-import os
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from wetsa_cams_solrad_timeseries_spark.catalog import table  # noqa: E402
-from wetsa_cams_solrad_timeseries_spark.plans.deletes import (  # noqa: E402
+from wetsa_cams_solrad_timeseries_spark.catalog import table
+from wetsa_cams_solrad_timeseries_spark.plans.deletes import (
     _ensure_lsh_delete_artifacts,
     _is_takedown,
     _probe_and_verify,

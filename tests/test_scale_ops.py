@@ -16,18 +16,14 @@ Python-twin locks.
 """
 
 import math
-import os
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import duckdb
+from pyspark.sql import functions as F
 
-import duckdb  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from wetsa_cams_solrad_timeseries_spark.functions.hashing import (  # noqa: E402
+from wetsa_cams_solrad_timeseries_spark.functions.hashing import (
     hash32_py,
 )
-from wetsa_cams_solrad_timeseries_spark.plans.scale_ops import (  # noqa: E402
+from wetsa_cams_solrad_timeseries_spark.plans.scale_ops import (
     _AUC_POS,
     _BLOOM_K,
     _BLOOM_M,

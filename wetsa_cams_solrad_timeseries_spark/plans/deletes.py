@@ -569,6 +569,8 @@ def q256_graph_delete_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         _Q232_HOPS,
         _Q232_K,
         _Q232_M,
+        _medoid_bridges,
+        _sym_edges,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -660,24 +662,14 @@ def q256_graph_delete_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("src", "dst")
     )
-    new_bridges = (
+    new_bridges = _medoid_bridges(
         probes.filter(
-            (F.col("probe_rank") >= 1)
-            & (F.col("cell").isin(aff_cells) if aff_cells else F.lit(False))
-        )
-        .join(F.broadcast(del_ids), on="vec_id", how="left_anti")
-        .join(F.broadcast(med_df), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
+            F.col("cell").isin(aff_cells) if aff_cells else F.lit(False)
+        ).join(F.broadcast(del_ids), on="vec_id", how="left_anti"),
+        med_df,
     )
     directed = repaired_knn.unionByName(kept_bridges).unionByName(new_bridges)
-    edges_r = (
-        directed.unionByName(
-            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges_r = _sym_edges(directed).localCheckpoint(eager=True)
 
     # Serve: q238's beam over the repaired graph, entry at the repaired
     # hub of each query's nearest cell.
@@ -1566,6 +1558,8 @@ def q264_streaming_graph_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         _Q232_HOPS,
         _Q232_K,
         _Q232_M,
+        _medoid_bridges,
+        _sym_edges,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming.graph_insert_stream import (
         streaming_graph_insert,
@@ -1610,20 +1604,10 @@ def q264_streaming_graph_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    bridges = (
-        probes_all.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med_df), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
+    directed = base_knn.unionByName(new_knn).unionByName(
+        _medoid_bridges(probes_all, med_df)
     )
-    directed = base_knn.unionByName(new_knn).unionByName(bridges)
-    edges = (
-        directed.unionByName(
-            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _sym_edges(directed).localCheckpoint(eager=True)
     v = to_double_array(F.col("embedding"))
     va = emb.select("vec_id", v.alias("__v"))
     qv = va.join(

@@ -51,22 +51,27 @@ from wetsa_cams_solrad_timeseries_spark.plans._spec import QuerySpec
 # MUST be pinned ahead of the automatic rotation so their fresh row
 # lands on the changed code.
 _PIN_FIRST = (
-    # The descent and graph-drain family: its build artifacts are now
-    # checkpointed in line (one job at a time, in build order) instead
-    # of from Python thread pools. Outputs must be unchanged; the pins
-    # put a fresh correctness row on every rewritten kernel. The
-    # _q232_setup consumers first, then the descent rounds, then the
-    # stream drains.
+    # The NN-descent and graph-drain family now builds on one set of
+    # shared kernels (vector._descent_base, _medoid_bridges, _sym_edges,
+    # the exact/capped rounds over _refine_topm, _sample_truth,
+    # _recall_rungs) instead of a hand-written copy per query. Outputs
+    # must be unchanged; the pins put a fresh correctness row on every
+    # query whose build moved onto them. The _q232_setup consumers
+    # first, then the descent rounds, then the insert/delete graphs and
+    # the stream drains.
     "q232_graph_ann_recall",
     "q235_graph_ann_sla",
     "q240_refined_graph_serving",
     "q250_descent_depth_sla",
     "q258_hnsw_multilayer",
     "q273_hnsw_log_layers",
+    "q237_nn_descent_refine",
     "q239_nn_descent_rounds",
     "q266_sampled_nn_descent",
     "q272_capped_descent_ladder",
     "q274_capped_descent_sla",
+    "q238_incremental_graph_ann",
+    "q256_graph_delete_repair",
     "q257_streaming_graph_insert",
     "q264_streaming_graph_cdc",
     "q265_hnsw_level_insert",
@@ -74,7 +79,6 @@ _PIN_FIRST = (
     # Other kernels round 14 changed that still have no correctness row
     # on the changed code.
     "q211_ann_recall_gate",
-    "q237_nn_descent_refine",
     "q176_kcore_peel",
     "q192_pagerank_converged",
     "q71_streaming_sessions",

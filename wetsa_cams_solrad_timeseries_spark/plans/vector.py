@@ -4147,6 +4147,209 @@ Q231_ORACLE = None
 
 
 # --------------------------------------------------------------------------
+# NN-descent family kernels: one build, one bridge rule, one exact round,
+# one sampled truth, one recall rung
+# --------------------------------------------------------------------------
+
+
+def _vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, __v double array) — the scoring side of every graph
+    build, beam and refine in this family."""
+    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
+        to_double_array,
+    )
+
+    v = to_double_array(F.col("embedding"))
+    return emb.select("vec_id", v.alias("__v"))
+
+
+def _medoid_bridges(probes: DataFrame, med: DataFrame) -> DataFrame:
+    """The graph family's long-range links: (src, dst) from each probed
+    vector to the MEDOID of every non-nearest probed cell (probe_rank ≥
+    1), never to itself. ``med`` is the (cell, medoid) hub table, one
+    row per cell, so it broadcasts. Callers that wire a layer or a
+    repaired cell restrict membership on ``probes`` before the call (a
+    semi-join or a cell filter); the optimizer pushes the rank filter
+    below it, so the plan is the one the inline copies had."""
+    return (
+        probes.filter(F.col("probe_rank") >= 1)
+        .join(F.broadcast(med), on="cell")
+        .filter(F.col("vec_id") != F.col("medoid"))
+        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
+    )
+
+
+def _sym_edges(directed: DataFrame) -> DataFrame:
+    """Both directions of a directed (src, dst) list, deduplicated — the
+    graph a beam hop or a descent round reads. Not checkpointed here:
+    every caller reads the result more than once (once per hop, or by
+    the expansion's two sides), so each checkpoints it where built."""
+    return directed.unionByName(
+        directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+
+
+def _two_hop(through: DataFrame) -> DataFrame:
+    """(src, dst) pairs reachable in exactly 2 hops through ``through``
+    (never self)."""
+    return (
+        through.select("src", F.col("dst").alias("__mid"))
+        .join(
+            through.select(F.col("src").alias("__mid"), "dst"), on="__mid"
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst")
+    )
+
+
+def _refine_topm(va: DataFrame, cand: DataFrame, m: int) -> DataFrame:
+    """Exact round6-L2 verify on the candidate pairs ONLY + per-src
+    top-m with the (d, dst) tie-break — the refine step of every descent
+    variant (exact, sampled, capped). ``va`` is the :func:`_vectors`
+    frame; a caller that scores several candidate sets checkpoints it
+    once and passes it to each. Returns the DIRECTED kept list (src,
+    dst)."""
+    from pyspark.sql import Window
+
+    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
+        l2sq_cols,
+    )
+
+    scored = (
+        cand.join(
+            va.select(F.col("vec_id").alias("src"), F.col("__v").alias("__sv")),
+            on="src",
+        )
+        .join(
+            va.select(F.col("vec_id").alias("dst"), F.col("__v").alias("__dv")),
+            on="dst",
+        )
+        .select(
+            "src", "dst", l2sq_cols(F.col("__sv"), F.col("__dv"), _DIM).alias("d")
+        )
+    )
+    w = Window.partitionBy("src").orderBy(F.col("d").asc(), F.col("dst"))
+    return (
+        scored.withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") <= m)
+        .select("src", "dst")
+    )
+
+
+def _exact_candidates(graph: DataFrame) -> DataFrame:
+    """NN-descent's exact candidate set: the symmetrized graph ∪ its
+    2-hop expansion, deduplicated — O(n·deg²) pairs, never n². Because
+    it contains the graph, each round's kept list dominates the last."""
+    # Explicit fixed-N keyed repartition instead of a bare distinct: the
+    # candidate frame is byte-LIGHT (~16 B/row) but the downstream
+    # scoring join evaluates a 64-term unrolled L2 per row, and AQE's
+    # byte-based coalescing (1 MB minPartitionSize) folds the distinct's
+    # output to 1-2 tasks — serializing the most compute-dense stage of
+    # the descent family (profiled: two 4.5 s 2-task stages in q250).
+    # A user-numbered repartition is exempt from AQE coalescing; the
+    # dedup aggregate reuses its exchange, so the plan still has ONE
+    # shuffle here. In-session A-B at sf0.1: q239 12.7 -> 9.3 s, q250
+    # 14.9 -> 12.4 s, q240 10.1 -> 9.1 s, q237 3.4 -> 3.2 s. The capped
+    # and sampled sets are small by design and keep a bare distinct
+    # (see _capped_candidates).
+    n = graph.sparkSession.sparkContext.defaultParallelism
+    return (
+        graph.unionByName(_two_hop(graph))
+        .repartition(n, "src", "dst")
+        .dropDuplicates()
+    )
+
+
+def _nn_descent_round(va: DataFrame, graph: DataFrame, m: int) -> DataFrame:
+    """One exact NN-descent keep (Dong et al., WWW 2011) over a
+    symmetrized graph: :func:`_refine_topm` over
+    :func:`_exact_candidates` — the round of q237 (once), the q239
+    ladder, and the q240/q250 rewires. Returns the DIRECTED refined
+    edge list (src, dst); callers checkpoint it when the recall row and
+    the next round's graph both read it."""
+    return _refine_topm(va, _exact_candidates(graph), m)
+
+
+def _descent_base(spark: SparkSession, sf_dir: str):
+    """The descent family's one base build over the whole corpus: IVF
+    coarse cells (k=16, 2 Lloyd iterations), each vector's top-m
+    within-cell kNN list, the medoid bridges to its next ``_Q232_BRIDGE``
+    cells, and their symmetrized union.
+
+    Three frames are eagerly checkpointed, in this order: ``knn`` (round
+    0's kept lists — the first graph and every round-0 recall rung read
+    it), ``bridges`` (re-added to every round's graph) and ``graph``
+    (round 1's candidate graph and the beam's edge table — the 2-hop
+    expansion reads it on both join sides, a beam once per hop).
+    ``cents``, ``med`` and ``probes`` stay lazy: only the beam setup
+    (entry step) and the upper-layer builds read them.
+
+    Returns (emb, cents, med, probes, knn, bridges, graph)."""
+    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
+        cell_knn_edges,
+        cell_medoids,
+        ivf_assign,
+        ivf_train_centroids,
+    )
+
+    emb = table(spark, sf_dir, "embeddings")
+    cents = ivf_train_centroids(emb, k=16, n_iter=2)
+    knn = cell_knn_edges(emb, cents, m=_Q232_M).localCheckpoint(eager=True)
+    med = cell_medoids(emb, cents)  # 16 rows
+    probes = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
+    bridges = _medoid_bridges(probes, med).localCheckpoint(eager=True)
+    graph = _sym_edges(knn.unionByName(bridges)).localCheckpoint(eager=True)
+    return emb, cents, med, probes, knn, bridges, graph
+
+
+def _sample_truth(emb: DataFrame) -> DataFrame:
+    """Exact top-m truth (src, dst) for the audit sample (vec_id % 29 ==
+    0, q221's bounded-audit convention): the bounded side of every
+    edge-recall row, so the brute-force scan is |sample| × n, never n².
+    Eagerly checkpointed: each recall rung joins it once and the n_true
+    count reads it again."""
+    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
+        brute_force_topk_l2,
+    )
+
+    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
+    return (
+        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
+        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _edge_recall(hits: str):
+    """round6(hits / max(nt, 1)) — edge recall of a hit count against
+    the truth's ``nt`` column, rounded the way the oracles round."""
+    return F.round(
+        F.col(hits).cast("double") / F.greatest(F.col("nt"), F.lit(1))
+        + F.lit(1e-9),
+        6,
+    )
+
+
+def _recall_rungs(strue: DataFrame, lists: dict) -> dict:
+    """One one-row frame (n_true, edge_recall) per kept list in
+    ``lists``, same keys, against the sampled truth ``strue``. The truth
+    is counted ONCE and cross-joined into every rung; callers add their
+    literal columns (round, m, c, variant…) and any cand_pairs count
+    around the two."""
+    nt = strue.agg(F.count(F.lit(1)).alias("nt"))
+    rungs = {}
+    for key, lst in lists.items():
+        h = lst.join(strue, on=["src", "dst"]).agg(
+            F.count(F.lit(1)).alias("h")
+        )
+        rungs[key] = nt.crossJoin(F.broadcast(h)).select(
+            F.col("nt").cast("long").alias("n_true"),
+            _edge_recall("h").alias("edge_recall"),
+        )
+    return rungs
+
+
+# --------------------------------------------------------------------------
 # q232 — graph ANN (NSW-style beam search), the last index family, priced
 # --------------------------------------------------------------------------
 
@@ -4202,41 +4405,16 @@ def _q232_setup(spark: SparkSession, sf_dir: str):
     checkpointed edge table, bounded-candidate scorer, rank window,
     checkpointed exact baseline) — shared by q232 (one beam width) and
     q235 (the beam ladder), so the Σ|cell|² build is paid once per
-    call no matter how many widths are measured."""
+    call no matter how many widths are measured. The edge table is
+    :func:`_descent_base`'s checkpointed graph, read once per hop."""
     from pyspark.sql import Window
 
-    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
-        to_double_array,
-    )
     from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
         brute_force_topk_l2,
-        cell_knn_edges,
-        cell_medoids,
-        ivf_assign,
-        ivf_train_centroids,
         l2sq_cols,
     )
 
-    emb = table(spark, sf_dir, "embeddings")
-    cents = ivf_train_centroids(emb, k=16, n_iter=2)
-
-    knn = cell_knn_edges(emb, cents, m=_Q232_M)
-    med = cell_medoids(emb, cents)  # 16 rows
-    probes = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    bridges = (
-        probes.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
-    )
-    directed = knn.unionByName(bridges)
-    edges = (
-        directed.unionByName(
-            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # consumed once per hop
-    )
+    emb, cents, med, probes, knn, bridges, edges = _descent_base(spark, sf_dir)
 
     qpred = F.col("vec_id") < _Q232_NQ
     entry = (
@@ -4245,12 +4423,11 @@ def _q232_setup(spark: SparkSession, sf_dir: str):
         .select(F.col("vec_id").alias("query_id"), F.col("medoid").alias("node"))
     )
 
-    v = to_double_array(F.col("embedding"))
     # NOT spread_for_scoring'd: with_dist is an equi-join (corpus hash-
     # probed by the broadcast candidate set), so its per-row work is a
     # hash lookup, not |Q| distance folds — A-B measured the spread+
     # checkpoint variant SLOWER on q232 (4.1 -> 5.9 s at sf0.1).
-    va = emb.select("vec_id", v.alias("__v"))
+    va = _vectors(emb)
     qv = va.filter(qpred).select(
         F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv")
     )
@@ -4821,77 +4998,11 @@ def q237_nn_descent_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample-bounded. Oracle: the shared graph CTEs + the same expansion
     /rank/recall algebra (unreferenced CTEs in the shared head are
     never executed by DuckDB's lazy CTE inlining)."""
-    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
-        to_double_array,
-    )
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        brute_force_topk_l2,
-        cell_knn_edges,
-        cell_medoids,
-        ivf_assign,
-        ivf_train_centroids,
-        l2sq_cols,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    cents = ivf_train_centroids(emb, k=16, n_iter=2)
-    knn = cell_knn_edges(emb, cents, m=_Q232_M).localCheckpoint(eager=True)
-    med = cell_medoids(emb, cents)
-    probes = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    bridges = (
-        probes.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
-    )
-    directed = knn.unionByName(bridges)
-    edges = (
-        directed.unionByName(
-            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # consumed by 1-hop AND 2-hop
-    )
-
-    # Candidates: 1-hop ∪ 2-hop (never self); exact verify on candidates.
-    e2 = (
-        edges.select(F.col("src").alias("__mid"), "dst")
-        .join(edges.select("src", F.col("dst").alias("__mid")), on="__mid")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-    )
-    cand = edges.unionByName(e2).distinct()
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    scored = (
-        cand.join(
-            va.select(F.col("vec_id").alias("src"), F.col("__v").alias("__sv")),
-            on="src",
-        )
-        .join(
-            va.select(F.col("vec_id").alias("dst"), F.col("__v").alias("__dv")),
-            on="dst",
-        )
-        .select(
-            "src", "dst", l2sq_cols(F.col("__sv"), F.col("__dv"), _DIM).alias("d")
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("src").orderBy(F.col("d").asc(), F.col("dst"))
-    refined = (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= _Q232_M)
-        .select("src", "dst")
-    )
+    emb, *_, knn, _, graph = _descent_base(spark, sf_dir)
+    refined = _nn_descent_round(_vectors(emb), graph, _Q232_M)
 
     # Audit on the hash sample: exact truth, base vs refined recall.
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue = (
-        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-        .localCheckpoint(eager=True)  # three consumers below
-    )
+    strue = _sample_truth(emb)
     n_true = strue.agg(
         F.count(F.lit(1)).alias("nt"),
         F.countDistinct("src").alias("ns"),
@@ -4902,16 +5013,7 @@ def q237_nn_descent_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ha = refined.join(strue, on=["src", "dst"]).agg(
         F.count(F.lit(1)).alias("ha")
     )
-    rb = F.round(
-        F.col("hb").cast("double") / F.greatest(F.col("nt"), F.lit(1))
-        + F.lit(1e-9),
-        6,
-    )
-    ra = F.round(
-        F.col("ha").cast("double") / F.greatest(F.col("nt"), F.lit(1))
-        + F.lit(1e-9),
-        6,
-    )
+    rb, ra = _edge_recall("hb"), _edge_recall("ha")
     return (
         n_true.crossJoin(F.broadcast(hb))
         .crossJoin(F.broadcast(ha))
@@ -5093,13 +5195,7 @@ def q238_incremental_graph_ann(
     def _base_edges(cents, med_df):
         knn_h = cell_knn_edges(hist, cents, m=_Q232_M)
         probes_h = ivf_assign(hist, cents, n_probe=1 + _Q232_BRIDGE)
-        bridges_h = (
-            probes_h.filter(F.col("probe_rank") >= 1)
-            .join(F.broadcast(med_df), on="cell")
-            .filter(F.col("vec_id") != F.col("medoid"))
-            .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
-        )
-        return knn_h.unionByName(bridges_h)
+        return knn_h.unionByName(_medoid_bridges(probes_h, med_df))
 
     artifacts = None
     try:
@@ -5152,20 +5248,10 @@ def q238_incremental_graph_ann(
     probes_new = ivf_assign(
         emb.filter(is_new), cents, n_probe=1 + _Q232_BRIDGE
     ).localCheckpoint(eager=True)  # consumed by bridges AND entry
-    bridges_new = (
-        probes_new.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med_df), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
+    directed = base_edges.unionByName(new_knn).unionByName(
+        _medoid_bridges(probes_new, med_df)
     )
-    directed = base_edges.unionByName(new_knn).unionByName(bridges_new)
-    edges = (
-        directed.unionByName(
-            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # consumed once per hop
-    )
+    edges = _sym_edges(directed).localCheckpoint(eager=True)  # once per hop
 
     # --- serve: q232's fixed-hop beam for the new-shard queries ---
     q_bound = F.col("vec_id") < _Q197_QBOUND
@@ -5351,71 +5437,6 @@ Q238_ORACLE = None  # LAZY — oracle_fn resolved at call time (q56 pattern)
 _Q239_ROUNDS = 2
 
 
-def _nn_descent_round(emb: DataFrame, graph: DataFrame, m: int) -> DataFrame:
-    """One NN-descent keep over a symmetrized candidate graph: candidates
-    = graph ∪ 2-hop(graph) (never self), exact round6-L2 verify on the
-    candidate pairs ONLY (O(n·deg²), never n²), per-src top-m with the
-    (d, dst) tie-break — q237's refine algebra as the shared kernel of
-    the round ladder (q239) and the refined-serving gate (q240).
-    Returns the DIRECTED refined edge list (src, dst)."""
-    from pyspark.sql import Window
-
-    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
-        to_double_array,
-    )
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        l2sq_cols,
-    )
-
-    e2 = (
-        graph.select(F.col("src").alias("__mid"), "dst")
-        .join(graph.select("src", F.col("dst").alias("__mid")), on="__mid")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-    )
-    # Explicit fixed-N keyed repartition instead of a bare distinct: the
-    # candidate frame is byte-LIGHT (~16 B/row) but the downstream
-    # scoring join evaluates a 64-term unrolled L2 per row, and AQE's
-    # byte-based coalescing (1 MB minPartitionSize) folds the distinct's
-    # output to 1-2 tasks — serializing the most compute-dense stage of
-    # the descent family (profiled: two 4.5 s 2-task stages in q250).
-    # A user-numbered repartition is exempt from AQE coalescing; the
-    # dedup aggregate reuses its exchange, so the plan still has ONE
-    # shuffle here. In-session A-B at sf0.1: q239 12.7 -> 9.3 s, q250
-    # 14.9 -> 12.4 s, q240 10.1 -> 9.1 s, q237 3.4 -> 3.2 s.
-    n = emb.sparkSession.sparkContext.defaultParallelism
-    cand = (
-        graph.unionByName(e2).repartition(n, "src", "dst").dropDuplicates()
-    )
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    scored = (
-        cand.join(
-            va.select(F.col("vec_id").alias("src"), F.col("__v").alias("__sv")),
-            on="src",
-        )
-        .join(
-            va.select(F.col("vec_id").alias("dst"), F.col("__v").alias("__dv")),
-            on="dst",
-        )
-        .select(
-            "src", "dst", l2sq_cols(F.col("__sv"), F.col("__dv"), _DIM).alias("d")
-        )
-    )
-    w = Window.partitionBy("src").orderBy(F.col("d").asc(), F.col("dst"))
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= m)
-        .select("src", "dst")
-    )
-
-
-def _sym_edges(directed: DataFrame) -> DataFrame:
-    return directed.unionByName(
-        directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-
-
 def q239_nn_descent_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NN-descent LADDER — q235's rung-by-rung tuning discipline
     applied to the build side: q237 measures ONE descent round; here
@@ -5442,31 +5463,11 @@ def q239_nn_descent_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round."""
     from functools import reduce
 
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        brute_force_topk_l2,
-        cell_knn_edges,
-        cell_medoids,
-        ivf_assign,
-        ivf_train_centroids,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    cents = ivf_train_centroids(emb, k=16, n_iter=2)
-    knn = cell_knn_edges(emb, cents, m=_Q232_M).localCheckpoint(eager=True)
-    med = cell_medoids(emb, cents)
-    probes = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    bridges = (
-        probes.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
-        .localCheckpoint(eager=True)  # re-added to every round's graph
-    )
-
+    emb, *_, knn, bridges, graph = _descent_base(spark, sf_dir)
+    va = _vectors(emb)
     lists = {0: knn}
-    graph = _sym_edges(knn.unionByName(bridges)).localCheckpoint(eager=True)
     for r in range(1, _Q239_ROUNDS + 1):
-        refined = _nn_descent_round(emb, graph, _Q232_M).localCheckpoint(
+        refined = _nn_descent_round(va, graph, _Q232_M).localCheckpoint(
             eager=True
         )  # consumed by the recall row AND the next round's graph
         lists[r] = refined
@@ -5475,32 +5476,16 @@ def q239_nn_descent_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 eager=True
             )
 
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue = (
-        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-        .localCheckpoint(eager=True)  # one consumer per round + the count
-    )
-    nt = strue.agg(F.count(F.lit(1)).alias("nt"))
-    frames = []
-    for r, lst in sorted(lists.items()):
-        h = lst.join(strue, on=["src", "dst"]).agg(
-            F.count(F.lit(1)).alias("h")
+    rungs = _recall_rungs(_sample_truth(emb), lists)
+    return reduce(DataFrame.unionByName, [
+        rung.select(
+            F.lit(r).cast("long").alias("round"),
+            F.lit(_Q232_M).cast("long").alias("m"),
+            "n_true",
+            "edge_recall",
         )
-        frames.append(
-            nt.crossJoin(F.broadcast(h)).select(
-                F.lit(r).cast("long").alias("round"),
-                F.lit(_Q232_M).cast("long").alias("m"),
-                F.col("nt").cast("long").alias("n_true"),
-                F.round(
-                    F.col("h").cast("double")
-                    / F.greatest(F.col("nt"), F.lit(1))
-                    + F.lit(1e-9),
-                    6,
-                ).alias("edge_recall"),
-            )
-        )
-    return reduce(lambda a, b: a.unionByName(b), frames)
+        for r, rung in rungs.items()
+    ])
 
 
 def _q239_round_ctes(r: int) -> str:
@@ -5614,9 +5599,8 @@ def q240_refined_graph_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     the refine round + BOTH unrolled beam chains (tagged hop CTEs over
     `edges` and the rewired `g1`) in one statement."""
     setup = _q232_setup(spark, sf_dir)
-    emb = table(spark, sf_dir, "embeddings")
-    edges, bridges = setup[1], setup[6]
-    refined = _nn_descent_round(emb, edges, _Q232_M)
+    edges, bridges, va = setup[1], setup[6], setup[10]
+    refined = _nn_descent_round(va, edges, _Q232_M)
     edges_r = _sym_edges(refined.unionByName(bridges)).localCheckpoint(
         eager=True  # consumed once per hop of the refined traversal
     )
@@ -6563,13 +6547,12 @@ def q250_descent_depth_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the shared graph CTEs + both refine rounds + three tagged
     beam unrolls + the ladder/pick algebra in one statement."""
     setup = _q232_setup(spark, sf_dir)
-    emb = table(spark, sf_dir, "embeddings")
-    base_edges, bridges = setup[1], setup[6]
+    base_edges, bridges, va = setup[1], setup[6], setup[10]
 
     graphs = {0: base_edges}
     g = base_edges
     for r in range(1, _Q239_ROUNDS + 1):
-        refined = _nn_descent_round(emb, g, _Q232_M)
+        refined = _nn_descent_round(va, g, _Q232_M)
         g = _sym_edges(refined.unionByName(bridges)).localCheckpoint(
             eager=True  # serve traversal + next round's expansion
         )
@@ -7829,20 +7812,10 @@ def q257_streaming_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Assemble the full graph exactly as q238 does (base + bridges are
     # node-local / frozen-hub derived — order-independent by nature).
-    bridges = (
-        probes_all.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med_df), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
+    directed = base_knn.unionByName(new_knn).unionByName(
+        _medoid_bridges(probes_all, med_df)
     )
-    directed = base_knn.unionByName(new_knn).unionByName(bridges)
-    edges = (
-        directed.unionByName(
-            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _sym_edges(directed).localCheckpoint(eager=True)
     v = to_double_array(F.col("embedding"))
     va = emb.select("vec_id", v.alias("__v"))
     qv = va.join(
@@ -7941,23 +7914,10 @@ def q258_hnsw_multilayer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     l1_emb = emb.join(l1_ids, on="vec_id", how="semi")
     knn1 = cell_knn_edges(l1_emb, cents, m=_Q232_M)
-    bridges1 = (
-        probes.filter(F.col("probe_rank") >= 1)
-        .join(l1_ids, on="vec_id", how="semi")
-        .join(F.broadcast(med), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
+    bridges1 = _medoid_bridges(
+        probes.join(l1_ids, on="vec_id", how="semi"), med
     )
-    directed1 = knn1.unionByName(bridges1)
-    edges1 = (
-        directed1.unionByName(
-            directed1.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges1 = _sym_edges(knn1.unionByName(bridges1)).localCheckpoint(eager=True)
 
     # Greedy upper-layer walk (beam = 1) from the medoid entry.
     cand = entry0
@@ -8282,27 +8242,14 @@ def q265_hnsw_level_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build_edges(knn_parts, member_ids=None):
-        bridges = probes_all.filter(F.col("probe_rank") >= 1)
+        probes = probes_all
         if member_ids is not None:
-            bridges = bridges.join(member_ids, on="vec_id", how="semi")
-        bridges = (
-            bridges.join(F.broadcast(med_df), on="cell")
-            .filter(F.col("vec_id") != F.col("medoid"))
-            .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
-        )
+            probes = probes.join(member_ids, on="vec_id", how="semi")
         directed = knn_parts[0]
         for part in knn_parts[1:]:
             directed = directed.unionByName(part)
-        directed = directed.unionByName(bridges)
-        return (
-            directed.unionByName(
-                directed.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        directed = directed.unionByName(_medoid_bridges(probes, med_df))
+        return _sym_edges(directed).localCheckpoint(eager=True)
 
     edges0 = build_edges([knn0_h, new_knn0])
     edges1 = build_edges([knn1_h, new_knn1], member_ids=l1_all_ids)
@@ -8528,19 +8475,6 @@ def _sampled_neighbors(graph: DataFrame, s: int, salt: int = 0) -> DataFrame:
     )
 
 
-def _two_hop(through: DataFrame) -> DataFrame:
-    """(src, dst) pairs reachable in exactly 2 hops through ``through``
-    (never self)."""
-    return (
-        through.select("src", F.col("dst").alias("__mid"))
-        .join(
-            through.select(F.col("src").alias("__mid"), "dst"), on="__mid"
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-    )
-
-
 def _local_join(samp: DataFrame) -> DataFrame:
     """Dong et al.'s LOCAL JOIN: every ordered pair of a node's sampled
     neighbors becomes a candidate edge. On the symmetrized graph this
@@ -8558,34 +8492,10 @@ def _local_join(samp: DataFrame) -> DataFrame:
 
 
 def _q266_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q237's base graph (within-cell kNN ∪ medoid bridges, symmetrized,
-    checkpointed) — shared by the query and its bound-locking pytest."""
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        cell_knn_edges,
-        cell_medoids,
-        ivf_assign,
-        ivf_train_centroids,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    cents = ivf_train_centroids(emb, k=16, n_iter=2)
-    knn = cell_knn_edges(emb, cents, m=_Q232_M)
-    med = cell_medoids(emb, cents)
-    probes = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    bridges = (
-        probes.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
-    )
-    directed = knn.unionByName(bridges)
-    return (
-        directed.unionByName(
-            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # consumed by both variants + window
-    )
+    """The symmetrized :func:`_descent_base` graph (within-cell kNN ∪
+    medoid bridges, checkpointed) — shared by the query and its
+    bound-locking pytest."""
+    return _descent_base(spark, sf_dir)[-1]
 
 
 def q266_sampled_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8604,9 +8514,9 @@ def q266_sampled_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     what this audit reports (production recovers it by running more of
     these now-cheap rounds — Dong et al.'s convergence argument).
 
-    One row per variant over the SAME base graph (q237's within-cell
-    kNN ∪ medoid bridges, symmetrized): ``exact`` (s=0, the unsampled
-    expansion) and ``sampled`` (s=S). Columns: candidate-pair volume
+    One row per variant over the SAME base graph (:func:`_descent_base`:
+    within-cell kNN ∪ medoid bridges, symmetrized): ``exact`` (s=0, the
+    unsampled expansion) and ``sampled`` (s=S). Columns: candidate-pair volume
     and edge recall against the exact top-m truth on the q237 hash
     sample — the production dial (recall lost per candidate-volume
     saved) read directly off the driver-checked output. Because the
@@ -8623,89 +8533,41 @@ def q266_sampled_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth side is sample-bounded (q221's audit convention)."""
     from functools import reduce
 
-    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
-        to_double_array,
-    )
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        brute_force_topk_l2,
-        l2sq_cols,
-    )
-
     emb = table(spark, sf_dir, "embeddings")
-    graph = _q266_graph(spark, sf_dir)
+    graph = _q266_graph(spark, sf_dir)  # both variants + the sample window
     samp = _sampled_neighbors(graph, _Q266_S).localCheckpoint(eager=True)
-    # The EXACT variant's candidate set is the same byte-light/compute-
-    # dense frame as _nn_descent_round's — AQE's byte-based coalescing
-    # folds its distinct to 1-2 tasks and serializes the scoring join
-    # (profiled r14: one 3.2 s 2-task stage = a third of the query). The
-    # same fixed-N keyed repartition applies; the SAMPLED variant's set
-    # is deliberately small (that is the point of the sampling) and
-    # keeps the bare distinct (the r14 A-B measured the repartition
-    # flat-to-negative on the capped/sampled sets).
-    n = spark.sparkContext.defaultParallelism
+    # The EXACT variant's candidate set is _nn_descent_round's
+    # (_exact_candidates, keyed repartition — profiled r14: AQE folded
+    # its bare distinct to one 3.2 s 2-task stage, a third of the
+    # query); the SAMPLED variant's set is deliberately small (that is
+    # the point of the sampling) and keeps the bare distinct (the r14
+    # A-B measured the repartition flat-to-negative on the capped/
+    # sampled sets). Both are checkpointed: the verify AND the
+    # cand_pairs count read them.
     cands = {
-        "exact": graph.unionByName(_two_hop(graph))
-        .repartition(n, "src", "dst")
-        .dropDuplicates()
-        .localCheckpoint(eager=True),
+        "exact": _exact_candidates(graph).localCheckpoint(eager=True),
         "sampled": graph.unionByName(_local_join(samp))
         .distinct()
         .localCheckpoint(eager=True),
     }
-
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v")).localCheckpoint(eager=True)
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue = (
-        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-        .localCheckpoint(eager=True)  # one hits-join per variant + count
+    va = _vectors(emb).localCheckpoint(eager=True)  # both variants' verify
+    rungs = _recall_rungs(
+        _sample_truth(emb),
+        {v: _refine_topm(va, cand, _Q232_M) for v, cand in cands.items()},
     )
-    nt = strue.agg(F.count(F.lit(1)).alias("nt"))
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("src").orderBy(F.col("d").asc(), F.col("dst"))
     frames = []
     for variant, s in (("exact", 0), ("sampled", _Q266_S)):
-        cand = cands[variant]
-        refined = (
-            cand.join(
-                va.select(F.col("vec_id").alias("src"), F.col("__v").alias("__sv")),
-                on="src",
-            )
-            .join(
-                va.select(F.col("vec_id").alias("dst"), F.col("__v").alias("__dv")),
-                on="dst",
-            )
-            .select(
-                "src", "dst", l2sq_cols(F.col("__sv"), F.col("__dv"), _DIM).alias("d")
-            )
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= _Q232_M)
-            .select("src", "dst")
-        )
-        npairs = cand.agg(F.count(F.lit(1)).alias("cand_pairs"))
-        hits = refined.join(strue, on=["src", "dst"]).agg(
-            F.count(F.lit(1)).alias("h")
-        )
+        npairs = cands[variant].agg(F.count(F.lit(1)).alias("cand_pairs"))
         frames.append(
-            nt.crossJoin(F.broadcast(npairs))
-            .crossJoin(F.broadcast(hits))
-            .select(
+            rungs[variant].crossJoin(F.broadcast(npairs)).select(
                 F.lit(variant).alias("variant"),
                 F.lit(s).cast("long").alias("s"),
                 F.col("cand_pairs").cast("long").alias("cand_pairs"),
-                F.col("nt").cast("long").alias("n_true"),
-                F.round(
-                    F.col("h").cast("double")
-                    / F.greatest(F.col("nt"), F.lit(1))
-                    + F.lit(1e-9),
-                    6,
-                ).alias("edge_recall"),
+                "n_true",
+                "edge_recall",
             )
         )
-    return reduce(lambda a, b: a.unionByName(b), frames)
+    return reduce(DataFrame.unionByName, frames)
 
 
 _Q266_ORACLE_TEMPLATE = f"""
@@ -8824,42 +8686,6 @@ _Q272_ROUNDS = 4
 _Q272_C = 16  # per-mid forwarded-list cap (q209's hot-bucket cap analog)
 
 
-def _refine_topm(emb: DataFrame, cand: DataFrame, m: int) -> DataFrame:
-    """Exact verify on candidate pairs ONLY + per-src top-m with the
-    (d, dst) tie-break — the refine algebra shared by every descent
-    variant (q237's kernel shape)."""
-    from pyspark.sql import Window
-
-    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
-        to_double_array,
-    )
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        l2sq_cols,
-    )
-
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    scored = (
-        cand.join(
-            va.select(F.col("vec_id").alias("src"), F.col("__v").alias("__sv")),
-            on="src",
-        )
-        .join(
-            va.select(F.col("vec_id").alias("dst"), F.col("__v").alias("__dv")),
-            on="dst",
-        )
-        .select(
-            "src", "dst", l2sq_cols(F.col("__sv"), F.col("__dv"), _DIM).alias("d")
-        )
-    )
-    w = Window.partitionBy("src").orderBy(F.col("d").asc(), F.col("dst"))
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= m)
-        .select("src", "dst")
-    )
-
-
 def _capped_candidates(graph: DataFrame, c: int, salt: int) -> DataFrame:
     """The hub-capped candidate set: current graph ∪ the exact 2-hop
     expansion with each mid's FORWARDED list capped at ≤ c hash-picked
@@ -8878,7 +8704,7 @@ def _capped_candidates(graph: DataFrame, c: int, salt: int) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
     )
-    # Bare distinct, NOT the _nn_descent_round fixed-N repartition: the
+    # Bare distinct, NOT _exact_candidates' fixed-N repartition: the
     # hub cap keeps this candidate set small enough that the in-session
     # A-B measured the repartition flat-to-negative here (q272/q274/q266
     # within noise) while the uncapped exact expansion won 17-26%.
@@ -8886,10 +8712,11 @@ def _capped_candidates(graph: DataFrame, c: int, salt: int) -> DataFrame:
 
 
 def _capped_descent_round(
-    emb: DataFrame, graph: DataFrame, m: int, c: int, salt: int
+    va: DataFrame, graph: DataFrame, m: int, c: int, salt: int
 ) -> DataFrame:
-    """One HUB-CAPPED NN-descent keep over :func:`_capped_candidates`."""
-    return _refine_topm(emb, _capped_candidates(graph, c, salt), m)
+    """One HUB-CAPPED NN-descent keep: :func:`_refine_topm` over
+    :func:`_capped_candidates`."""
+    return _refine_topm(va, _capped_candidates(graph, c, salt), m)
 
 
 def q272_capped_descent_ladder(
@@ -8903,9 +8730,9 @@ def q272_capped_descent_ladder(
     indeg² pairs per round, and on a graph whose within-cell lists are
     already locally optimal ALL the remaining gain is cross-cell,
     i.e. hub-routed). The mitigation that fits is q209's hot-bucket
-    discipline applied to the expansion: expand EXACTLY like q237's
-    2-hop, but cap each mid's FORWARDED list at C hash-picked
-    neighbors, re-salted per round. Normal-degree nodes (deg ≤ C)
+    discipline applied to the expansion: expand EXACTLY like
+    :func:`_exact_candidates`' 2-hop, but cap each mid's FORWARDED list
+    at C hash-picked neighbors, re-salted per round. Normal-degree nodes (deg ≤ C)
     forward everything — identical to exact; a hub forwards C diverse
     targets per round, so per-mid join cost is indeg·C, never indeg²,
     total candidate volume ≤ n·deg·C per round (the verdict's n·ρ·deg
@@ -8928,32 +8755,12 @@ def q272_capped_descent_ladder(
     lists replayed exactly."""
     from functools import reduce
 
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        brute_force_topk_l2,
-        cell_knn_edges,
-        cell_medoids,
-        ivf_assign,
-        ivf_train_centroids,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    cents = ivf_train_centroids(emb, k=16, n_iter=2)
-    knn = cell_knn_edges(emb, cents, m=_Q232_M).localCheckpoint(eager=True)
-    med = cell_medoids(emb, cents)
-    probes = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    bridges = (
-        probes.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
-        .localCheckpoint(eager=True)  # re-added to every round's graph
-    )
-
+    emb, *_, knn, bridges, graph = _descent_base(spark, sf_dir)
+    va = _vectors(emb)
     lists = {0: knn}
-    graph = _sym_edges(knn.unionByName(bridges)).localCheckpoint(eager=True)
     for r in range(1, _Q272_ROUNDS + 1):
         refined = _capped_descent_round(
-            emb, graph, _Q232_M, _Q272_C, salt=r
+            va, graph, _Q232_M, _Q272_C, salt=r
         ).localCheckpoint(eager=True)
         lists[r] = refined
         if r < _Q272_ROUNDS:
@@ -8961,33 +8768,17 @@ def q272_capped_descent_ladder(
                 eager=True
             )
 
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue = (
-        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-    nt = strue.agg(F.count(F.lit(1)).alias("nt"))
-    frames = []
-    for r, lst in sorted(lists.items()):
-        h = lst.join(strue, on=["src", "dst"]).agg(
-            F.count(F.lit(1)).alias("h")
+    rungs = _recall_rungs(_sample_truth(emb), lists)
+    return reduce(DataFrame.unionByName, [
+        rung.select(
+            F.lit(r).cast("long").alias("round"),
+            F.lit(_Q232_M).cast("long").alias("m"),
+            F.lit(_Q272_C).cast("long").alias("c"),
+            "n_true",
+            "edge_recall",
         )
-        frames.append(
-            nt.crossJoin(F.broadcast(h)).select(
-                F.lit(r).cast("long").alias("round"),
-                F.lit(_Q232_M).cast("long").alias("m"),
-                F.lit(_Q272_C).cast("long").alias("c"),
-                F.col("nt").cast("long").alias("n_true"),
-                F.round(
-                    F.col("h").cast("double")
-                    / F.greatest(F.col("nt"), F.lit(1))
-                    + F.lit(1e-9),
-                    6,
-                ).alias("edge_recall"),
-            )
-        )
-    return reduce(lambda a, b: a.unionByName(b), frames)
+        for r, rung in rungs.items()
+    ])
 
 
 def _q272_round_ctes(r: int) -> str:
@@ -9160,23 +8951,12 @@ def q273_hnsw_log_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         l_emb = emb.join(l_ids, on="vec_id", how="semi")
         knn_l = cell_knn_edges(l_emb, cents, m=_Q232_M)
-        bridges_l = (
-            probes.filter(F.col("probe_rank") >= 1)
-            .join(l_ids, on="vec_id", how="semi")
-            .join(F.broadcast(med), on="cell")
-            .filter(F.col("vec_id") != F.col("medoid"))
-            .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
+        bridges_l = _medoid_bridges(
+            probes.join(l_ids, on="vec_id", how="semi"), med
         )
-        directed = knn_l.unionByName(bridges_l)
-        layer_edges[lvl] = (
-            directed.unionByName(
-                directed.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        layer_edges[lvl] = _sym_edges(
+            knn_l.unionByName(bridges_l)
+        ).localCheckpoint(eager=True)
         layer_n[lvl] = l_ids.agg(
             F.count(F.lit(1)).cast("long").alias(f"n_l{lvl}")
         )
@@ -9426,35 +9206,15 @@ def q274_capped_descent_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-bounded verify) plus one count aggregate per rung."""
     from functools import reduce
 
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        brute_force_topk_l2,
-        cell_knn_edges,
-        cell_medoids,
-        ivf_assign,
-        ivf_train_centroids,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    cents = ivf_train_centroids(emb, k=16, n_iter=2)
-    knn = cell_knn_edges(emb, cents, m=_Q232_M).localCheckpoint(eager=True)
-    med = cell_medoids(emb, cents)
-    probes = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    bridges = (
-        probes.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-
-    graph = _sym_edges(knn.unionByName(bridges)).localCheckpoint(eager=True)
+    emb, *_, knn, bridges, graph = _descent_base(spark, sf_dir)
+    va = _vectors(emb)
     lists = {0: knn}
     cands = {0: graph}  # round 0's standing cost: the base graph itself
     for r in range(1, _Q272_ROUNDS + 1):
         cand = _capped_candidates(graph, _Q272_C, salt=r).localCheckpoint(
             eager=True  # consumed by the verify AND the count rung
         )
-        refined = _refine_topm(emb, cand, _Q232_M).localCheckpoint(
+        refined = _refine_topm(va, cand, _Q232_M).localCheckpoint(
             eager=True
         )
         lists[r], cands[r] = refined, cand
@@ -9463,43 +9223,26 @@ def q274_capped_descent_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
                 eager=True
             )
 
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue = (
-        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-    nt = strue.agg(F.count(F.lit(1)).alias("nt"))
     frames = []
-    for r in sorted(lists):
-        h = lists[r].join(strue, on=["src", "dst"]).agg(
-            F.count(F.lit(1)).alias("h")
-        )
+    for r, rung in _recall_rungs(_sample_truth(emb), lists).items():
         npairs = cands[r].agg(F.count(F.lit(1)).alias("cand_pairs"))
-        recall = F.round(
-            F.col("h").cast("double") / F.greatest(F.col("nt"), F.lit(1))
-            + F.lit(1e-9),
-            6,
-        )
         frames.append(
-            nt.crossJoin(F.broadcast(h))
-            .crossJoin(F.broadcast(npairs))
-            .select(
+            rung.crossJoin(F.broadcast(npairs)).select(
                 F.lit(r).cast("long").alias("round"),
                 F.lit(_Q232_M).cast("long").alias("m"),
                 F.lit(_Q272_C).cast("long").alias("c"),
                 F.col("cand_pairs").cast("long").alias("cand_pairs"),
-                F.col("nt").cast("long").alias("n_true"),
-                recall.alias("edge_recall"),
-                (recall >= F.lit(float(_Q274_FLOOR))).alias("met"),
+                "n_true",
+                "edge_recall",
+                (F.col("edge_recall") >= F.lit(float(_Q274_FLOOR))).alias(
+                    "met"
+                ),
             )
         )
     # Two consumers below (the min-met-round aggregate and the output
     # join) — checkpoint the 5-row ladder or the whole union subtree
     # executes twice (50 → ~8 exchanges measured).
-    ladder = reduce(lambda a, b: a.unionByName(b), frames).localCheckpoint(
-        eager=True
-    )
+    ladder = reduce(DataFrame.unionByName, frames).localCheckpoint(eager=True)
     mr = ladder.filter(F.col("met")).agg(F.min("round").alias("__mr"))
     return ladder.crossJoin(F.broadcast(mr)).select(
         "round", "m", "c", "cand_pairs", "n_true", "edge_recall", "met",
@@ -9595,9 +9338,10 @@ def q278_streaming_capped_descent(
     q272. New-shard vectors arrive as micro-batches and insert under
     the frozen quantizer via the displacement merge; the drained
     directed lists equal the one-shot batch insert's EXACTLY (q257's
-    top-m merge theorem), so one capped descent round (q272's kernel,
-    salt=1) over the stream-built symmetrized graph must produce the
-    SAME refined lists as the batch pipeline — which is precisely what
+    top-m merge theorem), so one capped descent round
+    (:func:`_capped_descent_round`, salt=1) over the stream-built
+    symmetrized graph must produce the SAME refined lists as the batch
+    pipeline — which is precisely what
     the oracle replays: q238's batch graph CTEs + q272's capped round,
     no streaming anywhere in the SQL. Stream-then-refine ≡
     batch-then-refine, proven at the edge-recall surface.
@@ -9620,7 +9364,6 @@ def q278_streaming_capped_descent(
         to_double_array,
     )
     from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        brute_force_topk_l2,
         cell_knn_edges,
         cell_medoids,
         ivf_assign,
@@ -9658,52 +9401,29 @@ def q278_streaming_capped_descent(
     base_knn = cell_knn_edges(hist, cents, m=_Q232_M).localCheckpoint(
         eager=True
     )
-    sample = F.col("vec_id") % _Q237_SAMPLE_MOD == 0
-    strue = (
-        brute_force_topk_l2(emb, emb.filter(sample), k=_Q232_M, dim=_DIM)
-        .select(
-            F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
-        )
-        .localCheckpoint(eager=True)
-    )
+    strue = _sample_truth(emb)
     lists0 = base_knn.unionByName(new_knn).localCheckpoint(eager=True)
     probes_all = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    bridges = (
-        probes_all.filter(F.col("probe_rank") >= 1)
-        .join(F.broadcast(med_df), on="cell")
-        .filter(F.col("vec_id") != F.col("medoid"))
-        .select(F.col("vec_id").alias("src"), F.col("medoid").alias("dst"))
-    )
-    graph = _sym_edges(lists0.unionByName(bridges)).localCheckpoint(
-        eager=True
-    )
-
-    # Bounded refine on the streamed state (q272's kernel, round 1).
-    refined = _capped_descent_round(
-        emb, graph, _Q232_M, _Q272_C, salt=1
+    graph = _sym_edges(
+        lists0.unionByName(_medoid_bridges(probes_all, med_df))
     ).localCheckpoint(eager=True)
 
-    nt = strue.agg(F.count(F.lit(1)).alias("nt"))
-    frames = []
-    for rnd, lst in ((0, lists0), (1, refined)):
-        h = lst.join(strue, on=["src", "dst"]).agg(
-            F.count(F.lit(1)).alias("h")
+    # Bounded refine on the streamed state (q272's round 1).
+    refined = _capped_descent_round(
+        _vectors(emb), graph, _Q232_M, _Q272_C, salt=1
+    ).localCheckpoint(eager=True)
+
+    rungs = _recall_rungs(strue, {0: lists0, 1: refined})
+    return reduce(DataFrame.unionByName, [
+        rung.select(
+            F.lit(rnd).cast("long").alias("round"),
+            F.lit(_Q232_M).cast("long").alias("m"),
+            F.lit(_Q272_C).cast("long").alias("c"),
+            "n_true",
+            "edge_recall",
         )
-        frames.append(
-            nt.crossJoin(F.broadcast(h)).select(
-                F.lit(rnd).cast("long").alias("round"),
-                F.lit(_Q232_M).cast("long").alias("m"),
-                F.lit(_Q272_C).cast("long").alias("c"),
-                F.col("nt").cast("long").alias("n_true"),
-                F.round(
-                    F.col("h").cast("double")
-                    / F.greatest(F.col("nt"), F.lit(1))
-                    + F.lit(1e-9),
-                    6,
-                ).alias("edge_recall"),
-            )
-        )
-    return reduce(lambda a, b: a.unionByName(b), frames)
+        for rnd, rung in rungs.items()
+    ])
 
 
 _Q278_ORACLE_TEMPLATE = (
