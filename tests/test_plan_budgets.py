@@ -311,6 +311,17 @@ BUDGETS = [
      "CartesianProduct"]),
     ("q263_streaming_cdc_index", 1, ["BroadcastHashJoin"],
      ["SortMergeJoin", "CartesianProduct"]),
+    # Graph-walk serves on the shared hop kernel: every walk hop runs at
+    # checkpoint time, so the final plan is the last bounded-candidate
+    # broadcast scoring pass + its rank window (q258: + the recall tail
+    # and the 1-row audit crossJoins). Budgets are the final-plan counts
+    # before the walks moved onto the kernel.
+    ("q255_graph_tombstone_serve", 1, [], ["CartesianProduct"]),
+    ("q256_graph_delete_repair", 1, [], ["CartesianProduct"]),
+    ("q257_streaming_graph_insert", 1, [], ["CartesianProduct"]),
+    ("q258_hnsw_multilayer", 5, [], ["CartesianProduct"]),
+    ("q264_streaming_graph_cdc", 1, [], ["CartesianProduct"]),
+    ("q265_hnsw_level_insert", 1, [], ["CartesianProduct"]),
 
 ]
 

@@ -388,6 +388,70 @@ def test_graph_ann_recall_beats_unbridged(spark, sf_dir):
     assert row["avg_recall"] >= 0.7
 
 
+def test_fused_walk_matches_each_rung_walked_alone(spark, sf_dir, monkeypatch):
+    # The fused ladders (q235/q240/q250) walk every rung in ONE per-hop
+    # job, tagged by __rung. Each rung's candidate set and per-query
+    # recall must equal that rung walked alone (q232's form): no row may
+    # cross rungs, and the per-rung width must bind per rung.
+    from wetsa_cams_solrad_timeseries_spark.plans import vector
+
+    s = vector._q232_setup(spark, sf_dir)
+    walks = []
+    walk = vector._walk
+
+    def recording_walk(*args):
+        walks.append(walk(*args))
+        return walks[-1]
+
+    monkeypatch.setattr(vector, "_walk", recording_walk)
+    fused_perq = vector._q232_perq_recall_multi(
+        s, [(4, s.edges, 4), (8, s.edges, 8)]
+    ).collect()
+    monkeypatch.undo()
+    (fused,) = walks
+    fused_cand = fused.collect()
+
+    solo_cands = {}
+    for beam in (4, 8):
+        solo = walk(s.va, s.qv, s.entry, s.edges, beam, vector._Q232_HOPS)
+        solo_cands[beam] = sorted(
+            (r["query_id"], r["node"]) for r in solo.collect()
+        )
+        assert sorted(
+            (r["query_id"], r["node"]) for r in fused_cand if r["__rung"] == beam
+        ) == solo_cands[beam]
+        solo_perq = sorted(
+            (r["query_id"], r["recall"])
+            for r in vector._perq_recall(s, solo, s.qids).collect()
+        )
+        assert len(solo_perq) == vector._Q232_NQ
+        assert sorted(
+            (r["query_id"], r["recall"]) for r in fused_perq if r["__rung"] == beam
+        ) == solo_perq
+    # The two widths reach different candidate sets, so a fused walk that
+    # applied one width to both rungs would fail above.
+    assert solo_cands[4] != solo_cands[8]
+
+
+# q258's Spark jobs at sf0.001: the highest of three runs (93, 93, 93)
+# before its greedy and beam walks moved onto the shared hop kernel. The
+# kernel must not add a job per hop.
+_Q258_MAX_JOBS = 93
+
+
+def test_q258_job_count_pinned(spark, sf_dir, count_jobs):
+    from wetsa_cams_solrad_timeseries_spark.plans.vector import (
+        q258_hnsw_multilayer,
+    )
+
+    rows = []
+    jobs = count_jobs(
+        lambda: rows.extend(q258_hnsw_multilayer(spark, sf_dir).collect())
+    )
+    assert len(rows) == 1 and rows[0]["avg_recall"] >= 0.7
+    assert jobs <= _Q258_MAX_JOBS, f"q258 submitted {jobs} jobs"
+
+
 def test_q235_ladder_pick_is_minimal_met_rung(spark, sf_dir):
     # q235's structural contract: one audit row per ladder rung; at most
     # one row is picked; the picked rung IS the cheapest met one; and

@@ -551,26 +551,24 @@ def q256_graph_delete_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes over survivors by construction), under the SAME
     full-history-trained centroid literals (frozen means frozen):
     repair ≡ rebuild, checked end to end at the serve surface."""
-    from pyspark.sql import Window
-
-    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
-        to_double_array,
-    )
     from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
         cell_knn_edges_incremental,
         cell_medoids,
-        ivf_assign,
-        l2sq_cols,
     )
     from wetsa_cams_solrad_timeseries_spark.plans.vector import (
-        _DIM,
         _Q197_QBOUND,
         _Q232_BEAM,
         _Q232_HOPS,
         _Q232_K,
         _Q232_M,
+        _entry,
         _medoid_bridges,
+        _nearest,
+        _query_vectors,
+        _served,
         _sym_edges,
+        _vectors,
+        _walk,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -674,53 +672,11 @@ def q256_graph_delete_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Serve: q238's beam over the repaired graph, entry at the repaired
     # hub of each query's nearest cell.
     q_bound = (F.col("vec_id") < _Q197_QBOUND) & is_new
-    entry0 = (
-        probes.filter(F.col("probe_rank") == 0)
-        .join(emb.filter(q_bound).select("vec_id"), on="vec_id", how="semi")
-        .join(F.broadcast(med_df), on="cell")
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("medoid").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    qv = va.join(
-        emb.filter(q_bound).select("vec_id"), on="vec_id", how="semi"
-    ).select(F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv"))
-
-    def with_dist(cdf: DataFrame) -> DataFrame:
-        j = cdf.join(F.broadcast(qv), on="query_id")
-        return va.join(
-            F.broadcast(j), on=F.col("vec_id") == F.col("node")
-        ).select(
-            "query_id",
-            "node",
-            l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
-        )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("node")
-    )
-    cand = entry0
-    for _ in range(_Q232_HOPS):
-        beam = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= _Q232_BEAM)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = beam.join(edges_r, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-    return (
-        with_dist(cand)
-        .filter(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _Q232_K)
-        .select("query_id", F.col("node").alias("neighbor_id"), "rank")
-    )
+    va = _vectors(emb)
+    qv = _query_vectors(va, q_bound)
+    entry = _entry(probes, med_df, q_bound)
+    cand = _walk(va, qv, entry, edges_r, _Q232_BEAM, _Q232_HOPS)
+    return _nearest(_served(va, qv, cand), _Q232_K)
 
 
 def q256_oracle_for(sf_dir: str) -> str | None:
@@ -1538,8 +1494,6 @@ def q264_streaming_graph_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: q255's — q238's one-pass batch replay with the takedown
     exclusion at the rank tail. Stream-maintained CDC state ≡ the
     batch-built, batch-deleted index at the serve surface."""
-    from pyspark.sql import Window
-
     from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
         to_double_array,
     )
@@ -1548,18 +1502,22 @@ def q264_streaming_graph_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_medoids,
         ivf_assign,
         ivf_train_centroids,
-        l2sq_cols,
     )
     from wetsa_cams_solrad_timeseries_spark.plans.vector import (
-        _DIM,
         _Q197_QBOUND,
         _Q232_BEAM,
         _Q232_BRIDGE,
         _Q232_HOPS,
         _Q232_K,
         _Q232_M,
+        _entry,
         _medoid_bridges,
+        _nearest,
+        _query_vectors,
+        _served,
         _sym_edges,
+        _vectors,
+        _walk,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming.graph_insert_stream import (
         streaming_graph_insert,
@@ -1592,69 +1550,23 @@ def q264_streaming_graph_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     probes_all = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    q_bound = F.col("vec_id") < _Q197_QBOUND
-    entry0 = (
-        probes_all.filter(F.col("probe_rank") == 0)
-        .join(emb.filter(is_new & q_bound).select("vec_id"), on="vec_id",
-              how="semi")
-        .join(F.broadcast(med_df), on="cell")
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("medoid").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    q_bound = is_new & (F.col("vec_id") < _Q197_QBOUND)
+    entry = _entry(probes_all, med_df, q_bound)
 
     directed = base_knn.unionByName(new_knn).unionByName(
         _medoid_bridges(probes_all, med_df)
     )
     edges = _sym_edges(directed).localCheckpoint(eager=True)
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    qv = va.join(
-        emb.filter(is_new & q_bound).select("vec_id"), on="vec_id", how="semi"
-    ).select(F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv"))
-
-    def with_dist(cdf: DataFrame) -> DataFrame:
-        j = cdf.join(F.broadcast(qv), on="query_id")
-        return va.join(
-            F.broadcast(j), on=F.col("vec_id") == F.col("node")
-        ).select(
-            "query_id",
-            "node",
-            l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
-        )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("node")
+    va = _vectors(emb)
+    qv = _query_vectors(va, q_bound)
+    cand = _walk(va, qv, entry, edges, _Q232_BEAM, _Q232_HOPS)
+    # mark-delete: the drained tombstones exclude RESULTS only.
+    served = _served(va, qv, cand).join(
+        F.broadcast(tombs.select(F.col("vec_id").alias("node"))),
+        on="node",
+        how="left_anti",
     )
-    cand = entry0
-    for _ in range(_Q232_HOPS):
-        beam = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= _Q232_BEAM)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = beam.join(edges, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-    served = (
-        with_dist(cand)
-        .filter(F.col("node") != F.col("query_id"))
-        # mark-delete: the drained tombstones exclude RESULTS only.
-        .join(
-            F.broadcast(tombs.select(F.col("vec_id").alias("node"))),
-            on="node",
-            how="left_anti",
-        )
-    )
-    return (
-        served
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _Q232_K)
-        .select("query_id", F.col("node").alias("neighbor_id"), "rank")
-    )
+    return _nearest(served, _Q232_K)
 
 
 Q264_ORACLE = None  # LAZY — q255's oracle (stream-CDC ≡ batch mark-delete)

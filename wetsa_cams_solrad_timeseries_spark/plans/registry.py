@@ -51,12 +51,13 @@ from wetsa_cams_solrad_timeseries_spark.plans._spec import QuerySpec
 # MUST be pinned ahead of the automatic rotation so their fresh row
 # lands on the changed code.
 _PIN_FIRST = (
-    # The NN-descent and graph-drain family now builds on one set of
-    # shared kernels (vector._descent_base, _medoid_bridges, _sym_edges,
-    # the exact/capped rounds over _refine_topm, _sample_truth,
-    # _recall_rungs) instead of a hand-written copy per query. Outputs
-    # must be unchanged; the pins put a fresh correctness row on every
-    # query whose build moved onto them. The _q232_setup consumers
+    # The graph family walks through shared kernels: every beam and
+    # greedy walk runs on vector._walk with one entry pick, scorer,
+    # nearest-k tail and recall tail, over builds from the shared
+    # descent kernels (_descent_base, _medoid_bridges, _sym_edges, the
+    # exact/capped rounds, _sample_truth, _recall_rungs). Outputs must be
+    # unchanged; the pins put a fresh correctness row on every query
+    # whose walk or build moved onto them. The _q232_setup consumers
     # first, then the descent rounds, then the insert/delete graphs and
     # the stream drains.
     "q232_graph_ann_recall",
@@ -71,6 +72,7 @@ _PIN_FIRST = (
     "q272_capped_descent_ladder",
     "q274_capped_descent_sla",
     "q238_incremental_graph_ann",
+    "q255_graph_tombstone_serve",
     "q256_graph_delete_repair",
     "q257_streaming_graph_insert",
     "q264_streaming_graph_cdc",

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import math
 import os
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -4350,6 +4352,156 @@ def _recall_rungs(strue: DataFrame, lists: dict) -> dict:
 
 
 # --------------------------------------------------------------------------
+# Graph-walk kernels: one entry pick, one scorer, one nearest-k tail, one
+# hop loop and one recall tail for every beam and greedy walk in the family
+# --------------------------------------------------------------------------
+
+
+def _entry(probes: DataFrame, med: DataFrame, qpred) -> DataFrame:
+    """(query_id, node): each query's walk entry — the medoid of its
+    nearest cell (probe_rank 0), HNSW's upper-layer walk collapsed to
+    one literal-centroid step. ``qpred`` reads only ``vec_id``, so it
+    filters the probe table directly. Checkpointed: the first hop reads
+    the entry set twice (score + union)."""
+    return (
+        probes.filter((F.col("probe_rank") == 0) & qpred)
+        .join(F.broadcast(med), on="cell")
+        .select(F.col("vec_id").alias("query_id"), F.col("medoid").alias("node"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _query_vectors(va: DataFrame, qpred) -> DataFrame:
+    """(query_id, __qv): the query side of :func:`_scored`."""
+    return va.filter(qpred).select(
+        F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv")
+    )
+
+
+def _scored(va: DataFrame, qv: DataFrame, cand: DataFrame) -> DataFrame:
+    """``cand``'s columns (query_id, node and any tags) plus ``dist``,
+    the exact round6 L2 from the query vector (``qv``) to the node's
+    (``va``, the :func:`_vectors` frame)."""
+    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
+        l2sq_cols,
+    )
+
+    # The candidate set is bounded — O(hops·beam·degree) per query in a
+    # walk, the screen depth in q242/q243's rerank — so broadcast it
+    # (with its query vectors) into the corpus-vector scan and the corpus
+    # never shuffles. NOT spread_for_scoring'd: this is an equi-join
+    # (corpus hash-probed by the broadcast candidate set), so its per-row
+    # work is a hash lookup, not |Q| distance folds — A-B measured the
+    # spread+checkpoint variant SLOWER on q232 (4.1 -> 5.9 s at sf0.1).
+    j = cand.join(F.broadcast(qv), on="query_id")
+    return va.join(F.broadcast(j), on=F.col("vec_id") == F.col("node")).select(
+        *cand.columns,
+        l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
+    )
+
+
+def _served(va: DataFrame, qv: DataFrame, cand: DataFrame) -> DataFrame:
+    """:func:`_scored` without each query's own node: a query is never
+    its own result."""
+    return _scored(va, qv, cand).filter(F.col("node") != F.col("query_id"))
+
+
+def _nearest(scored: DataFrame, k) -> DataFrame:
+    """(keys…, neighbor_id, rank): the ``k`` nearest scored nodes per
+    key, ranked by (dist, node) — the oracles' deterministic tie-break.
+    The keys are ``scored``'s columns besides node and dist: query_id,
+    plus __rung in the fused form. ``k`` may be a Column (the fused
+    walk's per-rung width)."""
+    from pyspark.sql import Window
+
+    keys = [c for c in scored.columns if c not in ("node", "dist")]
+    w = Window.partitionBy(*keys).orderBy(F.col("dist").asc(), F.col("node"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            *keys,
+            F.col("node").alias("neighbor_id"),
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+
+
+def _walk(
+    va: DataFrame,
+    qv: DataFrame,
+    entry: DataFrame,
+    edges: DataFrame,
+    width,
+    hops: int,
+) -> DataFrame:
+    """The family's hop loop — every beam and greedy walk. Each hop
+    scores the accumulated candidate set, keeps the ``width`` nearest
+    per key (width 1 is HNSW's greedy upper-layer walk), expands their
+    out-edges and unions the reached nodes in. The keys are ``entry``'s
+    columns besides node (query_id, plus __rung in the fused form); the
+    edge join keys are ``edges``' columns besides dst (src, plus
+    __rung). Fixed hops + round6 + (dist, node) ties make the walk
+    deterministic and its oracle an unrolled CTE-per-hop replay.
+    Returns the checkpointed candidate set (keys…, node)."""
+    keys = [c for c in entry.columns if c != "node"]
+    on = [c for c in edges.columns if c != "dst"]
+    cand = entry
+    for _ in range(hops):
+        beam = _nearest(_scored(va, qv, cand), width).select(
+            *keys, F.col("neighbor_id").alias("src")
+        )
+        expand = beam.join(edges, on=on).select(
+            *keys, F.col("dst").alias("node")
+        )
+        # Each hop consumes the accumulated set TWICE (score + union)
+        # and the set is bounded (≤ |Q|·(1 + hops·width·degree) rows),
+        # so checkpoint per hop — lineage otherwise doubles per hop (the
+        # q208 shared-subtree discipline applied to an iterative plan,
+        # the q192 pagerank lesson).
+        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
+    return cand
+
+
+def _descend(
+    va: DataFrame, qv: DataFrame, entry: DataFrame, edges: DataFrame
+) -> DataFrame:
+    """One HNSW upper-layer step: a greedy (width 1) walk of
+    ``_Q258_GHOPS`` hops over the layer's ``edges``; the best node
+    visited — checkpointed — is the entry one layer down."""
+    cand = _walk(va, qv, entry, edges, 1, _Q258_GHOPS)
+    return (
+        _nearest(_scored(va, qv, cand), 1)
+        .select("query_id", F.col("neighbor_id").alias("node"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _perq_recall(setup, cand: DataFrame, qids: DataFrame) -> DataFrame:
+    """Per-query recall@k rows (keys…, recall) of a walk's candidate set
+    against the q232 setup's checkpointed exact baseline: the ``k``
+    nearest candidates other than the query itself are served and
+    matched against the exact top-k. ``qids`` holds every key once (each
+    query, once per rung in the fused form) and is LEFT-joined, so a
+    query or rung with no hit still scores 0."""
+    served = _nearest(_served(setup.va, setup.qv, cand), _Q232_K)
+    keys = [c for c in served.columns if c not in ("neighbor_id", "rank")]
+    hits = (
+        setup.exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("h"))
+    )
+    return qids.join(F.broadcast(hits), on=keys, how="left").select(
+        *keys,
+        F.round(
+            F.coalesce("h", F.lit(0)).cast("double") / _Q232_K + F.lit(1e-9),
+            6,
+        ).alias("recall"),
+    )
+
+
+# --------------------------------------------------------------------------
 # q232 — graph ANN (NSW-style beam search), the last index family, priced
 # --------------------------------------------------------------------------
 
@@ -4388,8 +4540,9 @@ def q232_graph_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, so search cost is O(hops · beam · degree) per query — the
     property that makes graph ANN the highest-recall serving family at
     scale. The quadratic Σ|cell|² lives ONLY in the build."""
-    perq = _q232_perq_recall(_q232_setup(spark, sf_dir), _Q232_BEAM)
-    return perq.agg(
+    s = _q232_setup(spark, sf_dir)
+    cand = _walk(s.va, s.qv, s.entry, s.edges, _Q232_BEAM, _Q232_HOPS)
+    return _perq_recall(s, cand, s.qids).agg(
         F.lit(_Q232_M).cast("long").alias("m"),
         F.lit(_Q232_BRIDGE).cast("long").alias("n_bridges"),
         F.lit(_Q232_BEAM).cast("long").alias("beam"),
@@ -4400,234 +4553,108 @@ def q232_graph_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q232_setup(spark: SparkSession, sf_dir: str):
-    """Build the q232 graph artifacts once — (checkpointed entry set,
-    checkpointed edge table, bounded-candidate scorer, rank window,
-    checkpointed exact baseline) — shared by q232 (one beam width) and
-    q235 (the beam ladder), so the Σ|cell|² build is paid once per
-    call no matter how many widths are measured. The edge table is
-    :func:`_descent_base`'s checkpointed graph, read once per hop."""
-    from pyspark.sql import Window
+class _Q232Setup(NamedTuple):
+    """The q232 graph artifacts, built once per call by
+    :func:`_q232_setup` and shared by every walk over them."""
 
+    emb: DataFrame
+    entry: DataFrame  # (query_id, node), checkpointed — see _entry
+    edges: DataFrame  # _descent_base's checkpointed graph (src, dst)
+    exact: DataFrame  # (query_id, neighbor_id) exact top-k, checkpointed
+    qids: DataFrame  # exact's distinct query_id — the recall universe
+    bridges: DataFrame
+    cents: list
+    med: DataFrame
+    probes: DataFrame
+    va: DataFrame  # _vectors(emb)
+    qv: DataFrame  # _query_vectors(va, vec_id < _Q232_NQ)
+
+
+def _q232_setup(spark: SparkSession, sf_dir: str) -> _Q232Setup:
+    """Build the q232 graph artifacts once — shared by q232 (one beam
+    width), the fused ladders (q235, q240, q250) and the hierarchy
+    walks (q258, q273), so the Σ|cell|² build is paid once per call no
+    matter how many widths, graphs or layers are measured. The edge
+    table is :func:`_descent_base`'s checkpointed graph, read once per
+    hop. The checkpointed ``bridges`` let q240/q250 rewire the SAME
+    build with NN-descent without re-paying Σ|cell|²; the quantizer-side
+    parts (cents, med, probes) let q258/q273 erect the sparse upper
+    layers on the SAME build."""
     from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
         brute_force_topk_l2,
-        l2sq_cols,
     )
 
-    emb, cents, med, probes, knn, bridges, edges = _descent_base(spark, sf_dir)
-
+    emb, cents, med, probes, _knn, bridges, edges = _descent_base(spark, sf_dir)
     qpred = F.col("vec_id") < _Q232_NQ
-    entry = (
-        probes.filter((F.col("probe_rank") == 0) & qpred)
-        .join(F.broadcast(med), on="cell")
-        .select(F.col("vec_id").alias("query_id"), F.col("medoid").alias("node"))
-    )
-
-    # NOT spread_for_scoring'd: with_dist is an equi-join (corpus hash-
-    # probed by the broadcast candidate set), so its per-row work is a
-    # hash lookup, not |Q| distance folds — A-B measured the spread+
-    # checkpoint variant SLOWER on q232 (4.1 -> 5.9 s at sf0.1).
-    va = _vectors(emb)
-    qv = va.filter(qpred).select(
-        F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv")
-    )
-
-    def with_dist(cdf: DataFrame) -> DataFrame:
-        # Candidate set is O(hops·beam·degree) per query — broadcast it
-        # (with its query vectors) into the corpus-vector scan so the
-        # corpus never shuffles.
-        j = cdf.join(F.broadcast(qv), on="query_id")
-        return (
-            va.join(F.broadcast(j), on=F.col("vec_id") == F.col("node"))
-            .select(
-                "query_id",
-                "node",
-                l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
-            )
-        )
-
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("node"))
-    entry0 = entry.distinct().localCheckpoint(eager=True)
+    entry = _entry(probes, med, qpred)
     exact = (
         brute_force_topk_l2(emb, emb.filter(qpred), k=_Q232_K, dim=_DIM)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)  # reused by every measured beam
     )
-    # Trailing build parts (checkpointed knn, bridges) let q240 rewire
-    # the SAME build with NN-descent without re-paying Σ|cell|²; the
-    # quantizer-side parts (cents, med, probes) let q258 erect the
-    # sparse upper layer on the SAME build; the vector frames (va, qv)
-    # let the fused multi-rung traversal score with the same kernel.
-    # _q232_perq_recall unpacks only the first five.
-    return (
-        entry0, edges, with_dist, w, exact,
-        knn, bridges, cents, med, probes, va, qv,
+    va = _vectors(emb)
+    return _Q232Setup(
+        emb=emb,
+        entry=entry,
+        edges=edges,
+        exact=exact,
+        qids=exact.select("query_id").distinct(),
+        bridges=bridges,
+        cents=cents,
+        med=med,
+        probes=probes,
+        va=va,
+        qv=_query_vectors(va, qpred),
     )
 
 
-def _q232_perq_recall(setup, beam_width: int) -> DataFrame:
-    """The fixed-hop beam traversal + per-query recall at one beam
-    width, over the shared q232 artifacts — the measured unit of the
-    q235 ladder."""
-    entry0, edges, with_dist, w, exact = setup[:5]
-    # Each hop consumes the accumulated set TWICE (score + union) and
-    # the set is bounded (≤ |Q|·(1 + hops·beam·degree) rows), so
-    # checkpoint per hop — lineage otherwise doubles per hop (the q208
-    # shared-subtree discipline applied to an iterative plan, the q192
-    # pagerank lesson).
-    cand = entry0
-    for _ in range(_Q232_HOPS):
-        beam = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= beam_width)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = beam.join(edges, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = (
-            cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-        )
+def _q232_perq_recall_multi(setup: _Q232Setup, rungs) -> DataFrame:
+    """FUSED multi-rung walk + per-query recall: every rung (a (key,
+    edge-table, beam-width) triple sharing the q232 entry set and exact
+    baseline) advances through the SAME per-hop job of :func:`_walk`,
+    tagged by a ``__rung`` column — so the ladder pays ``hops``
+    localCheckpoint jobs TOTAL instead of ``rungs × hops`` (the
+    round-13 "shared-subtree restructure" deferral, landed with its
+    equivalence argument).
 
-    served = (
-        with_dist(cand)
-        .filter(F.col("node") != F.col("query_id"))
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= _Q232_K)
-        .select("query_id", F.col("node").alias("neighbor_id"))
-    )
-    hits = (
-        exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(F.broadcast(hits), on="query_id", how="left")
-        .select(
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q232_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall")
-        )
-    )
+    Per-rung results are bit-identical to walking each rung alone (the
+    q232 form, tests/test_serving_sla.py checks it): the rank window
+    partitions by (__rung, query_id) — row_number within each rung's
+    group sees exactly the rows the per-rung window saw; the
+    candidate-set distinct and the edge expansion both key on __rung,
+    so no row of one rung can reach another; the distance kernel is the
+    identical :func:`_scored` expression per (query, node) pair.
+    Returns perq rows (__rung, query_id, recall)."""
 
+    def tagged(df: DataFrame, key) -> DataFrame:
+        return df.select(F.lit(key).cast("int").alias("__rung"), *df.columns)
 
-def _q232_perq_recall_multi(setup, rungs) -> DataFrame:
-    """FUSED multi-rung form of :func:`_q232_perq_recall`: every rung
-    (a (key, edge-table, beam-width) triple sharing the q232 entry set
-    and exact baseline) advances through the SAME per-hop job, tagged by
-    a ``__rung`` column — so the ladder pays ``hops`` localCheckpoint
-    jobs TOTAL instead of ``rungs × hops`` (the round-13 "shared-subtree
-    restructure" deferral, landed with its equivalence argument).
+    def union(dfs):
+        return reduce(DataFrame.unionByName, dfs)
 
-    Per-rung results are bit-identical to running the single-rung
-    traversal per rung: the rank window partitions by (__rung, query_id)
-    — row_number within each rung's group sees exactly the rows the
-    per-rung window saw; the candidate-set distinct and the edge
-    expansion both key on __rung, so no row of one rung can reach
-    another; the distance kernel is the identical l2sq_cols expression
-    per (query, node) pair. Returns perq rows (__rung, recall).
-    """
-    from pyspark.sql import Window
-
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        l2sq_cols,
-    )
-
-    entry0, exact = setup[0], setup[4]
-    va, qv = setup[10], setup[11]
-
-    edges_u = None
-    cand = None
-    beam_col = None
-    for key, edges, beam in rungs:
-        e = edges.select(
-            F.lit(key).cast("int").alias("__rung"), "src", "dst"
-        )
-        c0 = entry0.select(
-            F.lit(key).cast("int").alias("__rung"), "query_id", "node"
-        )
-        edges_u = e if edges_u is None else edges_u.unionByName(e)
-        cand = c0 if cand is None else cand.unionByName(c0)
+    width = None
+    for key, _, beam in rungs:
         cond = F.col("__rung") == key
-        beam_col = (
+        width = (
             F.when(cond, F.lit(beam))
-            if beam_col is None
-            else beam_col.when(cond, F.lit(beam))
+            if width is None
+            else width.when(cond, F.lit(beam))
         )
-
-    w = Window.partitionBy("__rung", "query_id").orderBy(
-        F.col("dist").asc(), F.col("node")
+    cand = _walk(
+        setup.va,
+        setup.qv,
+        union([tagged(setup.entry, key) for key, _, _ in rungs]),
+        union([tagged(edges, key) for key, edges, _ in rungs]),
+        width,
+        _Q232_HOPS,
     )
-
-    def with_dist_m(cdf: DataFrame) -> DataFrame:
-        # Same bounded-candidate broadcast shape as the single-rung
-        # with_dist — the candidate set is ≤ rungs·|Q|·(1+hops·beam·deg)
-        # rows, still broadcast-sized; the corpus never shuffles.
-        j = cdf.join(F.broadcast(qv), on="query_id")
-        return va.join(
-            F.broadcast(j), on=F.col("vec_id") == F.col("node")
-        ).select(
-            "__rung",
-            "query_id",
-            "node",
-            l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
-        )
-
-    for _ in range(_Q232_HOPS):
-        beam_df = (
-            with_dist_m(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= beam_col)
-            .select("__rung", "query_id", F.col("node").alias("src"))
-        )
-        expand = beam_df.join(edges_u, on=["__rung", "src"]).select(
-            "__rung", "query_id", F.col("dst").alias("node")
-        )
-        cand = (
-            cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-        )
-
-    served = (
-        with_dist_m(cand)
-        .filter(F.col("node") != F.col("query_id"))
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= _Q232_K)
-        .select("__rung", "query_id", F.col("node").alias("neighbor_id"))
-    )
-    hits = (
-        exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
-        .groupBy("__rung", "query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    qids = exact.select("query_id").distinct()
-    qr = None
-    for key, _, _ in rungs:
-        t = qids.select(
-            F.lit(key).cast("int").alias("__rung"), "query_id"
-        )
-        qr = t if qr is None else qr.unionByName(t)
-    return (
-        qr.join(F.broadcast(hits), on=["__rung", "query_id"], how="left")
-        .select(
-            "__rung",
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q232_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall"),
-        )
-        # Every caller aggregates this frame once PER RUNG; without a
-        # checkpoint each of those consumers re-runs the final fused
-        # scoring pass over the union candidate set (rungs × consumers
-        # rung-units of scoring — measured as a 1.8× REGRESSION on q240
-        # before this line). The frame is tiny (rungs × |Q| rows).
-        .localCheckpoint(eager=True)
-    )
+    qids = union([tagged(setup.qids, key) for key, _, _ in rungs])
+    # Every caller aggregates this frame once PER RUNG; without a
+    # checkpoint each of those consumers re-runs the final fused
+    # scoring pass over the union candidate set (rungs × consumers
+    # rung-units of scoring — measured as a 1.8× REGRESSION on q240
+    # before this line). The frame is tiny (rungs × |Q| rows).
+    return _perq_recall(setup, cand, qids).localCheckpoint(eager=True)
 
 
 _Q232_L2 = (
@@ -4846,7 +4873,7 @@ def q235_graph_ann_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     # baseline; only the beam width differs — see _q232_perq_recall_multi
     # for the bit-identity argument.
     perq_all = _q232_perq_recall_multi(
-        setup, [(b, setup[1], b) for b in _Q235_LADDER]
+        setup, [(b, setup.edges, b) for b in _Q235_LADDER]
     )
     rows = None
     for b in _Q235_LADDER:
@@ -5150,18 +5177,12 @@ def q238_incremental_graph_ann(
     literals — history kNN among history, new kNN against all
     cell-mates, one uniform bridge formula (valid because the medoids
     are frozen), the unrolled beam — incremental ≡ batch."""
-    from pyspark.sql import Window
-
-    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
-        to_double_array,
-    )
     from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
         cell_knn_edges,
         cell_knn_edges_incremental,
         cell_medoids,
         ivf_assign,
         ivf_train_centroids,
-        l2sq_cols,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -5255,41 +5276,11 @@ def q238_incremental_graph_ann(
 
     # --- serve: q232's fixed-hop beam for the new-shard queries ---
     q_bound = F.col("vec_id") < _Q197_QBOUND
-    entry0 = (
-        probes_new.filter((F.col("probe_rank") == 0) & q_bound)
-        .join(F.broadcast(med_df), on="cell")
-        .select(F.col("vec_id").alias("query_id"), F.col("medoid").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    qv = va.filter(is_new & q_bound).select(
-        F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv")
-    )
-
-    def with_dist(cdf: DataFrame) -> DataFrame:
-        j = cdf.join(F.broadcast(qv), on="query_id")
-        return va.join(F.broadcast(j), on=F.col("vec_id") == F.col("node")).select(
-            "query_id",
-            "node",
-            l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
-        )
-
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("node"))
-    cand = entry0
-    for _ in range(_Q232_HOPS):
-        beam = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= _Q232_BEAM)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = beam.join(edges, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-    served = with_dist(cand).filter(F.col("node") != F.col("query_id"))
+    va = _vectors(emb)
+    qv = _query_vectors(va, is_new & q_bound)
+    entry = _entry(probes_new, med_df, q_bound)
+    cand = _walk(va, qv, entry, edges, _Q232_BEAM, _Q232_HOPS)
+    served = _served(va, qv, cand)
     if tombstones is not None:
         # hnswlib markDelete semantics (q255): tombstoned nodes keep
         # ROUTING — the beam above traverses them freely, so deleting a
@@ -5301,12 +5292,7 @@ def q238_incremental_graph_ann(
             on="node",
             how="left_anti",
         )
-    return (
-        served
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _Q232_K)
-        .select("query_id", F.col("node").alias("neighbor_id"), "rank")
-    )
+    return _nearest(served, _Q232_K)
 
 
 # The incremental graph's batch replay: assignment of ALL nodes under the
@@ -5599,9 +5585,9 @@ def q240_refined_graph_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     the refine round + BOTH unrolled beam chains (tagged hop CTEs over
     `edges` and the rewired `g1`) in one statement."""
     setup = _q232_setup(spark, sf_dir)
-    edges, bridges, va = setup[1], setup[6], setup[10]
-    refined = _nn_descent_round(va, edges, _Q232_M)
-    edges_r = _sym_edges(refined.unionByName(bridges)).localCheckpoint(
+    edges = setup.edges
+    refined = _nn_descent_round(setup.va, edges, _Q232_M)
+    edges_r = _sym_edges(refined.unionByName(setup.bridges)).localCheckpoint(
         eager=True  # consumed once per hop of the refined traversal
     )
 
@@ -5875,9 +5861,6 @@ def q242_pca_ann_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold-projected coordinates, the same screen/rerank/recall algebra."""
     from pyspark.sql import Window
 
-    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
-        to_double_array,
-    )
     from wetsa_cams_solrad_timeseries_spark.operators.decomposition import (
         pca_fit,
         pca_project_batches,
@@ -5915,22 +5898,12 @@ def q242_pca_ann_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
     )
 
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    qv = va.filter(qpred).select(
-        F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv")
-    )
-    rerank = (
-        va.join(
-            F.broadcast(cand.join(F.broadcast(qv), on="query_id")),
-            on=F.col("vec_id") == F.col("neighbor_id"),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
-        )
-    )
+    va = _vectors(emb)
+    rerank = _scored(
+        va,
+        _query_vectors(va, qpred),
+        cand.withColumnRenamed("neighbor_id", "node"),
+    ).withColumnRenamed("node", "neighbor_id")
     wd = Window.partitionBy("query_id").orderBy(
         F.col("dist").asc(), F.col("neighbor_id")
     )
@@ -6093,9 +6066,6 @@ def q243_pca_screen_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit records whichever is true."""
     from pyspark.sql import Window
 
-    from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
-        to_double_array,
-    )
     from wetsa_cams_solrad_timeseries_spark.operators.decomposition import (
         pca_fit,
         pca_project_batches,
@@ -6127,22 +6097,14 @@ def q243_pca_screen_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rr", F.row_number().over(wr))
         .filter(F.col("rr") <= max(_Q243_LADDER))
     )
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    qv = va.filter(qpred).select(
-        F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv")
-    )
+    va = _vectors(emb)
     rerank = (
-        va.join(
-            F.broadcast(cand.join(F.broadcast(qv), on="query_id")),
-            on=F.col("vec_id") == F.col("neighbor_id"),
+        _scored(
+            va,
+            _query_vectors(va, qpred),
+            cand.select("query_id", F.col("neighbor_id").alias("node"), "rr"),
         )
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rr",
-            l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
-        )
+        .withColumnRenamed("node", "neighbor_id")
         .localCheckpoint(eager=True)  # one rank filter per rung
     )
     exact = (
@@ -6547,13 +6509,11 @@ def q250_descent_depth_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the shared graph CTEs + both refine rounds + three tagged
     beam unrolls + the ladder/pick algebra in one statement."""
     setup = _q232_setup(spark, sf_dir)
-    base_edges, bridges, va = setup[1], setup[6], setup[10]
-
-    graphs = {0: base_edges}
-    g = base_edges
+    graphs = {0: setup.edges}
+    g = setup.edges
     for r in range(1, _Q239_ROUNDS + 1):
-        refined = _nn_descent_round(va, g, _Q232_M)
-        g = _sym_edges(refined.unionByName(bridges)).localCheckpoint(
+        refined = _nn_descent_round(setup.va, g, _Q232_M)
+        g = _sym_edges(refined.unionByName(setup.bridges)).localCheckpoint(
             eager=True  # serve traversal + next round's expansion
         )
         graphs[r] = g
@@ -7758,8 +7718,6 @@ def q257_streaming_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges-written-last commit gates handle at-least-once re-execution;
     at 100 TB the generations become a cell-partitioned edge table and
     touched-cell reads prune by partition."""
-    from pyspark.sql import Window
-
     from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
         to_double_array,
     )
@@ -7768,7 +7726,6 @@ def q257_streaming_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_medoids,
         ivf_assign,
         ivf_train_centroids,
-        l2sq_cols,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming.graph_insert_stream import (
         streaming_graph_insert,
@@ -7798,17 +7755,8 @@ def q257_streaming_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     probes_all = ivf_assign(emb, cents, n_probe=1 + _Q232_BRIDGE)
-    q_bound = F.col("vec_id") < _Q197_QBOUND
-    entry0 = (
-        probes_all.filter(F.col("probe_rank") == 0)
-        .join(emb.filter(is_new & q_bound).select("vec_id"), on="vec_id",
-              how="semi")
-        .join(F.broadcast(med_df), on="cell")
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("medoid").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    q_bound = is_new & (F.col("vec_id") < _Q197_QBOUND)
+    entry = _entry(probes_all, med_df, q_bound)
 
     # Assemble the full graph exactly as q238 does (base + bridges are
     # node-local / frozen-hub derived — order-independent by nature).
@@ -7816,44 +7764,10 @@ def q257_streaming_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         _medoid_bridges(probes_all, med_df)
     )
     edges = _sym_edges(directed).localCheckpoint(eager=True)
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    qv = va.join(
-        emb.filter(is_new & q_bound).select("vec_id"), on="vec_id", how="semi"
-    ).select(F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv"))
-
-    def with_dist(cdf: DataFrame) -> DataFrame:
-        j = cdf.join(F.broadcast(qv), on="query_id")
-        return va.join(
-            F.broadcast(j), on=F.col("vec_id") == F.col("node")
-        ).select(
-            "query_id",
-            "node",
-            l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
-        )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("node")
-    )
-    cand = entry0
-    for _ in range(_Q232_HOPS):
-        beam = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= _Q232_BEAM)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = beam.join(edges, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-    return (
-        with_dist(cand)
-        .filter(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _Q232_K)
-        .select("query_id", F.col("node").alias("neighbor_id"), "rank")
-    )
+    va = _vectors(emb)
+    qv = _query_vectors(va, q_bound)
+    cand = _walk(va, qv, entry, edges, _Q232_BEAM, _Q232_HOPS)
+    return _nearest(_served(va, qv, cand), _Q232_K)
 
 
 Q257_ORACLE = None  # LAZY — q238's oracle verbatim (stream ≡ batch insert)
@@ -7865,6 +7779,33 @@ Q257_ORACLE = None  # LAZY — q238's oracle verbatim (stream ≡ batch insert)
 
 _Q258_GHOPS = 3  # greedy (beam=1) hops on the upper layer
 _Q258_L1_MOD, _Q258_L1_RES = 7, 3  # ~14% sparse upper-layer membership
+
+
+def _hnsw_layer(s: _Q232Setup, lvl: int):
+    """Layer ``lvl`` ≥ 1 of the hierarchy on the q232 build: the nodes
+    with ``vec_id % 7^lvl == _Q273_RES[lvl]`` plus every cell medoid
+    (pinned, so the entry step stays well-defined and the layer stays
+    connected), wired with the SAME construction restricted to the
+    layer — within-cell kNN over its members + medoid bridges,
+    symmetrized. Returns (member ids, edges), both checkpointed: the ids
+    feed the membership joins and the audit count, the edges are read
+    once per hop."""
+    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
+        cell_knn_edges,
+    )
+
+    ids = (
+        s.emb.filter(F.col("vec_id") % _Q258_L1_MOD**lvl == _Q273_RES[lvl])
+        .select("vec_id")
+        .unionByName(s.med.select(F.col("medoid").alias("vec_id")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    knn = cell_knn_edges(
+        s.emb.join(ids, on="vec_id", how="semi"), s.cents, m=_Q232_M
+    )
+    bridges = _medoid_bridges(s.probes.join(ids, on="vec_id", how="semi"), s.med)
+    return ids, _sym_edges(knn.unionByName(bridges)).localCheckpoint(eager=True)
 
 
 def q258_hnsw_multilayer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7896,90 +7837,15 @@ def q258_hnsw_multilayer(spark: SparkSession, sf_dir: str) -> DataFrame:
     in relative terms; the greedy walk adds hops·1·degree bounded rows
     per query. Oracle: the shared graph CTEs + the layer-1 CTEs + the
     greedy chain (hop CTEs at beam=1) + the beam chain, unrolled."""
-    setup = _q232_setup(spark, sf_dir)
-    entry0, edges, with_dist, w, exact = setup[:5]
-    cents, med, probes = setup[7], setup[8], setup[9]
-
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        cell_knn_edges,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    l1_ids = (
-        emb.filter(F.col("vec_id") % _Q258_L1_MOD == _Q258_L1_RES)
-        .select("vec_id")
-        .unionByName(med.select(F.col("medoid").alias("vec_id")))
-        .distinct()
-        .localCheckpoint(eager=True)  # membership + the audit count
-    )
-    l1_emb = emb.join(l1_ids, on="vec_id", how="semi")
-    knn1 = cell_knn_edges(l1_emb, cents, m=_Q232_M)
-    bridges1 = _medoid_bridges(
-        probes.join(l1_ids, on="vec_id", how="semi"), med
-    )
-    edges1 = _sym_edges(knn1.unionByName(bridges1)).localCheckpoint(eager=True)
-
-    # Greedy upper-layer walk (beam = 1) from the medoid entry.
-    cand = entry0
-    for _ in range(_Q258_GHOPS):
-        best = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= 1)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = best.join(edges1, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-    e0 = (
-        with_dist(cand)
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("query_id", "node")
-        .localCheckpoint(eager=True)
-    )
-
-    # Layer-0 beam from the refined entry — q232's loop unchanged.
-    cand = e0
-    for _ in range(_Q232_HOPS):
-        beam = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= _Q232_BEAM)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = beam.join(edges, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-    served = (
-        with_dist(cand)
-        .filter(F.col("node") != F.col("query_id"))
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= _Q232_K)
-        .select("query_id", F.col("node").alias("neighbor_id"))
-    )
-    hits = (
-        exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    perq = (
-        exact.select("query_id")
-        .distinct()
-        .join(F.broadcast(hits), on="query_id", how="left")
-        .select(
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q232_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall")
-        )
-    )
+    s = _q232_setup(spark, sf_dir)
+    l1_ids, edges1 = _hnsw_layer(s, 1)
+    # Greedy upper-layer walk from the medoid entry; the best node found
+    # seeds the layer-0 beam — q232's walk unchanged.
+    entry = _descend(s.va, s.qv, s.entry, edges1)
+    cand = _walk(s.va, s.qv, entry, s.edges, _Q232_BEAM, _Q232_HOPS)
     n_l1 = l1_ids.agg(F.count(F.lit(1)).cast("long").alias("n_l1"))
     return (
-        perq.agg(
+        _perq_recall(s, cand, s.qids).agg(
             F.lit(_Q232_M).cast("long").alias("m"),
             F.lit(_Q258_GHOPS).cast("long").alias("g_hops"),
             F.lit(_Q232_BEAM).cast("long").alias("beam"),
@@ -8160,8 +8026,6 @@ def q265_hnsw_level_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the layer-1 state is ~1/7 of the layer-0 state and
     its per-batch blocks are (|batch ∩ L1 ∩ cell| × |cell ∩ L1|) —
     the geometric-layer argument, now paid incrementally."""
-    from pyspark.sql import Window
-
     from wetsa_cams_solrad_timeseries_spark.functions.arrays import (
         to_double_array,
     )
@@ -8170,7 +8034,6 @@ def q265_hnsw_level_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_medoids,
         ivf_assign,
         ivf_train_centroids,
-        l2sq_cols,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming.graph_insert_stream import (
         streaming_graph_insert_many,
@@ -8229,17 +8092,8 @@ def q265_hnsw_level_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    q_bound = F.col("vec_id") < _Q197_QBOUND
-    entry0 = (
-        probes_all.filter(F.col("probe_rank") == 0)
-        .join(emb.filter(is_new & q_bound).select("vec_id"), on="vec_id",
-              how="semi")
-        .join(F.broadcast(med_df), on="cell")
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("medoid").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    q_bound = is_new & (F.col("vec_id") < _Q197_QBOUND)
+    entry = _entry(probes_all, med_df, q_bound)
 
     def build_edges(knn_parts, member_ids=None):
         probes = probes_all
@@ -8254,63 +8108,12 @@ def q265_hnsw_level_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges0 = build_edges([knn0_h, new_knn0])
     edges1 = build_edges([knn1_h, new_knn1], member_ids=l1_all_ids)
 
-    v = to_double_array(F.col("embedding"))
-    va = emb.select("vec_id", v.alias("__v"))
-    qv = va.join(
-        emb.filter(is_new & q_bound).select("vec_id"), on="vec_id", how="semi"
-    ).select(F.col("vec_id").alias("query_id"), F.col("__v").alias("__qv"))
-
-    def with_dist(cdf: DataFrame) -> DataFrame:
-        j = cdf.join(F.broadcast(qv), on="query_id")
-        return va.join(
-            F.broadcast(j), on=F.col("vec_id") == F.col("node")
-        ).select(
-            "query_id",
-            "node",
-            l2sq_cols(F.col("__qv"), F.col("__v"), _DIM).alias("dist"),
-        )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("node")
-    )
-    cand = entry0
-    for _ in range(_Q258_GHOPS):
-        best = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= 1)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = best.join(edges1, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-    e0 = (
-        with_dist(cand)
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("query_id", "node")
-        .localCheckpoint(eager=True)
-    )
-    cand = e0
-    for _ in range(_Q232_HOPS):
-        beam = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= _Q232_BEAM)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = beam.join(edges0, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-    return (
-        with_dist(cand)
-        .filter(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _Q232_K)
-        .select("query_id", F.col("node").alias("neighbor_id"), "rank")
-    )
+    va = _vectors(emb)
+    qv = _query_vectors(va, q_bound)
+    # Greedy walk on layer 1; the best node found seeds the layer-0 beam.
+    entry = _descend(va, qv, entry, edges1)
+    cand = _walk(va, qv, entry, edges0, _Q232_BEAM, _Q232_HOPS)
+    return _nearest(_served(va, qv, cand), _Q232_K)
 
 
 _Q265_ORACLE_TEMPLATE = f"""
@@ -8929,102 +8732,21 @@ def q273_hnsw_log_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms; each greedy walk adds hops·1·degree bounded candidate rows
     per query. Oracle: the shared graph CTEs + per-layer build CTEs +
     three unrolled walk chains (greedy L2 → greedy L1 → beam L0)."""
-    setup = _q232_setup(spark, sf_dir)
-    entry0, edges, with_dist, w, exact = setup[:5]
-    cents, med, probes = setup[7], setup[8], setup[9]
-
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        cell_knn_edges,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    layer_edges: dict[int, DataFrame] = {}
-    layer_n: dict[int, DataFrame] = {}
-    for lvl in range(1, _Q273_LEVELS + 1):
-        mod = _Q258_L1_MOD ** lvl
-        l_ids = (
-            emb.filter(F.col("vec_id") % mod == _Q273_RES[lvl])
-            .select("vec_id")
-            .unionByName(med.select(F.col("medoid").alias("vec_id")))
-            .distinct()
-            .localCheckpoint(eager=True)  # membership + the audit count
-        )
-        l_emb = emb.join(l_ids, on="vec_id", how="semi")
-        knn_l = cell_knn_edges(l_emb, cents, m=_Q232_M)
-        bridges_l = _medoid_bridges(
-            probes.join(l_ids, on="vec_id", how="semi"), med
-        )
-        layer_edges[lvl] = _sym_edges(
-            knn_l.unionByName(bridges_l)
-        ).localCheckpoint(eager=True)
-        layer_n[lvl] = l_ids.agg(
-            F.count(F.lit(1)).cast("long").alias(f"n_l{lvl}")
-        )
+    s = _q232_setup(spark, sf_dir)
+    layers = {lvl: _hnsw_layer(s, lvl) for lvl in range(1, _Q273_LEVELS + 1)}
 
     # Top-down descent: greedy walk per layer, best node seeds the next.
-    entry = entry0
+    entry = s.entry
     for lvl in range(_Q273_LEVELS, 0, -1):
-        cand = entry
-        for _ in range(_Q258_GHOPS):
-            best = (
-                with_dist(cand)
-                .withColumn("r", F.row_number().over(w))
-                .filter(F.col("r") <= 1)
-                .select("query_id", F.col("node").alias("src"))
-            )
-            expand = best.join(layer_edges[lvl], on="src").select(
-                "query_id", F.col("dst").alias("node")
-            )
-            cand = (
-                cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-            )
-        entry = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") == 1)
-            .select("query_id", "node")
-            .localCheckpoint(eager=True)
-        )
-
-    # Layer-0 beam from the refined entry — q232's loop unchanged.
-    cand = entry
-    for _ in range(_Q232_HOPS):
-        beam = (
-            with_dist(cand)
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= _Q232_BEAM)
-            .select("query_id", F.col("node").alias("src"))
-        )
-        expand = beam.join(edges, on="src").select(
-            "query_id", F.col("dst").alias("node")
-        )
-        cand = cand.unionByName(expand).distinct().localCheckpoint(eager=True)
-    served = (
-        with_dist(cand)
-        .filter(F.col("node") != F.col("query_id"))
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= _Q232_K)
-        .select("query_id", F.col("node").alias("neighbor_id"))
-    )
-    hits = (
-        exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    perq = (
-        exact.select("query_id")
-        .distinct()
-        .join(F.broadcast(hits), on="query_id", how="left")
-        .select(
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q232_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall")
-        )
-    )
+        entry = _descend(s.va, s.qv, entry, layers[lvl][1])
+    # Layer-0 beam from the refined entry — q232's walk unchanged.
+    cand = _walk(s.va, s.qv, entry, s.edges, _Q232_BEAM, _Q232_HOPS)
+    layer_n = {
+        lvl: ids.agg(F.count(F.lit(1)).cast("long").alias(f"n_l{lvl}"))
+        for lvl, (ids, _) in layers.items()
+    }
     return (
-        perq.agg(
+        _perq_recall(s, cand, s.qids).agg(
             F.lit(_Q232_M).cast("long").alias("m"),
             F.lit(_Q258_GHOPS).cast("long").alias("g_hops"),
             F.lit(_Q232_BEAM).cast("long").alias("beam"),
