@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 from wetsa_cams_solrad_timeseries_spark.pipelines.compare import run_compare
 from wetsa_cams_solrad_timeseries_spark.pipelines.compile import compile_solar
 from wetsa_cams_solrad_timeseries_spark.pipelines.ingest import (
-    aggregate_to_10min,
     distributed_fetch,
     fetch_tasks,
+    resample_file,
 )
 from wetsa_cams_solrad_timeseries_spark.sinks.netcdf import (
     to_dense_pandas,
@@ -78,17 +78,11 @@ def test_expert_csv_reader(spark, tmp_path):
     got = sdf.agg(F.sum("GHI"), F.count("GHI")).first()
     assert got[1] == pdf["GHI"].notna().sum()
     assert got[0] == pytest.approx(pdf["GHI"].sum(), rel=1e-9)
-    # A multi-file scan parses every file with one declared schema, so a
-    # file whose header differs is refused rather than misaligned.
-    other = tmp_path / "raw_1min_TestSt_clear.csv"
-    other.write_text("# Observation period;GHI\n")
-    with pytest.raises(ValueError, match="header differs"):
-        read_expert_csv(spark, [str(p), str(other)])
 
 
-def test_ingest_aggregate_matches_pandas_resample(spark, tmp_path):
+def test_ingest_aggregate_matches_pandas_resample(tmp_path):
     p = make_raw_expert_csv(tmp_path / "raw_1min_TestSt_observed_cloud.csv")
-    got = aggregate_to_10min(spark, str(p)).toPandas()
+    got = resample_file(str(p))
     pdf = read_expert_pandas(p)
     exp = (
         pdf.set_index("time")
@@ -222,7 +216,7 @@ def test_processed_csv_sink_roundtrip(spark, tmp_path):
     from wetsa_cams_solrad_timeseries_spark.pipelines.ingest import write_processed_csv
 
     p = make_raw_expert_csv(tmp_path / "raw_1min_X_observed_cloud.csv", minutes=120)
-    agg = aggregate_to_10min(spark, str(p))
+    agg = spark.createDataFrame(resample_file(str(p)))
     out = tmp_path / "csv_out"
     write_processed_csv(agg, str(out))
     parts = list(out.glob("part-*.csv"))
@@ -459,11 +453,11 @@ def _assert_matches_resample(csv_path, raw_path):
 
 
 def test_run_ingest_batched_edge_cases(spark, tmp_path):
-    """All files go through one aggregation plan: each good file keeps its
-    own time range, gaps and grid (Spaced overlaps Early's gap, so a
-    borrowed bucket would show as a value where pandas has NaN), a
-    header-less file fails only its own row, and a file with no data rows
-    still gets a header-only CSV with the full column list."""
+    """Files fetched in one job are resampled in their own tasks: each good
+    file keeps its own time range, gaps and grid (Spaced overlaps Early's
+    gap, so a borrowed bucket would show as a value where pandas has NaN),
+    a header-less file fails only its own row, and a file with no data
+    rows still gets a header-only CSV with the full column list."""
     spaced_dir = tmp_path / "raw dir with space"
     spaced_dir.mkdir()
     good = {
@@ -502,10 +496,10 @@ def test_run_ingest_batched_edge_cases(spark, tmp_path):
     assert len(header_only) == 0
 
 
-def test_run_ingest_splits_a_failed_shared_scan(spark, tmp_path):
-    """A file whose header peeks fine but whose scan raises (plain text
-    under a gzip name) fails the shared scan; the files are then scanned
-    one by one, so only that file's row is failed."""
+def test_run_ingest_isolates_an_unreadable_file(spark, tmp_path):
+    """A file whose header peeks fine but whose rows cannot be read (plain
+    text under a gzip name) fails only its own task row; the other tasks
+    of the same job still write their CSVs."""
     files = {
         "A": make_raw_expert_csv(tmp_path / "raw_a.csv", minutes=60, seed=4),
         "Bad": make_raw_expert_csv(tmp_path / "raw_bad.csv.gz", minutes=60, seed=5),
@@ -522,9 +516,46 @@ def test_run_ingest_splits_a_failed_shared_scan(spark, tmp_path):
         )
 
 
+def test_processed_csv_equals_pandas_resample_exactly(spark, tmp_path):
+    """The processed CSV run_ingest writes is exactly the reference's
+    ``resample('10min').mean()``: a non-numeric cell is NaN (not a parse
+    failure), and a row whose ``Observation period`` does not parse is
+    dropped, not bucketed."""
+    raw = make_raw_expert_csv(tmp_path / "raw_odd.csv", minutes=45, seed=8)
+    lines = raw.read_text().splitlines()
+    first = lines[3].split(";")
+    first[EXPERT_COLS.index("GHI")] = "n/a-sensor"
+    lines[3] = ";".join(first)
+    lines.insert(20, ";".join(["not-a-time/also-not"] + ["999.0"] * 11))
+    raw.write_text("\n".join(lines) + "\n")
+
+    res, out = _ingest_files(spark, tmp_path, {"Odd/observed_cloud": raw})
+    assert res.loc["Odd", "ok"]
+    got = pd.read_csv(out / "processed_10min_Odd_observed_cloud.csv",
+                      parse_dates=["time"], float_precision="round_trip")
+
+    pdf = pd.read_csv(raw, comment="#", sep=";", header=None, names=EXPERT_COLS)
+    start = pdf.pop("Observation period").str.split("/").str[0]
+    time = pd.to_datetime(start, errors="coerce").rename("time")
+    exp = (
+        pdf.apply(pd.to_numeric, errors="coerce")
+        .set_index(time)[time.notna().to_numpy()]
+        .resample("10min").mean().reset_index()
+    )
+    assert exp["GHI"].notna().all() and len(exp) == 5
+    pd.testing.assert_frame_equal(got, exp, check_exact=True)
+
+
+# run_ingest's Spark jobs under count_jobs, the locations read and the
+# task-table read-back included: the highest of three runs (5, 5, 5)
+# with EP1 as one map-only job.
+_INGEST_MAX_JOBS = 5
+
+
 def test_run_ingest_jobs_do_not_grow_with_files(spark, tmp_path, count_jobs):
-    """The aggregation is one plan over all files: 6 files submit as many
-    Spark jobs as 2 (a per-file job chain would add jobs per file)."""
+    """EP1 is one map-only job over the task table: 6 files submit as many
+    Spark jobs as 2 (a per-file job chain would add jobs per file), and no
+    more than the pinned count."""
     def jobs_for(n_stations, sky_types):
         root = tmp_path / f"n{n_stations * len(sky_types)}"
         root.mkdir()
@@ -539,7 +570,9 @@ def test_run_ingest_jobs_do_not_grow_with_files(spark, tmp_path, count_jobs):
         assert len(list((root / "processed").glob("*.csv"))) == len(raw)
         return jobs
 
-    assert jobs_for(2, ("observed_cloud",)) == jobs_for(3, ("clear", "observed_cloud"))
+    two = jobs_for(2, ("observed_cloud",))
+    assert two == jobs_for(3, ("clear", "observed_cloud"))
+    assert two <= _INGEST_MAX_JOBS
 
 
 def test_dense_partitioned_export_roundtrip(spark, tmp_path):

@@ -139,10 +139,14 @@ def test_hnsw_log_layers_nested_and_comparable(spark, sf_dir):
         q273_hnsw_log_layers,
     )
 
-    for lvl in (1, 2):
-        assert _Q273_RES[lvl] % (_Q258_L1_MOD ** (lvl - 1) if lvl > 1 else 1) >= 0
-    # r2 ≡ r1 (mod 7) makes membership nested
-    assert _Q273_RES[2] % _Q258_L1_MOD == _Q273_RES[1]
+    # Layer l holds the ids with vec_id % 7**l == _Q273_RES[l]: over an id
+    # range, every L2 id is an L1 id, and L2 is a strict subset.
+    ids = range(20 * _Q258_L1_MOD**2)
+    layer = {
+        lvl: {v for v in ids if v % _Q258_L1_MOD**lvl == _Q273_RES[lvl]}
+        for lvl in (1, 2)
+    }
+    assert layer[2] and layer[2] < layer[1]
     row = q273_hnsw_log_layers(spark, sf_dir).collect()[0]
     assert row["n_l2"] < row["n_l1"]
     assert row["avg_recall"] > 0.5

@@ -73,41 +73,10 @@ def test_grouped_tumbling_mean_counts(spark):
     )
 
 
-def test_grouped_dense_grid_keeps_groups_apart(spark):
-    """Two groups with disjoint time ranges: each gets its own inclusive
-    grid (first to last bucket of that group), and no bucket of one group
-    takes a value from the other."""
-    pdf = _fixture_pdf()
-    pdf["station"] = "A"
-    late = _fixture_pdf()
-    late["time"] = late["time"] + pd.Timedelta(hours=5, minutes=3)
-    late["ghi"] = late["ghi"] + 1000.0
-    late["station"] = "B"
-    both = pd.concat([pdf, late], ignore_index=True)
-    sdf = spark.createDataFrame(both)
-    agg = tumbling_mean(sdf, ts_col="time", value_cols=["ghi"], group_cols=["station"])
-    grid = time_grid(
-        agg, lo=F.min("bucket_start"), hi=F.max("bucket_start"), group_cols=["station"]
-    )
-    dense = (
-        with_dense_grid(agg, grid, group_cols=["station"])
-        .orderBy("station", "bucket_start")
-        .toPandas()
-    )
-    assert list(dense.columns) == ["station", "bucket_start", "ghi"]
-    for station, part in both.groupby("station"):
-        exp = part.set_index("time")["ghi"].resample("10min").mean()
-        got = dense[dense["station"] == station]
-        assert list(got["bucket_start"]) == list(exp.index)
-        np.testing.assert_allclose(
-            got["ghi"].to_numpy(), exp.to_numpy(), rtol=1e-12, equal_nan=True
-        )
-
-
 def test_ungrouped_grid_plan_is_unchanged(spark):
-    """With no group_cols, time_grid and with_dense_grid build exactly the
-    ungrouped plan (a global aggregate and a join on the bucket alone), so
-    q12_dense_grid's plan does not move."""
+    """time_grid and with_dense_grid build exactly the ungrouped plan (a
+    global aggregate and a join on the bucket alone), so q12_dense_grid's
+    plan does not move."""
     import re
 
     sdf = spark.createDataFrame(_fixture_pdf())

@@ -4,10 +4,12 @@ event log enabled, then break its time down by job/stage from the log.
 Usage: python tools/profile_query.py <sf_dir> <query> [query ...]
 
 For each query: two passes (the second is the steady-state one — split
-artifacts, JIT, and session warmup are paid in the first), then a
-job-by-job table from the event log: submission gaps (driver/planning
-time between jobs), stage execution time, task time sums, and the
-top stages by wall clock. This is the guide-§1 "empirical" loop for a
+artifacts, JIT, and session warmup are paid in the first), each pass's
+Janino compile count and generated-source KB (on a small box most
+first-pass CPU is JIT and Janino compilation), then a job-by-job table
+from the event log: submission gaps (driver/planning time between
+jobs), stage execution time, task time sums, and the top stages by wall
+clock. This is the guide-§1 "empirical" loop for a
 headless harness: the event log carries the same numbers the UI shows.
 """
 
@@ -19,6 +21,18 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _codegen(spark) -> tuple[int, float]:
+    """(Janino compiles, generated source KB) so far in this JVM, read
+    from Spark's ``CodegenMetrics`` histograms. The KB is the sum of the
+    source-size samples, so it is exact only while the histogram's
+    reservoir (1028 samples) holds every compile; past that it is NaN."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    size = cm.METRIC_SOURCE_CODE_SIZE()
+    snap = size.getSnapshot()
+    kb = sum(snap.getValues()) / 1024 if snap.size() == size.getCount() else float("nan")
+    return cm.METRIC_COMPILATION_TIME().getCount(), kb
 
 
 def main() -> None:
@@ -44,9 +58,11 @@ def main() -> None:
     for name in names:
         spec = QUERIES[name]
         spark.catalog.clearCache()
+        c0 = _codegen(spark)
         t0 = time.time()
         spec.fn(spark, sf_dir).count()
         t1 = time.time()
+        c1 = _codegen(spark)
         spark.sparkContext.setJobDescription(None)
         spark.sparkContext.setLocalProperty("profile.marker", name)
         import gc
@@ -57,13 +73,18 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"__MARK__{name}")
         spark.range(1).count()
         spark.sparkContext.setJobDescription(None)
+        c2 = _codegen(spark)
         t2 = time.time()
         spec.fn(spark, sf_dir).count()
         t3 = time.time()
+        c3 = _codegen(spark)
         spark.sparkContext.setJobDescription(f"__MARK__end_{name}")
         spark.range(1).count()
         spark.sparkContext.setJobDescription(None)
         print(f"\n=== {name}: pass1 {t1 - t0:.2f}s  pass2 {t3 - t2:.2f}s")
+        for label, (n0, kb0), (n1, kb1) in (("pass1", c0, c1), ("pass2", c2, c3)):
+            print(f"    {label} janino: {n1 - n0} compiles, "
+                  f"{kb1 - kb0:.1f} KB generated source")
 
     spark.stop()
     time.sleep(1.0)

@@ -38,10 +38,10 @@ def tumbling_mean(
     """Per-bucket NaN-skipping mean of ``value_cols``, keyed by
     ``group_cols`` + the tumbling window over ``ts_col``.
 
-    The reference's per-file loop becomes a group key — EP1 keys on the
-    source file of each row (``pipelines.ingest.aggregate_files``) — so
-    every file is aggregated in one distributed plan instead of N
-    sequential pandas runs (SURVEY.md §2.5 A1).
+    A per-entity loop becomes a group key (q02 keys on ``event_type``),
+    so every group is aggregated in one distributed plan instead of N
+    sequential pandas runs (SURVEY.md §2.5 A1). EP1 resamples each file
+    in pandas inside its fetch task (``pipelines.ingest.resample_file``).
     """
     aggs = [F.avg(c).alias(c) for c in value_cols]
     if counts:
@@ -64,20 +64,15 @@ def time_grid(
     hi: F.Column | str,
     width: str = "10 minutes",
     bucket_col: str = "bucket_start",
-    group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """DataFrame of bucket starts from ``lo`` to ``hi`` inclusive, step
-    ``width``, one grid per ``group_cols`` group (a single grid by
-    default). ``lo``/``hi`` are aggregate expressions over ``df`` (e.g.
-    min/max of the raw timestamp floored to the bucket), evaluated per
-    group, so groups with disjoint ranges get disjoint grids."""
+    """One-column DataFrame of bucket starts from ``lo`` to ``hi``
+    inclusive, step ``width``. ``lo``/``hi`` are aggregate expressions over
+    ``df`` (e.g. min/max of the raw timestamp floored to the bucket)."""
     lo_c = F.col(lo) if isinstance(lo, str) else lo
     hi_c = F.col(hi) if isinstance(hi, str) else hi
     return (
-        df.groupBy(*group_cols)
-        .agg(lo_c.alias("__lo"), hi_c.alias("__hi"))
+        df.agg(lo_c.alias("__lo"), hi_c.alias("__hi"))
         .select(
-            *group_cols,
             F.explode(
                 F.sequence("__lo", "__hi", F.expr(f"INTERVAL {width}"))
             ).alias(bucket_col)
@@ -90,7 +85,6 @@ def with_dense_grid(
     grid_df: DataFrame,
     bucket_col: str = "bucket_start",
     fill_zero_cols: Sequence[str] = (),
-    group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Left-join the (sparse) window aggregate onto the dense grid so empty
     buckets appear as null rows — pandas ``resample`` parity
@@ -100,10 +94,8 @@ def with_dense_grid(
     null, matching pandas NaN. The aggregate side is post-aggregation (one
     row per bucket) so this join is trivially broadcastable when the grid
     spans less than years; Catalyst/AQE picks broadcast automatically.
-    With ``group_cols`` the join matches on (group, bucket), so a bucket
-    never borrows another group's row.
     """
-    out = grid_df.join(agg_df, on=[*group_cols, bucket_col], how="left")
+    out = grid_df.join(agg_df, on=bucket_col, how="left")
     for c in fill_zero_cols:
         out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
     return out

@@ -3,16 +3,16 @@
 Reference flow per (station × sky_type): HTTP fetch → expert-CSV parse →
 1-min → 10-min tumbling mean → CSV out. 70 sequential driver iterations.
 
-Spark-first restructuring:
+Spark-first restructuring — EP1 is one map-only Spark job:
 - the fetch fan-out (O1) becomes a partitioned ``mapInPandas`` over the
   (station × sky_type) task table, with per-task error capture (O2) — a
   cluster downloads in parallel, a failed station yields an error row
   instead of killing the job;
-- the aggregation (A1) is ONE Spark plan over every fetched file: the
-  shared ``tumbling_mean`` operator keyed by each row's source file, with
-  a per-file dense-grid reindex so outputs match pandas ``resample``
-  bucket-for-bucket, including empty buckets. It is collected once and
-  split per file on the driver — no thread pool, no per-file job chain;
+- the aggregation (A1) runs in the task that fetched the file: the
+  per-file kernel ``resample_file`` is the reference's pandas
+  ``resample('10min').mean()``, so outputs match it bucket-for-bucket,
+  empty buckets included. Each task writes its own CSV; no aggregate row
+  passes through the driver, and there is no shuffle and no extra scan;
 - the CSV sink keeps one file per (station, sky_type) for reference
   compatibility; the scale-native sink is partitioned Parquet
   (``write_parquet_partitioned``), replacing the reference's
@@ -22,24 +22,16 @@ Spark-first restructuring:
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator, Sequence
-from urllib.parse import unquote, urlparse
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from wetsa_cams_solrad_timeseries_spark.functions.scalar import interval_start
-from wetsa_cams_solrad_timeseries_spark.operators.window_agg import (
-    time_grid,
-    tumbling_mean,
-    with_dense_grid,
+from wetsa_cams_solrad_timeseries_spark.functions.scalar import (
+    sanitize_filename_str,
 )
-from wetsa_cams_solrad_timeseries_spark.sources.expert_csv import (
-    peek_header,
-    read_expert_csv,
-)
+from wetsa_cams_solrad_timeseries_spark.sources.expert_csv import peek_header
 
 SKY_TYPES = ("clear", "observed_cloud")
 
@@ -91,10 +83,6 @@ def make_cds_fetch_fn(
     reference (``raw_1min_{station}_{sky_type}.csv``) and is idempotent:
     a retried task overwrites its own file.
     """
-    from wetsa_cams_solrad_timeseries_spark.functions.scalar import (
-        sanitize_filename_str,
-    )
-
     def fetch(task: dict) -> str:
         if client_factory is not None:
             client = client_factory()
@@ -175,77 +163,29 @@ def distributed_fetch(
     return tasks.mapInPandas(run, schema=FETCH_RESULT_SCHEMA)
 
 
-# Column of ``aggregate_files`` naming each row's raw file, as the file
-# URI Spark reports (``input_file_name``); ``_local_path`` maps it back.
-SOURCE_COL = "source_file"
-
-
-def _local_path(path_or_uri: str) -> str:
-    """The absolute local path behind a path or a percent-encoded
-    ``file:`` URI, so the path a ``fetch_fn`` returned and the URI Spark
-    reports for the same file compare equal."""
-    parsed = urlparse(path_or_uri)
-    if parsed.scheme == "file":
-        path_or_uri = unquote(parsed.path)
-    return os.path.abspath(path_or_uri)
-
-
-def aggregate_files(spark: SparkSession, raw_paths: Sequence[str]) -> DataFrame:
+def resample_file(raw_path: str) -> pd.DataFrame:
     """A1 — the reference's core transform (get-cams-solrad-ts.py:47-101)
-    for every file in ``raw_paths`` in ONE plan: a multi-path expert-CSV
-    scan whose rows are tagged with their source file → bucket-start
-    timestamp → numeric projection → 10-minute NaN-skipping means keyed
-    by (source file, bucket), reindexed onto each file's own pandas-style
-    regular grid from its first to its last bucket, so no bucket is
-    borrowed from another file.
+    for one raw file, in pandas inside the task that fetched it: peek the
+    header → parse the ``;`` rows → bucket start from the text before
+    ``/`` → ``resample('10min').mean()``, empty buckets kept as NaN rows.
 
-    The files must share one header (``read_expert_csv``). Returns
-    ``SOURCE_COL`` + time + per-column means, unordered; a file with no
-    data rows has no rows here.
+    Every column but ``Observation period`` is float64, with non-numeric
+    cells as NaN (the declared-double, non-ANSI Spark parse of
+    ``read_expert_csv``); a row whose time does not parse is dropped.
+    Returns ``time`` + per-column means in time order; a file with no
+    data rows gives no rows and the full column list.
     """
-    raw = read_expert_csv(spark, raw_paths)
-    num_cols = [
-        f.name for f in raw.schema.fields if isinstance(f.dataType, T.DoubleType)
-    ]
-    with_ts = raw.select(
-        F.input_file_name().alias(SOURCE_COL),
-        interval_start("Observation period").alias("time"),
-        *num_cols,
-    ).filter(F.col("time").isNotNull())
-    agg = tumbling_mean(with_ts, ts_col="time", value_cols=num_cols,
-                        width="10 minutes", group_cols=[SOURCE_COL],
-                        bucket_col="time")
-    # A file's first and last bucket are the min/max bucket of its own
-    # aggregate, so the grid needs no bucket arithmetic.
-    grid = time_grid(agg, lo=F.min("time"), hi=F.max("time"),
-                     width="10 minutes", bucket_col="time",
-                     group_cols=[SOURCE_COL])
-    return with_dense_grid(agg, grid, bucket_col="time", group_cols=[SOURCE_COL])
-
-
-def aggregate_to_10min(spark: SparkSession, raw_path: str) -> DataFrame:
-    """``aggregate_files`` for one file: time + per-column means, ordered
-    by time like the reference CSV output."""
-    return aggregate_files(spark, [raw_path]).drop(SOURCE_COL).orderBy("time")
-
-
-def _write_processed(
-    spark: SparkSession, raw_paths: list[str], targets: dict[str, list[str]]
-) -> None:
-    """Aggregate ``raw_paths`` (one shared header) with one collect and
-    write each file's buckets, in time order, to its ``targets`` CSVs. A
-    file with no data rows gets a header-only CSV with the full column
-    list."""
-    pdf = aggregate_files(spark, raw_paths).toPandas()
-    parts = {
-        _local_path(src): part.drop(columns=SOURCE_COL).sort_values("time")
-        for src, part in pdf.groupby(SOURCE_COL, sort=False)
-    }
-    empty = pdf.drop(columns=SOURCE_COL).iloc[:0]
-    for path in raw_paths:
-        part = parts.get(_local_path(path), empty)
-        for out in targets[path]:
-            part.to_csv(out, index=False)
+    raw = pd.read_csv(raw_path, comment="#", sep=";", header=None,
+                      names=peek_header(raw_path))
+    time = pd.to_datetime(
+        raw.pop("Observation period").str.split("/").str[0], errors="coerce"
+    )
+    keep = time.notna().to_numpy()
+    values = raw.apply(pd.to_numeric, errors="coerce").astype("float64")
+    return (
+        values[keep].set_index(pd.DatetimeIndex(time[keep], name="time"))
+        .resample("10min").mean().reset_index()
+    )
 
 
 def run_ingest(
@@ -257,66 +197,41 @@ def run_ingest(
 ) -> DataFrame:
     """EP1 end-to-end (the reference's ``main()`` —
     get-cams-solrad-ts.py:104-176): read + validate the locations
-    dimension, fan the (station × sky_type) fetches out across executors,
-    aggregate every fetched raw file to 10-minute means in one Spark plan
-    (``aggregate_files``, collected once), and write one reference-shaped
-    processed CSV per task. Returns the task-result table (ok/error per
-    task) for orchestration.
+    dimension, then one map-only Spark job over the (station × sky_type)
+    task table. Each task fetches its raw file (``fetch_fn``), resamples
+    it (``resample_file``) and writes its own reference-shaped
+    ``processed_10min_{station}_{sky_type}.csv`` from the executor, so
+    only the task rows reach the driver; ``out_dir`` must be writable from
+    every executor (a shared mount on a cluster). Returns the task-result
+    table (ok/error per task) for orchestration.
 
     O2 parity: the reference's ``try/except: continue`` wraps the WHOLE
     task (download, aggregation, archive — get-cams-solrad-ts.py:140-172),
-    so aggregation/write failures here are captured per task too. Each
-    file's header is peeked on the driver (a file without one fails only
-    its own row), files that share a header are scanned together, and a
-    shared scan that raises is split into one scan per file, so a corrupt
-    raw file marks its own row failed and the rest proceed.
+    so a file that cannot be read or resampled fails only its own row,
+    with an error that starts with ``aggregate: ``.
     """
-    from wetsa_cams_solrad_timeseries_spark.functions.scalar import (
-        sanitize_filename_str,
-    )
     from wetsa_cams_solrad_timeseries_spark.operators.filters import require_columns
     from wetsa_cams_solrad_timeseries_spark.pipelines.compile import read_locations
 
     if fetch_fn is None:
         fetch_fn = make_cds_fetch_fn(out_dir)
+
+    def fetch_and_resample(task: dict) -> str:
+        raw_path = fetch_fn(task)
+        safe = sanitize_filename_str(task["station"])
+        out = os.path.join(out_dir, f"processed_10min_{safe}_{task['sky_type']}.csv")
+        try:
+            resample_file(raw_path).to_csv(out, index=False)
+        except Exception as ex:  # noqa: BLE001 — O2 per-task isolation
+            raise RuntimeError(f"aggregate: {ex}") from ex
+        return raw_path
+
     locations = read_locations(spark, locations_path)
     require_columns(locations, ["latitude", "longitude", "elevation", "station"])
-    results = distributed_fetch(fetch_tasks(locations, sky_types), fetch_fn)
-    rows = [row.asDict() for row in results.collect()]
-
-    targets: dict[str, list[str]] = {}  # raw file -> its tasks' CSVs
-    for row in rows:
-        if row["ok"]:
-            safe = sanitize_filename_str(row["station"])
-            targets.setdefault(row["output_path"], []).append(
-                os.path.join(out_dir, f"processed_10min_{safe}_{row['sky_type']}.csv")
-            )
-    errors: dict[str, str] = {}
-    by_header: dict[tuple[str, ...], list[str]] = {}
-    for path in targets:
-        try:
-            by_header.setdefault(tuple(peek_header(path)), []).append(path)
-        except (OSError, ValueError) as ex:  # O2: missing file or no header
-            errors[path] = str(ex)
-    for paths in by_header.values():
-        try:
-            _write_processed(spark, paths, targets)
-        except Exception:  # noqa: BLE001 — O2 per-task isolation
-            # One bad file fails the whole shared scan: rescan each file
-            # alone, so only the bad one's task is marked failed.
-            for path in paths:
-                try:
-                    _write_processed(spark, [path], targets)
-                except Exception as ex:  # noqa: BLE001
-                    errors[path] = str(ex)
-
-    final_rows = [
-        {**row, "ok": False, "error": f"aggregate: {errors[row['output_path']]}"}
-        if row["ok"] and row["output_path"] in errors
-        else row
-        for row in rows
-    ]
-    return spark.createDataFrame(final_rows, schema=FETCH_RESULT_SCHEMA)
+    rows = distributed_fetch(
+        fetch_tasks(locations, sky_types), fetch_and_resample
+    ).collect()
+    return spark.createDataFrame(rows, schema=FETCH_RESULT_SCHEMA)
 
 
 def write_processed_csv(df: DataFrame, path: str) -> None:

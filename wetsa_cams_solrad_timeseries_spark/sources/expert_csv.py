@@ -17,7 +17,6 @@ hand the full glob to the executor-parallel CSV scan with
 from __future__ import annotations
 
 import glob as _glob
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -66,25 +65,19 @@ def expert_csv_schema(columns: list[str]) -> T.StructType:
     )
 
 
-def read_expert_csv(spark: SparkSession, path: str | Sequence[str]) -> DataFrame:
+def read_expert_csv(spark: SparkSession, path: str) -> DataFrame:
     """Full reader: peek header → declared schema → parallel CSV scan.
 
     The scan keeps Spark's normal file-splitting/parallelism; ``comment``
     rows (including the header line) are dropped by the parser, and bad
     numeric cells coerce to null (non-ANSI), matching pandas'
-    ``errors='coerce'`` behavior downstream. A list of paths is one scan
-    over all of them; every file must carry the same header, because one
-    declared schema parses them all.
+    ``errors='coerce'`` behavior downstream.
     """
-    paths = [path] if isinstance(path, str) else list(path)
-    cols = peek_header(paths[0])
-    for other in paths[1:]:
-        if peek_header(other) != cols:
-            raise ValueError(f"{other}: header differs from {paths[0]}")
+    cols = peek_header(path)
     return (
         spark.read.option("comment", "#")
         .option("sep", ";")
         .option("header", "false")
         .schema(expert_csv_schema(cols))
-        .csv(paths)
+        .csv(path)
     )

@@ -1,9 +1,10 @@
 """Python DataSource (Spark 4 DataSource V2 extension point) for the
 CAMS expert-CSV format: ``spark.read.format("expert_csv")``.
 
-Two readers coexist deliberately:
+Two Spark readers coexist deliberately (EP1 itself uses neither: each
+fetch task parses its own file with pandas, ``pipelines.ingest.resample_file``):
 
-- ``sources/expert_csv.py::read_expert_csv`` — the PRODUCTION path:
+- ``sources/expert_csv.py::read_expert_csv`` — the native-scan reader:
   peek-header + declared schema + Spark's native executor-parallel CSV
   scan (JVM parser, file splitting, predicate pushdown on the parsed
   columns). Use this when the format maps onto a native scan.
