@@ -87,3 +87,22 @@ def test_warehouse_sweep_removes_only_dead_siblings(tmp_path, monkeypatch):
     S._sweep_dead_warehouses()
     assert not dead.exists()  # dead sibling collected
     assert mine.exists()  # our own generation untouched
+
+
+def test_core_count_defaults_to_host_cores():
+    # With SPARK_GRAFT_CPUS unset, local[N] and the shuffle partitions
+    # both take the cores this process may run on, not a fixed count.
+    import os
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from wetsa_cams_solrad_timeseries_spark import session as S; "
+         "print(S.CPUS, S.PERF_CONF['spark.sql.shuffle.partitions'])"],
+        env=env, cwd=root, capture_output=True, text=True, check=True,
+    )
+    host = str(len(os.sched_getaffinity(0)))
+    assert out.stdout.split() == [host, host]

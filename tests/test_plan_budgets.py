@@ -94,11 +94,12 @@ BUDGETS = [
     ("q208_phash_neardup", 6, [], ["CartesianProduct", "SortMergeJoin"]),
     # Incremental pHash probe: bucketed index join + final distinct.
     ("q210_incremental_phash", 4, [], ["CartesianProduct"]),
-    # Recall gates: two top-k-bounded lists + set-intersect + per-query
-    # counts; the only cross shapes are the bounded query-broadcast
-    # scorers (BNLJ-Cross on a broadcast query set, never cartesian).
-    ("q211_ann_recall_gate", 14, [], ["CartesianProduct"]),
-    ("q212_pq_recall_gate", 12, [], ["CartesianProduct"]),
+    # Recall gates: two top-k-bounded lists + the broadcast recall tail
+    # (vector._hit_recall); the only cross shapes are the bounded
+    # query-broadcast scorers (BNLJ-Cross on a broadcast query set,
+    # never cartesian), and no join sort-merges.
+    ("q211_ann_recall_gate", 14, [], ["CartesianProduct", "SortMergeJoin"]),
+    ("q212_pq_recall_gate", 12, [], ["CartesianProduct", "SortMergeJoin"]),
     # ADC screen + candidate-bounded exact rerank: the corpus pass is
     # codes-only; the rerank joins raw vectors for R*|Q| rows only.
     ("q213_pq_rerank_topk", 10, [], ["CartesianProduct"]),
@@ -106,7 +107,7 @@ BUDGETS = [
     ("q214_opq_adc_topk", 5, [], ["CartesianProduct", "SortMergeJoin"]),
     # IVF-PQ gate: q205's plan + the bounded exact-L2 baseline + a
     # set-intersect — candidate-sized everywhere past the two lists.
-    ("q215_ivfpq_recall_gate", 12, [], ["CartesianProduct"]),
+    ("q215_ivfpq_recall_gate", 12, [], ["CartesianProduct", "SortMergeJoin"]),
     # Round-11 additions.
     # Hybrid SLA serve: reads the two CHECKPOINTED rank frames (≤ DMAX
     # rows each); the fusion full-outer + final agg are the only wide
@@ -140,9 +141,9 @@ BUDGETS = [
     # Streaming quality gate: the drained survivor scan + ONE per-source
     # rollup — the filter itself ran scan-stage inside each micro-batch.
     ("q234_streaming_quality_filter", 1, [], ["CartesianProduct", "Join"]),
-    # Beam-ladder SLA: 3 rungs × q232's bounded serve tail over the
-    # shared checkpointed graph + the 3-row pick join — every exchange
-    # moves candidate-sized data only.
+    # Beam-ladder SLA: the fused walk's checkpointed per-rung recall
+    # rows, one gate aggregate over the __rung tag + the pick join —
+    # every exchange moves rung-sized data only.
     ("q235_graph_ann_sla", 26, [], ["CartesianProduct"]),
     # Streaming decontamination: drained survivor scan + ONE per-source
     # rollup — the shingle screen ran per micro-batch against the static
@@ -168,12 +169,13 @@ BUDGETS = [
     # Streaming PCA encode: the drained projected-generation scan — the
     # fold projection ran scan-stage inside each micro-batch.
     ("q249_streaming_pca_encode", 0, [], ["Join", "Python", "InPandas"]),
-    # Descent-depth SLA: 3 depths × q232's bounded serve tail over
-    # checkpointed rewired graphs + the pick crossJoin.
+    # Descent-depth SLA: q235's tail — one gate aggregate over the
+    # fused walk's checkpointed per-depth recall rows + the pick join.
     ("q250_descent_depth_sla", 26, [], ["CartesianProduct"]),
-    # Selectivity ladder: 3 rungs × (filtered cell join + serve/truth
-    # windows + recall tail) over ONE checkpointed assignment + probe
-    # pass — never an SMJ or cartesian.
+    # Selectivity ladder: every rung in ONE label-max-tagged frame —
+    # filtered cell join + serve window + recall tail + gate aggregate
+    # over ONE checkpointed assignment + probe pass and the checkpointed
+    # tagged truth — never an SMJ or cartesian.
     ("q251_filter_selectivity_ladder", 40, [],
      ["CartesianProduct", "SortMergeJoin"]),
     # Streaming quantile digest: drained generation scan + the grid-
@@ -216,10 +218,11 @@ BUDGETS = [
     # broadcast rerank + top-k windows + recall joins — never a
     # cartesian or a sort-merge join.
     ("q242_pca_ann_gate", 6, [], ["CartesianProduct", "SortMergeJoin"]),
-    # Screen-depth SLA: 3 rungs × (rank filter + recall tail) over the
-    # ONE checkpointed rerank frame + the pick crossJoin — every
-    # exchange moves candidate- or rung-sized data only.
-    ("q243_pca_screen_sla", 26, [], ["CartesianProduct", "SortMergeJoin"]),
+    # Screen-depth SLA: every rung's rank filter over the ONE
+    # checkpointed rerank frame, tagged by depth, through one nearest-k
+    # window, recall tail and gate aggregate + the pick crossJoin —
+    # every exchange moves candidate- or rung-sized data only.
+    ("q243_pca_screen_sla", 9, [], ["CartesianProduct", "SortMergeJoin"]),
     # Tuned serving: ADC screen (broadcast LUT) + broadcast candidate
     # rerank + broadcast recall joins — the corpus never shuffles.
     ("q216_ann_serving_sla", 5, [], ["CartesianProduct", "SortMergeJoin"]),

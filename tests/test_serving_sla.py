@@ -63,6 +63,66 @@ def test_pick_rerank_depth_is_a_ladder_rung():
     assert r in {10 * 2**j for j in range(10)}
 
 
+# ---------------------------------------------------------- gate kernels
+@pytest.mark.parametrize(
+    "met,picked",
+    [
+        ((False, False, False), (False, False, False)),  # no rung meets
+        ((False, True, True), (False, True, False)),  # two met: smaller dial
+    ],
+)
+def test_pick_cheapest_flags_only_the_smallest_met_dial(spark, met, picked):
+    from wetsa_cams_solrad_timeseries_spark.plans.vector import _pick_cheapest
+
+    dials = (8, 2, 4)
+    rows = spark.createDataFrame(
+        list(zip(dials, met)), "dial long, met boolean"
+    )
+    got = {
+        r["dial"]: (r["met"], r["picked"])
+        for r in _pick_cheapest(rows, "dial").collect()
+    }
+    assert got == {d: (m, p) for d, m, p in zip(dials, met, picked)}
+
+
+def test_hit_recall_scores_missed_queries_and_keeps_rungs_apart(spark):
+    from wetsa_cams_solrad_timeseries_spark.plans.vector import (
+        _gate_agg,
+        _hit_recall,
+    )
+
+    exact = spark.createDataFrame(
+        [(0, 10), (0, 11), (1, 12), (1, 13)], "query_id long, neighbor_id long"
+    )
+    # Untagged: query 1 has no served row at all, so it scores 0 and
+    # still counts as a query.
+    served = spark.createDataFrame(
+        [(0, 10, 1), (0, 99, 2)], "query_id long, neighbor_id long, rank long"
+    )
+    perq = _hit_recall(exact, served, 2)
+    assert sorted(map(tuple, perq.collect())) == [(0, 1, 0.5), (1, 0, 0.0)]
+    (gate,) = _gate_agg(perq).collect()
+    assert tuple(gate) == (2, 0.25, 0.0)
+
+    # Two rungs in one frame: rung 1 serves both of query 0's true
+    # neighbors and none of query 1's, rung 2 one of each. A hit that
+    # crossed rungs would give rung 1's query 1 a hit.
+    served = spark.createDataFrame(
+        [(1, 0, 10), (1, 0, 11), (1, 1, 98), (2, 0, 10), (2, 1, 12)],
+        "__rung int, query_id long, neighbor_id long",
+    )
+    qids = spark.createDataFrame(
+        [(r, q) for r in (1, 2) for q in (0, 1)], "__rung int, query_id long"
+    )
+    perq = _hit_recall(exact, served, 2, qids)
+    assert sorted(map(tuple, perq.collect())) == [
+        (1, 0, 2, 1.0), (1, 1, 0, 0.0), (2, 0, 1, 0.5), (2, 1, 1, 0.5)
+    ]
+    assert sorted(map(tuple, _gate_agg(perq, "__rung").collect())) == [
+        (1, 2, 0.5, 0.0), (2, 2, 0.5, 0.5)
+    ]
+
+
 # ------------------------------------------------- derived-not-hand-picked
 def _independent_recalls():
     """Recompute candidate recall per width and serving recall per depth
@@ -495,7 +555,14 @@ def test_q237_refinement_dominates_base_graph(spark, sf_dir):
     assert 0.0 <= row["recall_before"] <= row["recall_after"] <= 1.0 + 1e-9
 
 
-def test_q243_ladder_pick_is_minimal_met_rung(spark, sf_dir):
+# q243's Spark jobs at sf0.001: the highest of three runs (21, 21, 21)
+# once its depth ladder became one __rung-tagged frame (32 with one
+# recall tail and aggregate per rung). The ladder must not slip back to
+# a job per rung.
+_Q243_MAX_JOBS = 21
+
+
+def test_q243_ladder_pick_is_minimal_met_rung(spark, sf_dir, count_jobs):
     # q243's structural contract, q235's shape on the PCA screen: one
     # audit row per depth rung; recall is MONOTONE in depth (the rung
     # candidate sets are prefixes of one ranking, so a deeper screen can
@@ -507,10 +574,12 @@ def test_q243_ladder_pick_is_minimal_met_rung(spark, sf_dir):
         q243_pca_screen_sla,
     )
 
-    rows = sorted(
-        q243_pca_screen_sla(spark, sf_dir).collect(),
-        key=lambda r: r["screen_r"],
+    rows = []
+    jobs = count_jobs(
+        lambda: rows.extend(q243_pca_screen_sla(spark, sf_dir).collect())
     )
+    assert jobs <= _Q243_MAX_JOBS, f"q243 submitted {jobs} jobs"
+    rows.sort(key=lambda r: r["screen_r"])
     assert [r["screen_r"] for r in rows] == list(_Q243_LADDER)
     recalls = [r["avg_recall"] for r in rows]
     assert recalls == sorted(recalls), f"screen recall not monotone: {recalls}"

@@ -934,6 +934,7 @@ def q246_banding_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
         word_shingles,
     )
+    from wetsa_cams_solrad_timeseries_spark.plans.vector import _pick_cheapest
 
     docs = table(spark, sf_dir, "documents")
     sh = word_shingles(docs, "doc_id", "text", n=2).localCheckpoint(
@@ -977,19 +978,7 @@ def q246_banding_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = r if rows is None else rows.unionByName(r)
-    mb = rows.filter(F.col("met")).agg(F.min("bands").alias("__mb"))
-    return rows.crossJoin(F.broadcast(mb)).select(
-        "bands",
-        "rows_per_band",
-        "tau",
-        "n_true",
-        "hits",
-        "recall",
-        "met",
-        F.coalesce(
-            F.col("met") & (F.col("bands") == F.col("__mb")), F.lit(False)
-        ).alias("picked"),
-    )
+    return _pick_cheapest(rows, "bands")
 
 
 def _band_list_sql(bands: int) -> str:

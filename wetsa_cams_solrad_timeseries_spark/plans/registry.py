@@ -52,12 +52,14 @@ from wetsa_cams_solrad_timeseries_spark.plans._spec import QuerySpec
 # lands on the changed code.
 _PIN_FIRST = (
     # The graph family walks through shared kernels: every beam and
-    # greedy walk runs on vector._walk with one entry pick, scorer,
-    # nearest-k tail and recall tail, over builds from the shared
-    # descent kernels (_descent_base, _medoid_bridges, _sym_edges, the
-    # exact/capped rounds, _sample_truth, _recall_rungs). Outputs must be
-    # unchanged; the pins put a fresh correctness row on every query
-    # whose walk or build moved onto them. The _q232_setup consumers
+    # greedy walk runs on vector._walk with one entry pick, scorer and
+    # nearest-k tail, over builds from the shared descent kernels
+    # (_descent_base, _medoid_bridges, _sym_edges, the exact/capped
+    # rounds, _sample_truth, _recall_rungs), and every recall gate ends
+    # in the gate kernels (_hit_recall, _gate_agg, _pick_cheapest).
+    # Outputs must be unchanged; the pins put a fresh correctness row on
+    # every query whose walk, build or gate tail moved onto them. The
+    # _q232_setup consumers
     # first, then the descent rounds, then the insert/delete graphs and
     # the stream drains.
     "q232_graph_ann_recall",
@@ -78,9 +80,21 @@ _PIN_FIRST = (
     "q264_streaming_graph_cdc",
     "q265_hnsw_level_insert",
     "q278_streaming_capped_descent",
+    # The recall gates, SLAs and ladders whose per-query recall, gate
+    # aggregate and cheapest-rung pick moved onto vector._hit_recall,
+    # _gate_agg and _pick_cheapest (q243's depth ladder is one
+    # __rung-tagged frame now).
+    "q211_ann_recall_gate",
+    "q212_pq_recall_gate",
+    "q215_ivfpq_recall_gate",
+    "q216_ann_serving_sla",
+    "q242_pca_ann_gate",
+    "q243_pca_screen_sla",
+    "q246_banding_sla",
+    "q247_filtered_ann_gate",
+    "q251_filter_selectivity_ladder",
     # Other kernels round 14 changed that still have no correctness row
     # on the changed code.
-    "q211_ann_recall_gate",
     "q176_kcore_peel",
     "q192_pagerank_converged",
     "q71_streaming_sessions",

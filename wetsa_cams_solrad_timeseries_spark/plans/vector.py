@@ -12,7 +12,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wetsa_cams_solrad_timeseries_spark.catalog import table, ts_fix_expr
-from wetsa_cams_solrad_timeseries_spark.plans._spec import maybe_broadcast
+from wetsa_cams_solrad_timeseries_spark.plans._spec import (
+    maybe_broadcast,
+    round6,
+)
 
 _DIM = 64
 _N_PLANES, _BANDS = 16, 2
@@ -1590,25 +1593,7 @@ def q215_ivfpq_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = brute_force_topk_l2(
         emb, emb.filter(F.col("vec_id") < _Q205_NQ), k=_Q205_K, dim=_DIM
     ).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(ivfpq, on=["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(hits, on="query_id", how="left")
-        .select(
-            "query_id",
-            F.coalesce("h", F.lit(0)).cast("long").alias("hits"),
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q205_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall"),
-        )
-    )
+    return _hit_recall(exact, ivfpq, _Q205_K)
 
 
 _Q215_ORACLE_TEMPLATE = f"""
@@ -1817,31 +1802,7 @@ def q216_ann_serving_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
     )
 
-    # Both recall-arithmetic joins are k·|Q|-bounded on both sides —
-    # broadcast so the measurement adds no shuffle beyond its own aggs.
-    hits = (
-        exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    perq = (
-        exact.select("query_id")
-        .distinct()
-        .join(F.broadcast(hits), on="query_id", how="left")
-        .select(
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q216_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall")
-        )
-    )
-    agg = perq.agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-        F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
-    )
-    return agg.select(
+    return _gate_agg(_hit_recall(exact, served, _Q216_K)).select(
         F.lit(n_probe).cast("long").alias("n_probe"),
         F.lit(rerank_r).cast("long").alias("rerank_r"),
         F.lit(float(_Q216_TARGET)).alias("target"),
@@ -4010,8 +3971,6 @@ def q230_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.filter(F.col("doc_id") % _Q230_EVAL_MOD != 0).select(
         "doc_id", "source"
     )
-    from wetsa_cams_solrad_timeseries_spark.plans._spec import round6
-
     return (
         base.join(flagged, on="doc_id", how="left")
         .groupBy("source")
@@ -4352,8 +4311,9 @@ def _recall_rungs(strue: DataFrame, lists: dict) -> dict:
 
 
 # --------------------------------------------------------------------------
-# Graph-walk kernels: one entry pick, one scorer, one nearest-k tail, one
-# hop loop and one recall tail for every beam and greedy walk in the family
+# Graph-walk kernels: one entry pick, one scorer, one nearest-k tail and one
+# hop loop for every beam and greedy walk in the family; then the gate tail
+# (per-query recall, gate aggregate, cheapest-rung pick) of every recall gate
 # --------------------------------------------------------------------------
 
 
@@ -4478,27 +4438,67 @@ def _descend(
     )
 
 
-def _perq_recall(setup, cand: DataFrame, qids: DataFrame) -> DataFrame:
-    """Per-query recall@k rows (keys…, recall) of a walk's candidate set
-    against the q232 setup's checkpointed exact baseline: the ``k``
-    nearest candidates other than the query itself are served and
-    matched against the exact top-k. ``qids`` holds every key once (each
-    query, once per rung in the fused form) and is LEFT-joined, so a
-    query or rung with no hit still scores 0."""
-    served = _nearest(_served(setup.va, setup.qv, cand), _Q232_K)
+def _hit_recall(
+    exact: DataFrame, served: DataFrame, k: int, qids: DataFrame | None = None
+) -> DataFrame:
+    """Per-key recall@k rows (keys…, hits, recall) of a ``served`` list
+    against the ``exact`` top-k (query_id, neighbor_id). The keys are
+    ``served``'s columns besides neighbor_id and rank: query_id, plus
+    __rung in a tagged ladder, so no hit crosses rungs; ``exact`` may
+    carry the tag too (one truth set per rung) and is then matched on
+    it. Both lists are k·|Q|-bounded, so ``served`` is broadcast into
+    ``exact`` and the per-key hit counts into ``qids``. ``qids`` holds
+    every key once (default: ``exact``'s distinct keys) and is
+    LEFT-joined, so a key with no hit still scores 0."""
     keys = [c for c in served.columns if c not in ("neighbor_id", "rank")]
+    exact_keys = [c for c in keys if c in exact.columns]
     hits = (
-        setup.exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
+        exact.join(F.broadcast(served), on=[*exact_keys, "neighbor_id"])
         .groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("h"))
     )
+    if qids is None:
+        qids = exact.select(*exact_keys).distinct()
+    h = F.coalesce("h", F.lit(0))
     return qids.join(F.broadcast(hits), on=keys, how="left").select(
         *keys,
-        F.round(
-            F.coalesce("h", F.lit(0)).cast("double") / _Q232_K + F.lit(1e-9),
-            6,
-        ).alias("recall"),
+        h.cast("long").alias("hits"),
+        round6(h.cast("double") / k).alias("recall"),
     )
+
+
+def _gate_agg(perq: DataFrame, *by: str) -> DataFrame:
+    """The recall-gate row of per-query recall rows: (by…, n_queries,
+    avg_recall, min_recall) — one row, or one per ``by`` key (every rung
+    of a tagged ladder in one aggregate)."""
+    return perq.groupBy(*by).agg(
+        F.count(F.lit(1)).cast("long").alias("n_queries"),
+        round6(F.avg("recall")).alias("avg_recall"),
+        round6(F.min("recall")).alias("min_recall"),
+    )
+
+
+def _pick_cheapest(rows: DataFrame, dial: str) -> DataFrame:
+    """``rows`` plus ``picked``: true only on the met row with the
+    smallest ``dial`` — the cheapest rung meeting the floor; all false
+    when no rung met. The min over met rows is one broadcast 1-row
+    aggregate, which the oracles replay as a scalar subquery."""
+    cheapest = rows.filter(F.col("met")).agg(F.min(dial).alias("__min"))
+    return rows.crossJoin(F.broadcast(cheapest)).select(
+        *rows.columns,
+        F.coalesce(
+            F.col("met") & (F.col(dial) == F.col("__min")), F.lit(False)
+        ).alias("picked"),
+    )
+
+
+def _perq_recall(setup, cand: DataFrame, qids: DataFrame) -> DataFrame:
+    """Per-query recall@k rows (keys…, hits, recall) of a walk's
+    candidate set: the ``k`` nearest candidates other than the query
+    itself are served and scored by :func:`_hit_recall` against the q232
+    setup's checkpointed exact baseline."""
+    served = _nearest(_served(setup.va, setup.qv, cand), _Q232_K)
+    return _hit_recall(setup.exact, served, _Q232_K, qids)
 
 
 # --------------------------------------------------------------------------
@@ -4542,14 +4542,14 @@ def q232_graph_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale. The quadratic Σ|cell|² lives ONLY in the build."""
     s = _q232_setup(spark, sf_dir)
     cand = _walk(s.va, s.qv, s.entry, s.edges, _Q232_BEAM, _Q232_HOPS)
-    return _perq_recall(s, cand, s.qids).agg(
+    return _gate_agg(_perq_recall(s, cand, s.qids)).select(
         F.lit(_Q232_M).cast("long").alias("m"),
         F.lit(_Q232_BRIDGE).cast("long").alias("n_bridges"),
         F.lit(_Q232_BEAM).cast("long").alias("beam"),
         F.lit(_Q232_HOPS).cast("long").alias("hops"),
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-        F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
+        "n_queries",
+        "avg_recall",
+        "min_recall",
     )
 
 
@@ -4624,7 +4624,7 @@ def _q232_perq_recall_multi(setup: _Q232Setup, rungs) -> DataFrame:
     candidate-set distinct and the edge expansion both key on __rung,
     so no row of one rung can reach another; the distance kernel is the
     identical :func:`_scored` expression per (query, node) pair.
-    Returns perq rows (__rung, query_id, recall)."""
+    Returns perq rows (__rung, query_id, hits, recall)."""
 
     def tagged(df: DataFrame, key) -> DataFrame:
         return df.select(F.lit(key).cast("int").alias("__rung"), *df.columns)
@@ -4649,11 +4649,11 @@ def _q232_perq_recall_multi(setup: _Q232Setup, rungs) -> DataFrame:
         _Q232_HOPS,
     )
     qids = union([tagged(setup.qids, key) for key, _, _ in rungs])
-    # Every caller aggregates this frame once PER RUNG; without a
-    # checkpoint each of those consumers re-runs the final fused
-    # scoring pass over the union candidate set (rungs × consumers
-    # rung-units of scoring — measured as a 1.8× REGRESSION on q240
-    # before this line). The frame is tiny (rungs × |Q| rows).
+    # Every caller's gate tail reads this frame more than once (the
+    # rung rows and the pick's min, or q240's two sides); without a
+    # checkpoint each read re-runs the final fused scoring pass over the
+    # union candidate set (measured as a 1.8× REGRESSION on q240 before
+    # this line). The frame is tiny (rungs × |Q| rows).
     return _perq_recall(setup, cand, qids).localCheckpoint(eager=True)
 
 
@@ -4875,36 +4875,16 @@ def q235_graph_ann_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     perq_all = _q232_perq_recall_multi(
         setup, [(b, setup.edges, b) for b in _Q235_LADDER]
     )
-    rows = None
-    for b in _Q235_LADDER:
-        perq = perq_all.filter(F.col("__rung") == b).select("recall")
-        r = perq.agg(
-            F.count(F.lit(1)).cast("long").alias("n_queries"),
-            F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-            F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
-        ).select(
-            F.lit(b).cast("long").alias("beam"),
-            F.lit(_Q232_HOPS).cast("long").alias("hops"),
-            F.lit(_Q232_K).cast("long").alias("k"),
-            "n_queries",
-            "avg_recall",
-            "min_recall",
-            (F.col("avg_recall") >= F.lit(float(_Q235_TARGET))).alias("met"),
-        )
-        rows = r if rows is None else rows.unionByName(r)
-    mb = rows.filter(F.col("met")).agg(F.min("beam").alias("__mb"))
-    return rows.crossJoin(F.broadcast(mb)).select(
-        "beam",
-        "hops",
-        "k",
+    rows = _gate_agg(perq_all, "__rung").select(
+        F.col("__rung").cast("long").alias("beam"),
+        F.lit(_Q232_HOPS).cast("long").alias("hops"),
+        F.lit(_Q232_K).cast("long").alias("k"),
         "n_queries",
         "avg_recall",
         "min_recall",
-        "met",
-        F.coalesce(
-            F.col("met") & (F.col("beam") == F.col("__mb")), F.lit(False)
-        ).alias("picked"),
+        (F.col("avg_recall") >= F.lit(float(_Q235_TARGET))).alias("met"),
     )
+    return _pick_cheapest(rows, "beam")
 
 
 def _q235_rung_ctes(beam: int) -> str:
@@ -5596,26 +5576,24 @@ def q240_refined_graph_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     perq_all = _q232_perq_recall_multi(
         setup, [(0, edges, _Q232_BEAM), (1, edges_r, _Q232_BEAM)]
     )
-    perq_b = perq_all.filter(F.col("__rung") == 0).select("recall")
-    perq_r = perq_all.filter(F.col("__rung") == 1).select("recall")
-    agg_b = perq_b.agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall_base"),
-        F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall_base"),
+    rungs = _gate_agg(perq_all, "__rung")
+    refined = rungs.filter(F.col("__rung") == 1).select(
+        F.col("avg_recall").alias("avg_recall_refined"),
+        F.col("min_recall").alias("min_recall_refined"),
     )
-    agg_r = perq_r.agg(
-        F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall_refined"),
-        F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall_refined"),
-    )
-    return agg_b.crossJoin(F.broadcast(agg_r)).select(
-        F.lit(_Q232_M).cast("long").alias("m"),
-        F.lit(_Q232_BEAM).cast("long").alias("beam"),
-        F.lit(_Q232_HOPS).cast("long").alias("hops"),
-        "n_queries",
-        "avg_recall_base",
-        "min_recall_base",
-        "avg_recall_refined",
-        "min_recall_refined",
+    return (
+        rungs.filter(F.col("__rung") == 0)
+        .crossJoin(F.broadcast(refined))
+        .select(
+            F.lit(_Q232_M).cast("long").alias("m"),
+            F.lit(_Q232_BEAM).cast("long").alias("beam"),
+            F.lit(_Q232_HOPS).cast("long").alias("hops"),
+            "n_queries",
+            F.col("avg_recall").alias("avg_recall_base"),
+            F.col("min_recall").alias("min_recall_base"),
+            "avg_recall_refined",
+            "min_recall_refined",
+        )
     )
 
 
@@ -5899,47 +5877,24 @@ def q242_pca_ann_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     va = _vectors(emb)
-    rerank = _scored(
-        va,
-        _query_vectors(va, qpred),
-        cand.withColumnRenamed("neighbor_id", "node"),
-    ).withColumnRenamed("node", "neighbor_id")
-    wd = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id")
+    served = _nearest(
+        _scored(
+            va,
+            _query_vectors(va, qpred),
+            cand.withColumnRenamed("neighbor_id", "node"),
+        ),
+        _Q242_K,
     )
-    served = (
-        rerank.withColumn("r", F.row_number().over(wd))
-        .filter(F.col("r") <= _Q242_K)
-        .select("query_id", "neighbor_id")
-    )
-
     exact = brute_force_topk_l2(emb, emb.filter(qpred), k=_Q242_K, dim=_DIM).select(
         "query_id", "neighbor_id"
     ).localCheckpoint(eager=True)  # hit join + query-universe join
-    hits = (
-        exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    perq = (
-        exact.select("query_id")
-        .distinct()
-        .join(F.broadcast(hits), on="query_id", how="left")
-        .select(
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q242_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall")
-        )
-    )
-    return perq.agg(
+    return _gate_agg(_hit_recall(exact, served, _Q242_K)).select(
         F.lit(_Q242_RDIMS).cast("long").alias("r_dims"),
         F.lit(_Q242_SCREEN_R).cast("long").alias("screen_r"),
         F.lit(_Q242_K).cast("long").alias("k"),
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-        F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
+        "n_queries",
+        "avg_recall",
+        "min_recall",
     )
 
 
@@ -6098,76 +6053,35 @@ def q243_pca_screen_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rr") <= max(_Q243_LADDER))
     )
     va = _vectors(emb)
-    rerank = (
-        _scored(
-            va,
-            _query_vectors(va, qpred),
-            cand.select("query_id", F.col("neighbor_id").alias("node"), "rr"),
-        )
-        .withColumnRenamed("node", "neighbor_id")
-        .localCheckpoint(eager=True)  # one rank filter per rung
-    )
+    rerank = _scored(
+        va,
+        _query_vectors(va, qpred),
+        cand.select("query_id", F.col("neighbor_id").alias("node"), "rr"),
+    ).localCheckpoint(eager=True)  # the pick reads the rung rows twice
     exact = (
         brute_force_topk_l2(emb, emb.filter(qpred), k=_Q242_K, dim=_DIM)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # consumed by every rung
+        .localCheckpoint(eager=True)  # the hit join + the query universe
     )
-
-    wd = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id")
-    )
-    rows = None
-    for depth in _Q243_LADDER:
-        served = (
-            rerank.filter(F.col("rr") <= depth)
-            .withColumn("r", F.row_number().over(wd))
-            .filter(F.col("r") <= _Q242_K)
-            .select("query_id", "neighbor_id")
-        )
-        hits = (
-            exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("h"))
-        )
-        perq = (
-            exact.select("query_id")
-            .distinct()
-            .join(F.broadcast(hits), on="query_id", how="left")
-            .select(
-                F.round(
-                    F.coalesce("h", F.lit(0)).cast("double") / _Q242_K
-                    + F.lit(1e-9),
-                    6,
-                ).alias("recall")
-            )
-        )
-        r = perq.agg(
-            F.count(F.lit(1)).cast("long").alias("n_queries"),
-            F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-            F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
-        ).select(
-            F.lit(depth).cast("long").alias("screen_r"),
-            F.lit(_Q242_RDIMS).cast("long").alias("r_dims"),
-            F.lit(_Q242_K).cast("long").alias("k"),
-            "n_queries",
-            "avg_recall",
-            "min_recall",
-            (F.col("avg_recall") >= F.lit(float(_Q243_TARGET))).alias("met"),
-        )
-        rows = r if rows is None else rows.unionByName(r)
-    mr = rows.filter(F.col("met")).agg(F.min("screen_r").alias("__mr"))
-    return rows.crossJoin(F.broadcast(mr)).select(
-        "screen_r",
-        "r_dims",
-        "k",
+    # Each depth is a rank filter over the one rerank, so the whole
+    # ladder is one frame tagged by depth (__rung): one nearest-k window,
+    # one recall tail and one gate aggregate for every rung.
+    tag = F.explode(F.array(*(F.lit(d) for d in _Q243_LADDER))).alias("__rung")
+    tagged = rerank.select("*", tag).filter(F.col("rr") <= F.col("__rung"))
+    served = _nearest(tagged.drop("rr"), _Q242_K)
+    qids = exact.select("query_id").distinct().select("*", tag)
+    rows = _gate_agg(
+        _hit_recall(exact, served, _Q242_K, qids), "__rung"
+    ).select(
+        F.col("__rung").cast("long").alias("screen_r"),
+        F.lit(_Q242_RDIMS).cast("long").alias("r_dims"),
+        F.lit(_Q242_K).cast("long").alias("k"),
         "n_queries",
         "avg_recall",
         "min_recall",
-        "met",
-        F.coalesce(
-            F.col("met") & (F.col("screen_r") == F.col("__mr")), F.lit(False)
-        ).alias("picked"),
+        (F.col("avg_recall") >= F.lit(float(_Q243_TARGET))).alias("met"),
     )
+    return _pick_cheapest(rows, "screen_r")
 
 
 def _q243_rung_sql(depth: int) -> str:
@@ -6338,34 +6252,13 @@ def q247_filtered_ann_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)  # hit join + query-universe join
     )
-    hits = (
-        exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    perq = (
-        exact.select("query_id")
-        .distinct()
-        .join(F.broadcast(hits), on="query_id", how="left")
-        .select(
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q247_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall")
-        )
-    )
     sel = emb.agg(
         F.round(
             F.avg(F.when(flt, 1.0).otherwise(0.0)) + F.lit(1e-9), 6
         ).alias("selectivity")
     )
     return (
-        perq.agg(
-            F.count(F.lit(1)).cast("long").alias("n_queries"),
-            F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-            F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
-        )
+        _gate_agg(_hit_recall(exact, served, _Q247_K))
         .crossJoin(F.broadcast(sel))
         .select(
             F.lit(_Q247_K).cast("long").alias("k"),
@@ -6524,38 +6417,17 @@ def q250_descent_depth_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
         setup,
         [(r, edges_r, _Q232_BEAM) for r, edges_r in sorted(graphs.items())],
     )
-    rows = None
-    for r, edges_r in sorted(graphs.items()):
-        perq = perq_all.filter(F.col("__rung") == r).select("recall")
-        row = perq.agg(
-            F.count(F.lit(1)).cast("long").alias("n_queries"),
-            F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-            F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
-        ).select(
-            F.lit(r).cast("long").alias("rounds"),
-            F.lit(_Q232_BEAM).cast("long").alias("beam"),
-            F.lit(_Q232_HOPS).cast("long").alias("hops"),
-            F.lit(_Q232_K).cast("long").alias("k"),
-            "n_queries",
-            "avg_recall",
-            "min_recall",
-            (F.col("avg_recall") >= F.lit(float(_Q250_TARGET))).alias("met"),
-        )
-        rows = row if rows is None else rows.unionByName(row)
-    mr = rows.filter(F.col("met")).agg(F.min("rounds").alias("__mr"))
-    return rows.crossJoin(F.broadcast(mr)).select(
-        "rounds",
-        "beam",
-        "hops",
-        "k",
+    rows = _gate_agg(perq_all, "__rung").select(
+        F.col("__rung").cast("long").alias("rounds"),
+        F.lit(_Q232_BEAM).cast("long").alias("beam"),
+        F.lit(_Q232_HOPS).cast("long").alias("hops"),
+        F.lit(_Q232_K).cast("long").alias("k"),
         "n_queries",
         "avg_recall",
         "min_recall",
-        "met",
-        F.coalesce(
-            F.col("met") & (F.col("rounds") == F.col("__mr")), F.lit(False)
-        ).alias("picked"),
+        (F.col("avg_recall") >= F.lit(float(_Q250_TARGET))).alias("met"),
     )
+    return _pick_cheapest(rows, "rounds")
 
 
 def _q250_depth_chain(rnd: int) -> str:
@@ -6666,7 +6538,8 @@ def q251_filter_selectivity_ladder(
     predicate (label_max, selectivity, n_queries, avg/min recall),
     every rung sharing ONE quantizer, ONE corpus assignment pass, and
     ONE probe pass (checkpointed; rungs differ only in the scan-stage
-    candidate filter). Note recall is NOT structurally monotone across
+    candidate filter), and every rung running in ONE frame tagged by its
+    label max. Note recall is NOT structurally monotone across
     rungs — each rung's truth set changes with the filter — which is
     exactly why it has to be measured.
 
@@ -6690,7 +6563,7 @@ def q251_filter_selectivity_ladder(
         ivf_assign(emb, cents, n_probe=1)
         .join(emb.select("vec_id", "label"), on="vec_id")
         .select(F.col("vec_id").alias("neighbor_id"), "cell", "label")
-        .localCheckpoint(eager=True)  # one rung filter per predicate
+        .localCheckpoint(eager=True)  # the one corpus assignment pass
     )
     qpred = F.col("vec_id") < _Q247_NQ
     probes = (
@@ -6721,29 +6594,17 @@ def q251_filter_selectivity_ladder(
             dot / F.nullif(an * bn, F.lit(0.0)) + F.lit(1e-9), 6
         )
 
-    w = Window.partitionBy("query_id").orderBy(
+    w = Window.partitionBy("__rung", "query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
-    rows = None
-    for lmax in _Q251_LABEL_MAXES:
-        flt = F.col("label") < lmax
-        cand = (
-            probes.join(assigned.filter(flt), on="cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id")
-            .distinct()
-        )
-        served = (
-            cand.join(F.broadcast(qv), on="query_id")
-            .join(
-                va.select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("__v").alias("__cv"),
-                    F.col("__n").alias("__cn"),
-                ),
-                on="neighbor_id",
-            )
+
+    def top_k(pairs: DataFrame) -> DataFrame:
+        """(__rung, query_id, neighbor_id): each rung's k most
+        cosine-similar ``pairs`` per query, the query itself excluded."""
+        return (
+            pairs.filter(F.col("neighbor_id") != F.col("query_id"))
             .select(
+                "__rung",
                 "query_id",
                 "neighbor_id",
                 cos(
@@ -6752,70 +6613,48 @@ def q251_filter_selectivity_ladder(
             )
             .withColumn("r", F.row_number().over(w))
             .filter(F.col("r") <= _Q247_K)
-            .select("query_id", "neighbor_id")
+            .select("__rung", "query_id", "neighbor_id")
         )
-        exact = (
-            va.filter(flt)
-            .select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("__v").alias("__cv"),
-                F.col("__n").alias("__cn"),
-            )
-            .crossJoin(F.broadcast(qv))
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                cos(
-                    F.col("__qv"), F.col("__qn"), F.col("__cv"), F.col("__cn")
-                ).alias("cosine"),
-            )
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= _Q247_K)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)  # hit join + universe join
+
+    # The predicates are the rungs of ONE frame tagged by label max
+    # (__rung): a row is in a rung where label < __rung.
+    tag = F.explode(F.array(*(F.lit(m) for m in _Q251_LABEL_MAXES))).alias(
+        "__rung"
+    )
+    in_rung = F.col("label") < F.col("__rung")
+    vec = va.select(
+        F.col("vec_id").alias("neighbor_id"),
+        "label",
+        F.col("__v").alias("__cv"),
+        F.col("__n").alias("__cn"),
+    )
+    cand = (
+        probes.join(assigned.select("*", tag).filter(in_rung), on="cell")
+        .select("__rung", "query_id", "neighbor_id")
+        .distinct()
+    )
+    served = top_k(
+        cand.join(F.broadcast(qv), on="query_id").join(vec, on="neighbor_id")
+    )
+    exact = top_k(
+        vec.select("*", tag).filter(in_rung).crossJoin(F.broadcast(qv))
+    ).localCheckpoint(eager=True)  # the hit join + the query universe
+    sel = emb.select("label", tag).groupBy("__rung").agg(
+        round6(F.avg(F.when(in_rung, 1.0).otherwise(0.0))).alias("selectivity")
+    )
+    return (
+        _gate_agg(_hit_recall(exact, served, _Q247_K), "__rung")
+        .join(F.broadcast(sel), on="__rung")
+        .select(
+            F.col("__rung").cast("long").alias("label_max"),
+            "selectivity",
+            F.lit(_Q247_K).cast("long").alias("k"),
+            F.lit(_Q247_NPROBE).cast("long").alias("n_probe"),
+            "n_queries",
+            "avg_recall",
+            "min_recall",
         )
-        hits = (
-            exact.join(F.broadcast(served), on=["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("h"))
-        )
-        perq = (
-            exact.select("query_id")
-            .distinct()
-            .join(F.broadcast(hits), on="query_id", how="left")
-            .select(
-                F.round(
-                    F.coalesce("h", F.lit(0)).cast("double") / _Q247_K
-                    + F.lit(1e-9),
-                    6,
-                ).alias("recall")
-            )
-        )
-        sel = emb.agg(
-            F.round(
-                F.avg(F.when(flt, 1.0).otherwise(0.0)) + F.lit(1e-9), 6
-            ).alias("selectivity")
-        )
-        row = (
-            perq.agg(
-                F.count(F.lit(1)).cast("long").alias("n_queries"),
-                F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-                F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
-            )
-            .crossJoin(F.broadcast(sel))
-            .select(
-                F.lit(lmax).cast("long").alias("label_max"),
-                "selectivity",
-                F.lit(_Q247_K).cast("long").alias("k"),
-                F.lit(_Q247_NPROBE).cast("long").alias("n_probe"),
-                "n_queries",
-                "avg_recall",
-                "min_recall",
-            )
-        )
-        rows = row if rows is None else rows.unionByName(row)
-    return rows
+    )
 
 
 def _q251_rung_sql(lmax: int) -> str:
@@ -7270,25 +7109,7 @@ def q211_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the single-split scan (in-session A-B win at sf0.1).
         emb, emb.filter(F.col("vec_id") < 50), k=_Q211_K, spread=True
     ).select("query_id", "neighbor_id")
-    hits = (
-        brute.join(ivf, on=["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    return (
-        brute.select("query_id")
-        .distinct()
-        .join(hits, on="query_id", how="left")
-        .select(
-            "query_id",
-            F.coalesce("h", F.lit(0)).cast("long").alias("hits"),
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q211_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall"),
-        )
-    )
+    return _hit_recall(brute, ivf, _Q211_K)
 
 
 _Q211_ORACLE_TEMPLATE = f"""
@@ -7614,25 +7435,7 @@ def q212_pq_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = brute_force_topk_l2(
         emb, emb.filter(F.col("vec_id") < _Q195_NQ), k=_Q195_K, dim=_DIM
     ).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(adc, on=["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(hits, on="query_id", how="left")
-        .select(
-            "query_id",
-            F.coalesce("h", F.lit(0)).cast("long").alias("hits"),
-            F.round(
-                F.coalesce("h", F.lit(0)).cast("double") / _Q195_K
-                + F.lit(1e-9),
-                6,
-            ).alias("recall"),
-        )
-    )
+    return _hit_recall(exact, adc, _Q195_K)
 
 
 _Q212_L2 = (
@@ -7845,19 +7648,14 @@ def q258_hnsw_multilayer(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _walk(s.va, s.qv, entry, s.edges, _Q232_BEAM, _Q232_HOPS)
     n_l1 = l1_ids.agg(F.count(F.lit(1)).cast("long").alias("n_l1"))
     return (
-        _perq_recall(s, cand, s.qids).agg(
+        _gate_agg(_perq_recall(s, cand, s.qids))
+        .crossJoin(F.broadcast(n_l1))
+        .select(
             F.lit(_Q232_M).cast("long").alias("m"),
             F.lit(_Q258_GHOPS).cast("long").alias("g_hops"),
             F.lit(_Q232_BEAM).cast("long").alias("beam"),
             F.lit(_Q232_HOPS).cast("long").alias("hops"),
-            F.count(F.lit(1)).cast("long").alias("n_queries"),
-            F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-            F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
-        )
-        .crossJoin(F.broadcast(n_l1))
-        .select(
-            "m", "g_hops", "beam", "hops", "n_l1",
-            "n_queries", "avg_recall", "min_recall",
+            "n_l1", "n_queries", "avg_recall", "min_recall",
         )
     )
 
@@ -8746,20 +8544,15 @@ def q273_hnsw_log_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         for lvl, (ids, _) in layers.items()
     }
     return (
-        _perq_recall(s, cand, s.qids).agg(
+        _gate_agg(_perq_recall(s, cand, s.qids))
+        .crossJoin(F.broadcast(layer_n[1]))
+        .crossJoin(F.broadcast(layer_n[2]))
+        .select(
             F.lit(_Q232_M).cast("long").alias("m"),
             F.lit(_Q258_GHOPS).cast("long").alias("g_hops"),
             F.lit(_Q232_BEAM).cast("long").alias("beam"),
             F.lit(_Q232_HOPS).cast("long").alias("hops"),
-            F.count(F.lit(1)).cast("long").alias("n_queries"),
-            F.round(F.avg("recall") + F.lit(1e-9), 6).alias("avg_recall"),
-            F.round(F.min("recall") + F.lit(1e-9), 6).alias("min_recall"),
-        )
-        .crossJoin(F.broadcast(layer_n[1]))
-        .crossJoin(F.broadcast(layer_n[2]))
-        .select(
-            "m", "g_hops", "beam", "hops", "n_l1", "n_l2",
-            "n_queries", "avg_recall", "min_recall",
+            "n_l1", "n_l2", "n_queries", "avg_recall", "min_recall",
         )
     )
 
@@ -8965,13 +8758,7 @@ def q274_capped_descent_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join) — checkpoint the 5-row ladder or the whole union subtree
     # executes twice (50 → ~8 exchanges measured).
     ladder = reduce(DataFrame.unionByName, frames).localCheckpoint(eager=True)
-    mr = ladder.filter(F.col("met")).agg(F.min("round").alias("__mr"))
-    return ladder.crossJoin(F.broadcast(mr)).select(
-        "round", "m", "c", "cand_pairs", "n_true", "edge_recall", "met",
-        F.coalesce(
-            F.col("met") & (F.col("round") == F.col("__mr")), F.lit(False)
-        ).alias("picked"),
-    )
+    return _pick_cheapest(ladder, "round")
 
 
 def _q274_ladder_row(rnd: int) -> str:

@@ -36,6 +36,10 @@ SEMANTIC_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+# Core count for local[N] and the shuffle partitions: SPARK_GRAFT_CPUS,
+# else the cores this process may run on.
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
 # Performance settings, sized for local[N] testing but chosen to be the
 # right defaults on a real cluster too (AQE re-sizes at runtime).
 PERF_CONF: dict[str, str] = {
@@ -49,7 +53,7 @@ PERF_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Local runs: match core count, not the 200 default. On a cluster this
     # is a starting point that AQE coalesces/splits as needed.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": CPUS,
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
@@ -207,11 +211,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so tests and the
-    bench harness share one code path; on a real cluster, pass ``None``
-    and set the master via spark-submit.
+    ``master`` defaults to ``local[CPUS]`` so tests and the bench
+    harness share one code path; on a real cluster, pass ``None`` and
+    set the master via spark-submit.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
     if master is None:
         # Master resolution order: explicit arg > SPARK_MASTER env (its
@@ -224,7 +227,7 @@ def get_spark(
         # stomp --master) > local[N] for plain `python` invocations.
         master = os.environ.get("SPARK_MASTER")
         if master is None and "PYSPARK_SUBMIT_ARGS" not in os.environ:
-            master = f"local[{cpus}]"
+            master = f"local[{CPUS}]"
     if master:
         builder = builder.master(master)
     conf = {
