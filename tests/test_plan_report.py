@@ -102,6 +102,25 @@ def test_checkpoint_hidden_window_is_captured(spark):
     assert cap2.fragments == []
 
 
+def test_exchange_count_is_shuffle_nodes_only(spark):
+    """PLANS.json's ``exchanges`` counts shuffle Exchange nodes only: a
+    frame with one shuffle aggregate and one broadcast join reads 1, not
+    the 2 substring hits of its Exchange and BroadcastExchange."""
+    from pyspark.sql import functions as F
+
+    from tools.plan_report import _n_exchanges
+
+    df = (
+        spark.range(100)
+        .join(F.broadcast(spark.range(10)), "id")
+        .groupBy((F.col("id") % 3).alias("k"))
+        .count()
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan
+    assert _n_exchanges(plan) == 1
+
+
 def test_plan_report_no_violations(spark, sf_dir):
     import tools.plan_report as pr
 

@@ -329,7 +329,9 @@ def test_dedup_within_watermark_matches_exact_distinct(
 
 def test_streaming_distinct_single_batch_raises(spark, sf_dir, tmp_path):
     """require_multi_batch is a loud-failure contract: a drain that
-    collapsed into one micro-batch must raise, not silently pass."""
+    collapsed into one micro-batch must raise, not silently pass — and
+    the raise must not leak the memory sink's temp view (it holds the
+    drained rows on the driver for the session's lifetime)."""
     import pytest
 
     from wetsa_cams_solrad_timeseries_spark.catalog import table as _table
@@ -341,6 +343,7 @@ def test_streaming_distinct_single_batch_raises(spark, sf_dir, tmp_path):
     _table(spark, sf_dir, "events").coalesce(1).write.mode("overwrite").parquet(
         out_dir
     )
+    views_before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
     with pytest.raises(RuntimeError, match="multi-batch"):
         streaming_distinct(
             spark,
@@ -349,16 +352,29 @@ def test_streaming_distinct_single_batch_raises(spark, sf_dir, tmp_path):
             max_files_per_trigger=1,
             require_multi_batch=True,
         )
+    views_after = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert views_after == views_before
 
 
-def test_drain_partitions_restores_conf_when_body_raises(spark):
+def test_drain_partitions_restores_conf_when_body_raises(
+    spark, sf_dir, monkeypatch
+):
     """drain_partitions lowers a session-global conf, so its error path
     matters as much as its happy path: a drain that raises must leave
-    spark.sql.shuffle.partitions as it found it and re-raise unchanged."""
-    import pytest
+    spark.sql.shuffle.partitions as it found it and re-raise unchanged.
+    The same holds for run_drain when a foreachBatch body raises: the
+    error surfaces, the conf is restored, no query is left running and
+    the disposable checkpoint is removed."""
+    import os
 
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from wetsa_cams_solrad_timeseries_spark.streaming import _drain
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
         drain_partitions,
+        file_replay_reader,
+        run_drain,
     )
 
     key = "spark.sql.shuffle.partitions"
@@ -368,6 +384,30 @@ def test_drain_partitions_restores_conf_when_body_raises(spark):
             assert spark.conf.get(key) == "3"
             raise ValueError("drain body failed")
     assert spark.conf.get(key) == before
+
+    ckpts, seen_conf = [], []
+    make_ckpt = _drain.drain_checkpoint_dir
+
+    def recording_ckpt():
+        ckpts.append(make_ckpt())
+        return ckpts[-1]
+
+    monkeypatch.setattr(_drain, "drain_checkpoint_dir", recording_ckpt)
+
+    def failing_body(bdf, bid):
+        seen_conf.append(spark.conf.get(key))
+        raise ValueError("foreachBatch body failed")
+
+    path = f"{sf_dir}/events.parquet"
+    writer = file_replay_reader(
+        spark, path, spark.read.parquet(path).schema
+    ).writeStream.foreachBatch(failing_body)
+    with pytest.raises(StreamingQueryException, match="foreachBatch body failed"):
+        run_drain(spark, 10, writer)
+    assert seen_conf == [str(_drain.size_partitions(spark, 10))]
+    assert spark.conf.get(key) == before
+    assert spark.streams.active == []
+    assert len(ckpts) == 1 and not os.path.exists(ckpts[0])
 
 
 def test_ttl_eviction_boundaries(spark, sf_dir):

@@ -170,6 +170,16 @@ BNLJ_OK: set[str] = set()
 _BNLJ_CROSS = re.compile(r"BroadcastNestedLoopJoin Build(Left|Right), Cross")
 _BNLJ_ANY = re.compile(r"BroadcastNestedLoopJoin Build(Left|Right), (\w+)")
 
+# A shuffle is a tree node whose operator is ``Exchange``: the line's
+# tree prefix (spaces, ``:``, ``+-``) followed by that word.
+# BroadcastExchange and ReusedExchange nodes are other operators — the
+# same nodes tests/test_plan_budgets.py counts in explain("formatted").
+_EXCHANGE_NODE = re.compile(r"^[ :|+-]*Exchange\b", re.M)
+
+
+def _n_exchanges(plan: str) -> int:
+    return len(_EXCHANGE_NODE.findall(plan))
+
 
 class capture_checkpoints:
     """Context manager that records the executed plan of every frame at
@@ -256,7 +266,7 @@ def main() -> int:
         bnlj_types = [m.group(2) for m in _BNLJ_ANY.finditer(plan)]
         bnlj_noncross = [t for t in bnlj_types if t != "Cross"]
         metrics = {
-            "exchanges": plan.count("Exchange"),
+            "exchanges": _n_exchanges(plan),
             "broadcast_joins": plan.count("BroadcastHashJoin"),
             "smj": plan.count("SortMergeJoin"),
             "shj": plan.count("ShuffledHashJoin"),

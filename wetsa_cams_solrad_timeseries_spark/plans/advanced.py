@@ -1281,9 +1281,7 @@ def q163_custom_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wetsa_cams_solrad_timeseries_spark.sources.replay_stream import (
         register_events_replay_source,
     )
-    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_complete_agg,
-    )
+    from wetsa_cams_solrad_timeseries_spark.streaming._drain import drain_rows
 
     register_events_replay_source(spark)
     # Two slices = the minimum multi-batch replay (offset advance +
@@ -1302,9 +1300,13 @@ def q163_custom_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         round6(F.sum("value")).alias("sum_value"),
     )
     n_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    return drain_complete_agg(
-        spark, agg, n_input_rows=n_rows, min_fed_batches=n_slices,
-        what="modulo-offset replay",
+    return drain_rows(
+        spark,
+        agg,
+        n_rows=n_rows,
+        output_mode="complete",
+        min_fed_batches=n_slices,
+        what="modulo-offset replay (one batch per offset advance)",
     )
 
 
@@ -2438,9 +2440,7 @@ def q179_range_offset_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wetsa_cams_solrad_timeseries_spark.sources.replay_stream import (
         register_events_replay_source,
     )
-    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_complete_agg,
-    )
+    from wetsa_cams_solrad_timeseries_spark.streaming._drain import drain_rows
 
     register_events_replay_source(spark)
     n_slices = 2
@@ -2456,9 +2456,13 @@ def q179_range_offset_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         round6(F.avg("value")).alias("avg_value"),
     )
     n_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    return drain_complete_agg(
-        spark, agg, n_input_rows=n_rows, min_fed_batches=n_slices,
-        what="range-offset replay",
+    return drain_rows(
+        spark,
+        agg,
+        n_rows=n_rows,
+        output_mode="complete",
+        min_fed_batches=n_slices,
+        what="range-offset replay (one batch per offset advance)",
     )
 
 
@@ -3025,9 +3029,7 @@ def q186_keyed_offset_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wetsa_cams_solrad_timeseries_spark.sources.replay_stream import (
         register_events_replay_source,
     )
-    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_complete_agg,
-    )
+    from wetsa_cams_solrad_timeseries_spark.streaming._drain import drain_rows
 
     register_events_replay_source(spark)
     n_batches = 2
@@ -3044,9 +3046,13 @@ def q186_keyed_offset_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("value").alias("max_value"),
     )
     n_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    return drain_complete_agg(
-        spark, agg, n_input_rows=n_rows, min_fed_batches=n_batches,
-        what="keyed-offset replay",
+    return drain_rows(
+        spark,
+        agg,
+        n_rows=n_rows,
+        output_mode="complete",
+        min_fed_batches=n_batches,
+        what="keyed-offset replay (one batch per offset advance)",
     )
 
 

@@ -51,6 +51,39 @@ from wetsa_cams_solrad_timeseries_spark.plans._spec import QuerySpec
 # MUST be pinned ahead of the automatic rotation so their fresh row
 # lands on the changed code.
 _PIN_FIRST = (
+    # Every streaming query drains through streaming/_drain.run_drain
+    # (disposable checkpoints, the lowered shuffle-partition conf, start →
+    # drain → stop, fed-batch counts), most of them through its
+    # memory/parquet wrapper drain_rows. Outputs must be unchanged; the
+    # pins put a fresh correctness row on every drained query not pinned
+    # below. The ports of hand-written drains first (q99 and q162's
+    # memory drains, the foreachBatch drains of q115, q147, q244, q261
+    # and q263, and q163's complete-mode drain), then the rest.
+    "q99_stream_stream_join",
+    "q162_stream_outer_join",
+    "q115_streaming_upsert",
+    "q147_streaming_scd2",
+    "q244_streaming_lsh_neardup",
+    "q261_streaming_token_mix",
+    "q263_streaming_cdc_index",
+    "q163_custom_stream_source",
+    "q42_streaming_tumbling",
+    "q53_streaming_stateful",
+    "q63_streaming_sliding",
+    "q82_streaming_dedup",
+    "q109_stream_static_enrich",
+    "q179_range_offset_stream",
+    "q183_stream_dedup_watermark",
+    "q186_keyed_offset_stream",
+    "q203_streaming_pq_encode",
+    "q218_streaming_opq_encode",
+    "q231_stream_to_serving",
+    "q234_streaming_quality_filter",
+    "q236_streaming_decontamination",
+    "q249_streaming_pca_encode",
+    "q252_streaming_quantile_digest",
+    "q283_streaming_bloom_screen",
+    "q284_streaming_hll",
     # The graph family walks through shared kernels: every beam and
     # greedy walk runs on vector._walk with one entry pick, scorer and
     # nearest-k tail, over builds from the shared descent kernels

@@ -663,12 +663,9 @@ def q99_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-batch pairs exist only if batch-1 click state survived into
     batch 2+; the fn asserts >1 micro-batch fed rows. Result equals the
     batch interval join, which the oracle checks."""
-    import json
-
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_checkpoint_dir,
-        drain_partitions,
-        size_partitions,
+        drain_rows,
+        file_replay_reader,
     )
 
     split_dir = _split_events(spark, sf_dir)
@@ -677,10 +674,9 @@ def q99_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def side(event_type: str, prefix: str):
         return (
-            spark.readStream.schema(batch_df.schema)
-            .option("pathGlobFilter", "part-*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(split_dir)
+            file_replay_reader(
+                spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
+            )
             .withColumn("ts", ts_fix)
             .filter(F.col("event_type") == event_type)
             .select(
@@ -714,38 +710,14 @@ def q99_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "view_value",
     )
 
-    import shutil
-    import uuid as _uuid
-
-    name = f"ssj_out_{_uuid.uuid4().hex[:12]}"
-    with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-        ckpt = drain_checkpoint_dir()
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-            fed = sum(
-                1 for p in query.recentProgress
-                if json.loads(p.json).get("numInputRows", 0) > 0
-            )
-        finally:
-            query.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-    if fed <= 1:
-        raise RuntimeError(
-            f"stream-stream join drained in {fed} micro-batch(es) — the "
-            "cross-batch state buffering was not exercised"
-        )
-    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        _detach_memory_table,
+    return drain_rows(
+        spark,
+        joined,
+        n_rows=batch_df.count(),
+        output_mode="append",
+        min_fed_batches=2,
+        what="stream-stream join (cross-batch state buffering)",
     )
-
-    return _detach_memory_table(spark, name)
 
 
 Q99_ORACLE = """

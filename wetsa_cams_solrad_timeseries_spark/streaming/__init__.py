@@ -17,9 +17,11 @@ substitution (no operator changes):
               .select("v.*"))
 
 plus a durable sink (`writeStream.format("parquet")` /
-`foreachBatch`) with `checkpointLocation` set — the memory sink +
-`processAllAvailable` drain in these modules is harness-only. State
-semantics (watermarks, EventTimeTimeout expiry, state-store sizing —
-see `_drain.size_partitions`) carry over unchanged; `maxOffsetsPerTrigger`
+`foreachBatch`) with `checkpointLocation` set — every query here drains
+through `_drain.run_drain` (disposable checkpoints, drain to exhaustion,
+stop), which is harness-only. State semantics (watermarks,
+EventTimeTimeout expiry) carry over unchanged; the state-store sizing is
+`run_drain`'s lowered shuffle-partition conf, which production replaces
+with partitions sized to key cardinality. `maxOffsetsPerTrigger`
 replaces `maxFilesPerTrigger` for backfill pacing.
 """

@@ -1,22 +1,28 @@
-"""Shared drain-time tuning for the finite-replay verification harness.
+"""The drain runner for the finite-replay verification harness.
 
-Structured Streaming sizes its state store by ``spark.sql.shuffle.
-partitions`` at query START, and every micro-batch commits one checkpoint
-delta PER state partition — for the drain-a-finite-file verification runs
-(tiny state, 1-3 micro-batches) a 32-partition state store is pure
-fixed-cost I/O (~32 store inits + 32 delta files per batch, measured
-seconds per query on this harness).
+Every streaming query in the package drains through :func:`run_drain`
+(memory- and parquet-sink drains through its wrapper :func:`drain_rows`):
+it gives each writer a disposable checkpoint, starts the queries, drains
+the replay with ``processAllAvailable``, stops them, removes the
+checkpoints and returns each query's fed-batch count.
 
-``drain_partitions`` temporarily lowers the conf while a drain query is
-being planned/started and restores it afterwards. This is harness-only
-sizing, not a semantics change: production sizes state partitions to key
-cardinality and throughput (and would RAISE it at 100 TB); results are
+It is also the one place ``spark.sql.shuffle.partitions`` is lowered.
+Structured Streaming sizes its state store by that conf at query START,
+and every micro-batch commits one checkpoint delta PER state partition —
+for a drain of a finite file (small state, 1-3 micro-batches) the
+session default is mostly fixed-cost store I/O. The runner sizes it to
+the replay (:func:`size_partitions`) over start → drain → stop and
+restores it afterwards. This is harness-only sizing, not a semantics
+change: production sizes state partitions to key cardinality and
+throughput (and would RAISE it at 100 TB); results are
 partitioning-invariant either way.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import uuid
 from contextlib import contextmanager
 
@@ -33,16 +39,20 @@ def drain_checkpoint_dir() -> str:
     right home when present. Durable production queries must keep their
     checkpointLocation on fault-tolerant storage — this helper is for
     the drain harness only."""
-    base = "/dev/shm" if os.path.isdir("/dev/shm") and os.access(
-        "/dev/shm", os.W_OK
-    ) else None
-    if base is None:
-        import tempfile
-
-        base = tempfile.gettempdir()
-    path = os.path.join(base, f"spark-drain-ckpt-{uuid.uuid4().hex[:12]}")
+    path = os.path.join(
+        _drain_base(), f"spark-drain-ckpt-{uuid.uuid4().hex[:12]}"
+    )
     os.makedirs(path, exist_ok=True)
     return path
+
+
+def _drain_base() -> str:
+    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+        return "/dev/shm"
+    import tempfile
+
+    return tempfile.gettempdir()
+
 
 DRAIN_PARTITIONS = 4
 ROWS_PER_STATE_PARTITION = 50_000
@@ -85,8 +95,6 @@ def fed_batches(query) -> int:
     ``p.get(...)`` also happens to work because StreamingQueryProgress
     subclasses dict in 4.x, but that is an implementation detail two
     idioms should not separately depend on)."""
-    import json
-
     return sum(
         1
         for p in query.recentProgress
@@ -105,9 +113,9 @@ def file_replay_reader(
     directory scoped by ``pathGlobFilter``; a bare directory streams
     over itself (splitting it into (parent, name) would set a
     pathGlobFilter matching NO leaf file and silently drain an empty
-    stream — the divergence this helper exists to end)."""
-    import os
-
+    stream — the divergence this helper exists to end). The multi-file
+    replays read ``f"{split_dir}/part-*.parquet"`` with
+    ``max_files_per_trigger=1``: one micro-batch per file."""
     directory, filename = os.path.split(parquet_path.rstrip("/"))
     reader = spark.readStream.schema(schema)
     if filename.endswith(".parquet"):
@@ -136,154 +144,111 @@ def drain_partitions(spark: SparkSession, n: int = DRAIN_PARTITIONS):
         spark.conf.set(key, old)
 
 
-def drain_complete_agg(
+def run_drain(
     spark: SparkSession,
-    agg_df,
-    *,
-    n_input_rows: int,
-    min_fed_batches: int,
-    what: str,
-):
-    """Shared drain for the replay-source queries (q163/q179/q186): run a
-    COMPLETE-mode aggregation over a finite custom-source replay to
-    exhaustion, require that at least ``min_fed_batches`` micro-batches
-    actually carried rows (a collapsed replay proves nothing about
-    cross-batch offset/state handling — fail loudly), and return the
-    final state detached from the memory sink. One definition of the
-    fed-batch counting / checkpoint lifecycle / partition sizing idiom,
-    so a fix lands everywhere at once."""
-    name = f"drain_{uuid.uuid4().hex[:12]}"
-    ckpt = drain_checkpoint_dir()
-    with drain_partitions(spark, size_partitions(spark, n_input_rows)):
-        query = (
-            agg_df.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-            fed = fed_batches(query)
-        finally:
-            query.stop()
-            import shutil as _shutil
+    n_rows: int,
+    *writers,
+    rows_per_partition: int = ROWS_PER_STATE_PARTITION,
+) -> list[int]:
+    """Start each ``DataStreamWriter`` on its own disposable checkpoint,
+    drain every query to exhaustion, stop them all, and return each
+    query's fed-batch count (in writer order).
 
-            _shutil.rmtree(ckpt, ignore_errors=True)
-    if fed < min_fed_batches:
-        raise RuntimeError(
-            f"{what} fed {fed} micro-batches, expected {min_fed_batches} "
-            "(one per offset advance)"
-        )
-    return _detach_memory_table(spark, name)
-
-
-def _detach_memory_table(spark: SparkSession, name: str):
-    """Collect a memory-sink table into a standalone DataFrame and DROP
-    the temp view: the sink's in-memory table otherwise holds the full
-    result on the driver for the session's lifetime — across a
-    180-query bench run that is every streaming result resident
-    simultaneously."""
-    result = spark.table(name)
-    out = spark.createDataFrame(result.collect(), schema=result.schema)
-    spark.catalog.dropTempView(name)
-    return out
+    The shuffle-partition conf is lowered to ``size_partitions(n_rows)``
+    over start → drain → stop of all writers, so foreachBatch bodies
+    plan under it too. Several writers run as concurrent queries (each
+    one's batches stay sequential); they are drained one after another.
+    On every path the queries are stopped and the checkpoints removed.
+    Pass an explicit durable ``checkpointLocation`` to a writer of your
+    own instead if crash recovery across restarts is required (see
+    tests/test_streaming_semantics.py::test_checkpoint_crash_recovery).
+    """
+    ckpts = [drain_checkpoint_dir() for _ in writers]
+    queries = []
+    try:
+        with drain_partitions(
+            spark, size_partitions(spark, n_rows, rows_per_partition)
+        ):
+            try:
+                for writer, ckpt in zip(writers, ckpts):
+                    queries.append(
+                        writer.option("checkpointLocation", ckpt).start()
+                    )
+                for query in queries:
+                    query.processAllAvailable()
+                return [fed_batches(query) for query in queries]
+            finally:
+                for query in queries:
+                    query.stop()
+    finally:
+        for ckpt in ckpts:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def drain_rows(
     spark: SparkSession,
     out_df,
     *,
+    n_rows: int,
     output_mode: str,
     sink: str = "memory",
-    name: str | None = None,
-    out_dir: str | None = None,
+    rows_per_partition: int = ROWS_PER_STATE_PARTITION,
     min_fed_batches: int | None = None,
     what: str = "drain",
 ):
-    """Run a finite-replay streaming query to completion and return the
-    emitted rows as a DataFrame.
+    """Drain a finite-replay streaming query through :func:`run_drain`
+    and return the emitted rows as a DataFrame. Raises unless at least
+    ``min_fed_batches`` micro-batches carried rows (a collapsed replay
+    proves nothing about cross-batch state — fail loudly).
 
     Two sink forms:
 
     - ``sink="memory"`` — Spark's memory sink accumulates results on the
-      DRIVER. This is the oracle-gate form: results round-trip through
-      ``spark.table(name)`` for comparison. Inherently driver-side (the
+      DRIVER. This is the oracle-gate form; inherently driver-side (the
       memory sink is defined that way), so it does not scale past what
-      one driver heap holds.
+      one driver heap holds. The rows are copied into a standalone
+      DataFrame and the sink's temp view is dropped on every path,
+      failures included — a leaked view holds the full result on the
+      driver for the session's lifetime.
     - ``sink="parquet"`` — the 100 TB drain form: each micro-batch's
       tasks append parquet shards DIRECTLY FROM THE EXECUTORS; the driver
       never materializes a row. ``output_mode`` must be ``append`` (the
       only mode file sinks support). The returned DataFrame is a lazy
-      read of ``out_dir`` — production leaves the files as the product;
-      tests read them back to assert parity with the memory form.
-
-    The checkpoint is created fresh and removed afterwards (disposable by
-    design — see ``drain_checkpoint_dir``); pass an explicit durable
-    ``checkpointLocation`` via the writer instead if crash recovery
-    across restarts is required (see
-    tests/test_streaming_semantics.py::test_checkpoint_crash_recovery).
+      read of a disposable drain dir, removed at interpreter exit; tests
+      read it back to assert parity with the memory form.
     """
-    import shutil
+    from wetsa_cams_solrad_timeseries_spark._artifacts import register_cleanup
 
-    ckpt = drain_checkpoint_dir()
-    try:
-        if sink == "memory":
-            name = name or f"drain_{uuid.uuid4().hex[:12]}"
-            query = (
-                out_df.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-                fed = fed_batches(query)
-            finally:
-                query.stop()
-            if min_fed_batches is not None and fed < min_fed_batches:
-                raise RuntimeError(
-                    f"{what} fed {fed} micro-batches, expected "
-                    f"{min_fed_batches}"
-                )
-            # Detached + view dropped — see _detach_memory_table.
-            return _detach_memory_table(spark, name)
-        if sink == "parquet":
-            if output_mode != "append":
-                raise ValueError(
-                    f"file sinks support append mode only, got {output_mode!r}"
-                )
-            if out_dir is None:
-                out_dir = ckpt + "-out"
-                # The default out_dir lives next to the checkpoint
-                # (often RAM-backed /dev/shm) — register it for atexit
-                # removal or every drain leaks tmpfs RAM beyond the
-                # process lifetime. An EXPLICIT out_dir is the caller's
-                # product and is left alone.
-                from wetsa_cams_solrad_timeseries_spark._artifacts import (
-                    register_cleanup,
-                )
-
-                register_cleanup(out_dir)
-            query = (
-                out_df.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-                fed = fed_batches(query)
-            finally:
-                query.stop()
-            if min_fed_batches is not None and fed < min_fed_batches:
-                raise RuntimeError(
-                    f"{what} fed {fed} micro-batches, expected "
-                    f"{min_fed_batches}"
-                )
-            return spark.read.parquet(out_dir)
+    if sink not in ("memory", "parquet"):
         raise ValueError(f"unknown sink {sink!r} (memory|parquet)")
+    if sink == "parquet" and output_mode != "append":
+        raise ValueError(
+            f"file sinks support append mode only, got {output_mode!r}"
+        )
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    writer = out_df.writeStream.outputMode(output_mode)
+    if sink == "memory":
+        writer = writer.format("memory").queryName(name)
+    else:
+        # Often RAM-backed /dev/shm: registered for atexit removal or
+        # every drain leaks tmpfs RAM beyond the process lifetime.
+        out_dir = register_cleanup(
+            os.path.join(_drain_base(), f"spark-{name}-out")
+        )
+        writer = writer.format("parquet").option("path", out_dir)
+    try:
+        (fed,) = run_drain(
+            spark, n_rows, writer, rows_per_partition=rows_per_partition
+        )
+        if min_fed_batches is not None and fed < min_fed_batches:
+            raise RuntimeError(
+                f"{what} fed {fed} micro-batches, expected {min_fed_batches}"
+            )
+        if sink == "parquet":
+            return spark.read.parquet(out_dir)
+        result = spark.table(name)
+        return spark.createDataFrame(result.collect(), schema=result.schema)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        # The memory sink registers the view at start(); a no-op for the
+        # parquet sink.
+        spark.catalog.dropTempView(name)

@@ -32,7 +32,6 @@ verify on survivors.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 
@@ -59,17 +58,13 @@ def streaming_cdc_band_index(
         word_shingles,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_checkpoint_dir,
-        drain_partitions,
-        size_partitions,
+        file_replay_reader,
+        run_drain,
     )
 
     batch_df = spark.read.parquet(split_dir)
-    reader = (
-        spark.readStream.schema(batch_df.schema)
-        .option("pathGlobFilter", "part-*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
+    reader = file_replay_reader(
+        spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
     )
     root = register_cleanup(
         os.path.join(
@@ -112,30 +107,19 @@ def streaming_cdc_band_index(
             "overwrite"
         ).parquet(tombs_out)  # commit gate LAST
 
-    ckpt = drain_checkpoint_dir()
-    try:
-        with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-            query = (
-                reader.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        committed = _committed("tombs")
-        if len(committed) <= 1:
-            raise RuntimeError(
-                f"streaming CDC drained in {len(committed)} micro-batch(es)"
-                " — the interleaved lifecycle was not exercised"
-            )
-        index = base_bands.select("doc_id", "bucket").unionByName(
-            spark.read.parquet(*_committed("bands")).select(
-                "doc_id", "bucket"
-            )
+    run_drain(
+        spark, batch_df.count(), reader.writeStream.foreachBatch(apply_batch)
+    )
+    committed = _committed("tombs")
+    if len(committed) <= 1:
+        raise RuntimeError(
+            f"streaming CDC drained in {len(committed)} micro-batch(es)"
+            " — the interleaved lifecycle was not exercised"
         )
-        tombs = spark.read.parquet(*committed)
-        return index, tombs
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    index = base_bands.select("doc_id", "bucket").unionByName(
+        spark.read.parquet(*_committed("bands")).select(
+            "doc_id", "bucket"
+        )
+    )
+    tombs = spark.read.parquet(*committed)
+    return index, tombs

@@ -26,10 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from wetsa_cams_solrad_timeseries_spark.catalog import ts_fix_expr
 from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-    drain_partitions,
     drain_rows,
     file_replay_reader,
-    size_partitions,
 )
 
 
@@ -80,14 +78,11 @@ def streaming_distinct(
     else:
         deduped = src.select(*keys).dropDuplicates(keys)
 
-    with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-        # drain_rows owns the checkpoint lifecycle, fed-batch counting,
-        # and memory-sink detach/drop — one definition for all drains.
-        return drain_rows(
-            spark,
-            deduped,
-            output_mode="append",
-            sink="memory",
-            min_fed_batches=2 if require_multi_batch else None,
-            what="multi-batch dedup drain",
-        )
+    return drain_rows(
+        spark,
+        deduped,
+        n_rows=batch_df.count(),
+        output_mode="append",
+        min_fed_batches=2 if require_multi_batch else None,
+        what="multi-batch dedup drain",
+    )

@@ -20,7 +20,6 @@ construction, which is exactly what the DuckDB twin checks).
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,29 +47,15 @@ def streaming_enriched_agg(
     decides its broadcast policy (size-gated upstream — a pre-joined
     dimension chain stays dimension-sized, but it may scale with SF).
     """
-    import os
-    
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_partitions,
         drain_rows,
-        size_partitions,
+        file_replay_reader,
     )
 
     batch_df = spark.read.parquet(events_path)
     ts_fix = ts_fix_expr(dict(batch_df.dtypes).get(ts_col), ts_col)
-
-    directory, filename = os.path.split(events_path.rstrip("/"))
-    if filename.endswith(".parquet"):
-        reader = spark.readStream.schema(batch_df.schema).option(
-            "pathGlobFilter", filename
-        )
-        src_path = directory
-    else:
-        reader = spark.readStream.schema(batch_df.schema)
-        src_path = events_path
-
     stream = (
-        reader.parquet(src_path)
+        file_replay_reader(spark, events_path, batch_df.schema)
         .withColumn(ts_col, ts_fix)
         .withWatermark(ts_col, watermark)
     )
@@ -91,7 +76,6 @@ def streaming_enriched_agg(
         )
     )
 
-    with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-        # drain_rows owns the checkpoint lifecycle and detaches/drops the
-        # memory-sink view.
-        return drain_rows(spark, agg, output_mode="complete")
+    return drain_rows(
+        spark, agg, n_rows=batch_df.count(), output_mode="complete"
+    )

@@ -44,7 +44,6 @@ the touched-cell reads prune by partition.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 
@@ -152,12 +151,13 @@ def _graph_insert_drain(
         ivf_assign,
     )
 
+    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
+        file_replay_reader,
+    )
+
     batch_df = spark.read.parquet(split_dir)
-    reader = (
-        spark.readStream.schema(batch_df.schema)
-        .option("pathGlobFilter", "part-*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
+    reader = file_replay_reader(
+        spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
     )
     root = register_cleanup(
         os.path.join(
@@ -316,31 +316,15 @@ def streaming_graph_insert_many(
     op_col) tuples; returns one (latest_lists, tombstones) per spec, in
     order. The returned frames are lazy reads of the committed
     generations; callers checkpoint whatever they reuse."""
-    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_checkpoint_dir,
-        drain_partitions,
-        size_partitions,
-    )
+    from wetsa_cams_solrad_timeseries_spark.streaming._drain import run_drain
 
     drains = [_graph_insert_drain(spark, *spec) for spec in specs]
-    n_rows = max(d[0].count() for d in drains)
-    ckpts = [drain_checkpoint_dir() for _ in drains]
-    try:
-        with drain_partitions(spark, size_partitions(spark, n_rows)):
-            queries = []
-            try:
-                for (_, reader, apply_batch, _fin), ckpt in zip(drains, ckpts):
-                    queries.append(
-                        reader.writeStream.foreachBatch(apply_batch)
-                        .option("checkpointLocation", ckpt)
-                        .start()
-                    )
-                for q in queries:
-                    q.processAllAvailable()
-            finally:
-                for q in queries:
-                    q.stop()
-        return [fin() for (_, _, _, fin) in drains]
-    finally:
-        for ckpt in ckpts:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    run_drain(
+        spark,
+        max(d[0].count() for d in drains),
+        *(
+            reader.writeStream.foreachBatch(apply_batch)
+            for _, reader, apply_batch, _ in drains
+        ),
+    )
+    return [fin() for (_, _, _, fin) in drains]

@@ -26,7 +26,6 @@ than this replay's generation dirs.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 
@@ -58,17 +57,13 @@ def streaming_lsh_pairs(
         word_shingles,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_checkpoint_dir,
-        drain_partitions,
-        size_partitions,
+        file_replay_reader,
+        run_drain,
     )
 
     batch_df = spark.read.parquet(split_dir)
-    reader = (
-        spark.readStream.schema(batch_df.schema)
-        .option("pathGlobFilter", "part-*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
+    reader = file_replay_reader(
+        spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
     )
 
     root = register_cleanup(
@@ -123,24 +118,13 @@ def streaming_lsh_pairs(
         )
         pairs.write.mode("overwrite").parquet(pairs_out)  # commit gate LAST
 
-    ckpt = drain_checkpoint_dir()
-    try:
-        with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-            query = (
-                reader.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        committed = _committed("pairs")
-        if len(committed) <= 1:
-            raise RuntimeError(
-                f"streaming LSH drained in {len(committed)} micro-batch(es)"
-                " — the cross-batch index lifecycle was not exercised"
-            )
-        return spark.read.parquet(*committed)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_drain(
+        spark, batch_df.count(), reader.writeStream.foreachBatch(apply_batch)
+    )
+    committed = _committed("pairs")
+    if len(committed) <= 1:
+        raise RuntimeError(
+            f"streaming LSH drained in {len(committed)} micro-batch(es)"
+            " — the cross-batch index lifecycle was not exercised"
+        )
+    return spark.read.parquet(*committed)

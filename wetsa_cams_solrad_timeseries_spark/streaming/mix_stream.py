@@ -49,7 +49,6 @@ selections exactly in that case.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 
@@ -87,17 +86,13 @@ def streaming_token_mix(
 
     from wetsa_cams_solrad_timeseries_spark._artifacts import register_cleanup
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_checkpoint_dir,
-        drain_partitions,
-        size_partitions,
+        file_replay_reader,
+        run_drain,
     )
 
     batch_df = spark.read.parquet(split_dir)
-    reader = (
-        spark.readStream.schema(batch_df.schema)
-        .option("pathGlobFilter", "part-*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
+    reader = file_replay_reader(
+        spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
     )
     root = register_cleanup(
         os.path.join(
@@ -241,26 +236,15 @@ def streaming_token_mix(
             src_out
         )  # commit gate LAST
 
-    ckpt = drain_checkpoint_dir()
-    try:
-        with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-            query = (
-                reader.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        committed = _committed("src")
-        if len(committed) <= 1:
-            raise RuntimeError(
-                f"streaming mix drained in {len(committed)} micro-batch(es)"
-                " — the cross-batch quota lifecycle was not exercised"
-            )
-        return _latest().select(
-            "doc_id", "source", "n_tokens", "shuffle_key", "cum_tokens"
+    run_drain(
+        spark, batch_df.count(), reader.writeStream.foreachBatch(apply_batch)
+    )
+    committed = _committed("src")
+    if len(committed) <= 1:
+        raise RuntimeError(
+            f"streaming mix drained in {len(committed)} micro-batch(es)"
+            " — the cross-batch quota lifecycle was not exercised"
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return _latest().select(
+        "doc_id", "source", "n_tokens", "shuffle_key", "cum_tokens"
+    )

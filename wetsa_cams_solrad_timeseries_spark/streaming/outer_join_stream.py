@@ -37,7 +37,6 @@ import glob
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,21 +114,17 @@ def streaming_left_outer_interval_join(
     Asserts >1 micro-batch fed rows AND at least one outer (null) row
     was emitted through watermark-driven eviction."""
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        _detach_memory_table,
-        drain_checkpoint_dir,
-        drain_partitions,
-        fed_batches,
-        size_partitions,
+        drain_rows,
+        file_replay_reader,
     )
 
     batch_df = spark.read.parquet(split_dir)
 
     def side(event_type: str, prefix: str):
         return (
-            spark.readStream.schema(batch_df.schema)
-            .option("pathGlobFilter", "part-*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(split_dir)
+            file_replay_reader(
+                spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
+            )
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("user_id").alias(f"{prefix}_user"),
@@ -157,28 +152,14 @@ def streaming_left_outer_interval_join(
         F.col("r_value").alias("error_value"),
     )
 
-    name = f"soj_out_{uuid.uuid4().hex[:12]}"
-    ckpt = drain_checkpoint_dir()
-    with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-            fed = fed_batches(query)
-        finally:
-            query.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-    if fed <= 1:
-        raise RuntimeError(
-            f"outer join drained in {fed} micro-batch(es) — cross-batch "
-            "state was not exercised"
-        )
-    out = _detach_memory_table(spark, name)
+    out = drain_rows(
+        spark,
+        joined,
+        n_rows=batch_df.count(),
+        output_mode="append",
+        min_fed_batches=2,
+        what="outer join (cross-batch state)",
+    )
     if out.where(F.col("error_id").isNull()).limit(1).count() == 0:
         raise RuntimeError(
             "no outer null row emitted — watermark-driven eviction did "

@@ -21,7 +21,6 @@ stays a distributed scan, never a driver materialization.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 
@@ -54,17 +53,13 @@ def streaming_pq_encode(
         rotate_vectors,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_checkpoint_dir,
-        drain_partitions,
-        size_partitions,
+        file_replay_reader,
+        run_drain,
     )
 
     batch_df = spark.read.parquet(split_dir)
-    reader = (
-        spark.readStream.schema(batch_df.schema)
-        .option("pathGlobFilter", "part-*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
+    reader = file_replay_reader(
+        spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
     )
 
     root = register_cleanup(
@@ -84,35 +79,24 @@ def streaming_pq_encode(
             "overwrite"
         ).parquet(out)
 
-    ckpt = drain_checkpoint_dir()
-    try:
-        with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-            query = (
-                reader.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
-        committed = [
-            name
-            for name in os.listdir(root)
-            if name.startswith("batch_")
-            and os.path.exists(os.path.join(root, name, "_SUCCESS"))
-        ]
-        if len(committed) <= 1:
-            raise RuntimeError(
-                f"streaming PQ encode drained in {len(committed)} "
-                "micro-batch(es) — the append lifecycle was not exercised"
-            )
-        # Read EXACTLY the committed generations, not a batch_* glob: a
-        # crash between the executor write and the _SUCCESS marker
-        # (followed by an external restart against the same root) leaves
-        # an uncommitted batch dir that the glob would read as data.
-        return spark.read.parquet(
-            *(os.path.join(root, name) for name in sorted(committed))
+    run_drain(
+        spark, batch_df.count(), reader.writeStream.foreachBatch(apply_batch)
+    )
+    committed = [
+        name
+        for name in os.listdir(root)
+        if name.startswith("batch_")
+        and os.path.exists(os.path.join(root, name, "_SUCCESS"))
+    ]
+    if len(committed) <= 1:
+        raise RuntimeError(
+            f"streaming PQ encode drained in {len(committed)} "
+            "micro-batch(es) — the append lifecycle was not exercised"
         )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # Read EXACTLY the committed generations, not a batch_* glob: a
+    # crash between the executor write and the _SUCCESS marker
+    # (followed by an external restart against the same root) leaves
+    # an uncommitted batch dir that the glob would read as data.
+    return spark.read.parquet(
+        *(os.path.join(root, name) for name in sorted(committed))
+    )

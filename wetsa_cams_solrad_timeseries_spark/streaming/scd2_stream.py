@@ -87,18 +87,16 @@ def streaming_scd2_merge(
     return the final version table (key, valid_from, valid_to,
     from_event, status, version)."""
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_checkpoint_dir,
-        drain_partitions,
-        size_partitions,
+        file_replay_reader,
+        run_drain,
     )
 
     batch_df = spark.read.parquet(split_dir)
     ts_fix = ts_fix_expr(dict(batch_df.dtypes).get(ts_col), ts_col)
     reader = (
-        spark.readStream.schema(batch_df.schema)
-        .option("pathGlobFilter", "part-*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
+        file_replay_reader(
+            spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
+        )
         .withColumn(ts_col, ts_fix)
     )
 
@@ -152,18 +150,10 @@ def streaming_scd2_merge(
         state["versions"] = ver_path
         state["batches"] += 1
 
-    ckpt = drain_checkpoint_dir()
     try:
-        with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-            query = (
-                reader.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        run_drain(
+            spark, batch_df.count(), reader.writeStream.foreachBatch(apply_batch)
+        )
         if state["batches"] <= 1:
             raise RuntimeError(
                 f"SCD2 merge expected >1 micro-batch, got {state['batches']}"
@@ -176,5 +166,4 @@ def streaming_scd2_merge(
         result = spark.read.parquet(state["versions"])
         return spark.createDataFrame(result.collect(), schema=result.schema)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)

@@ -13,7 +13,6 @@ fixed-width tuple, O(active users).
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterable
 
 import pandas as pd
@@ -149,17 +148,15 @@ def streaming_sessions(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_partitions,
         drain_rows,
         PY_STATE_ROWS_PER_PARTITION,
-        size_partitions,
     )
 
-    name = f"sessions_{uuid.uuid4().hex[:12]}"
-    with drain_partitions(spark, size_partitions(
-        spark, batch_df.count(), rows_per_partition=PY_STATE_ROWS_PER_PARTITION
-    )):
-        # drain_rows detaches (and drops) the memory-sink view itself.
-        return drain_rows(
-            spark, out, output_mode="append", sink=sink, name=name
-        )
+    return drain_rows(
+        spark,
+        out,
+        n_rows=batch_df.count(),
+        rows_per_partition=PY_STATE_ROWS_PER_PARTITION,
+        output_mode="append",
+        sink=sink,
+    )

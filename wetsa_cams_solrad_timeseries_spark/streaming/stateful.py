@@ -16,7 +16,6 @@ file set.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterable
 from typing import Any
 
@@ -101,20 +100,18 @@ def streaming_running_totals(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_partitions,
         drain_rows,
         PY_STATE_ROWS_PER_PARTITION,
-        size_partitions,
     )
 
-    name = f"stateful_out_{uuid.uuid4().hex[:12]}"
-    with drain_partitions(spark, size_partitions(
-        spark, batch_df.count(), rows_per_partition=PY_STATE_ROWS_PER_PARTITION
-    )):
-        # drain_rows detaches (and drops) the memory-sink view itself.
-        result = drain_rows(
-            spark, out, output_mode=mode, sink=sink, name=name
-        )
+    result = drain_rows(
+        spark,
+        out,
+        n_rows=batch_df.count(),
+        rows_per_partition=PY_STATE_ROWS_PER_PARTITION,
+        output_mode=mode,
+        sink=sink,
+    )
     # Keep only the LAST update per key (multi-trigger runs emit one row
     # per key per batch); with one batch this is the identity. The raw
     # update count is carried as __n_updates so callers/tests can assert

@@ -20,7 +20,6 @@ the stream (the DuckDB-oracle form in plans/pipeline_ops.py).
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterable
 
 import pandas as pd
@@ -86,11 +85,9 @@ def streaming_ttl_evictions(
     emit nothing). ``sink="parquet"`` drains executor-side (see
     ``_drain.drain_rows``)."""
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_partitions,
         drain_rows,
         file_replay_reader,
         PY_STATE_ROWS_PER_PARTITION,
-        size_partitions,
     )
 
     batch_df = spark.read.parquet(parquet_path)
@@ -108,11 +105,11 @@ def streaming_ttl_evictions(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"ttl_out_{uuid.uuid4().hex[:12]}"
-    with drain_partitions(spark, size_partitions(
-        spark, batch_df.count(), rows_per_partition=PY_STATE_ROWS_PER_PARTITION
-    )):
-        # drain_rows detaches (and drops) the memory-sink view itself.
-        return drain_rows(
-            spark, out, output_mode="append", sink=sink, name=name
-        )
+    return drain_rows(
+        spark,
+        out,
+        n_rows=batch_df.count(),
+        rows_per_partition=PY_STATE_ROWS_PER_PARTITION,
+        output_mode="append",
+        sink=sink,
+    )

@@ -96,24 +96,16 @@ def tws_running_totals(spark: SparkSession, split_dir: str) -> DataFrame:
     """Drain the multi-file replay through transformWithStateInPandas and
     return the final per-user totals. Asserts the multi-batch replay
     really updated some key across more than one micro-batch."""
-    import shutil
-    import uuid
-
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_checkpoint_dir,
-        drain_partitions,
+        drain_rows,
+        file_replay_reader,
         PY_STATE_ROWS_PER_PARTITION,
-        size_partitions,
     )
 
     batch_df = spark.read.parquet(split_dir)
-    reader = (
-        spark.readStream.schema(batch_df.schema)
-        .option("pathGlobFilter", "part-*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-        .select("user_id", "value")
-    )
+    reader = file_replay_reader(
+        spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
+    ).select("user_id", "value")
     out = reader.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=_RunningTotals(),
         outputStructType=_OUT_SCHEMA,
@@ -121,38 +113,22 @@ def tws_running_totals(spark: SparkSession, split_dir: str) -> DataFrame:
         timeMode="None",
     )
 
-    name = f"tws_{uuid.uuid4().hex[:12]}"
-    ckpt = drain_checkpoint_dir()
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     old_prov = spark.conf.get(prov_key, None)
     spark.conf.set(prov_key, _ROCKSDB)
     try:
-        with drain_partitions(spark, size_partitions(
-            spark, batch_df.count(), rows_per_partition=PY_STATE_ROWS_PER_PARTITION
-        )):
-            query = (
-                out.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        emitted = drain_rows(
+            spark,
+            out,
+            n_rows=batch_df.count(),
+            rows_per_partition=PY_STATE_ROWS_PER_PARTITION,
+            output_mode="update",
+        )
     finally:
         if old_prov is None:
             spark.conf.unset(prov_key)
         else:
             spark.conf.set(prov_key, old_prov)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        _detach_memory_table,
-    )
-
-    emitted = _detach_memory_table(spark, name)
     # Final state per key = largest n_events emission (monotone totals).
     per_key_rows = emitted.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("__emissions"),

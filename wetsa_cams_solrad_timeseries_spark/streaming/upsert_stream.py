@@ -94,18 +94,16 @@ def streaming_foreachbatch_upsert(
     more than one micro-batch (maxFilesPerTrigger=1 over a multi-file
     split), so cross-batch merge associativity is exercised."""
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_checkpoint_dir,
-        drain_partitions,
-        size_partitions,
+        file_replay_reader,
+        run_drain,
     )
 
     batch_df = spark.read.parquet(split_dir)
     ts_fix = ts_fix_expr(dict(batch_df.dtypes).get(ts_col), ts_col)
     reader = (
-        spark.readStream.schema(batch_df.schema)
-        .option("pathGlobFilter", "part-*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
+        file_replay_reader(
+            spark, f"{split_dir}/part-*.parquet", batch_df.schema, 1
+        )
         .withColumn(ts_col, ts_fix)
     )
 
@@ -153,18 +151,10 @@ def streaming_foreachbatch_upsert(
             os.path.join(root, f"gen_{bid}")
         )
 
-    ckpt = drain_checkpoint_dir()
     try:
-        with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-            query = (
-                reader.writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        run_drain(
+            spark, batch_df.count(), reader.writeStream.foreachBatch(apply_batch)
+        )
         gens = committed_gens()
         assert len(gens) > 1, (
             f"multi-batch upsert expected >1 micro-batch, got {len(gens)}"
@@ -172,5 +162,4 @@ def streaming_foreachbatch_upsert(
         result = spark.read.parquet(os.path.join(root, f"gen_{max(gens)}"))
         return spark.createDataFrame(result.collect(), schema=result.schema)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)

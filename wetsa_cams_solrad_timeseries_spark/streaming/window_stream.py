@@ -9,12 +9,11 @@ same helper the batch path uses, so batch and streaming can never drift.
 Late data: ``withWatermark`` bounds state; in production the sink runs
 append-mode with the watermark delay as the completeness SLA. For
 verification we run complete-mode into a memory sink and drain the source
-(``processAllAvailable``) — the result then equals the batch aggregation
+(``_drain.drain_rows``) — the result then equals the batch aggregation
 over the same files, which is exactly what the DuckDB oracle checks.
 """
 
 from __future__ import annotations
-
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,26 +39,17 @@ def streaming_tumbling_agg(
     would shard them in production); schema comes from a batch peek
     because streaming sources require a declared schema.
     """
+    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
+        drain_rows,
+        file_replay_reader,
+    )
+
     batch_df = spark.read.parquet(parquet_path)
     ts_fix = ts_fix_expr(dict(batch_df.dtypes).get(ts_col), ts_col)
-
-    # The file stream source wants a DIRECTORY; scope a shared directory to
-    # this table's file(s) with pathGlobFilter.
-    import os
-
-    directory, filename = os.path.split(parquet_path.rstrip("/"))
-    if filename.endswith(".parquet"):
-        reader = spark.readStream.schema(batch_df.schema).option(
-            "pathGlobFilter", filename
-        )
-        src_path = directory
-    else:
-        reader = spark.readStream.schema(batch_df.schema)
-        src_path = parquet_path
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = (
-        reader.parquet(src_path)
+        file_replay_reader(
+            spark, parquet_path, batch_df.schema, max_files_per_trigger
+        )
         .withColumn(ts_col, ts_fix)
         .withWatermark(ts_col, watermark)
     )
@@ -74,14 +64,6 @@ def streaming_tumbling_agg(
         )
         .select(*group_cols, F.col("__w.start").alias("bucket_start"), "n_events", "avg_value")
     )
-    
-    from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
-        drain_partitions,
-        drain_rows,
-        size_partitions,
+    return drain_rows(
+        spark, agg, n_rows=batch_df.count(), output_mode="complete"
     )
-
-    with drain_partitions(spark, size_partitions(spark, batch_df.count())):
-        # drain_rows owns the checkpoint lifecycle and detaches/drops the
-        # memory-sink view.
-        return drain_rows(spark, agg, output_mode="complete")
