@@ -535,13 +535,12 @@ def test_pq_compaction_drops_whole_code_groups(spark, sf_dir):
     # must remove ALL of them (a partial group would ADC-sum a phantom).
     from wetsa_cams_solrad_timeseries_spark.plans.deletes import (
         _ensure_code_delete_artifacts,
-        _Q269_TOKEN,
         _vec_takedown_pred,
         q270_pq_tombstone_compaction,
     )
 
     _r, _b, _codes, _tombs, codes_t, tomb_t = _ensure_code_delete_artifacts(
-        spark, sf_dir, "pq", _Q269_TOKEN, rotated=False
+        spark, sf_dir, "pq", rotated=False
     )
     if codes_t is None:
         pytest.skip("catalog unavailable")
@@ -575,13 +574,12 @@ def test_opq_tombstone_serve_equals_compacted_serve(spark, sf_dir):
     from wetsa_cams_solrad_timeseries_spark.plans.deletes import (
         _code_probe,
         _ensure_code_delete_artifacts,
-        _Q271_TOKEN,
         q271_opq_tombstone_compaction,
     )
 
     rot, books, codes, tombs, _codes_t, _tomb_t = (
         _ensure_code_delete_artifacts(
-            spark, sf_dir, "opq", _Q271_TOKEN, rotated=True
+            spark, sf_dir, "opq", rotated=True
         )
     )
     served_anti = _rows(

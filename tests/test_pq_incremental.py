@@ -113,6 +113,7 @@ def test_opq_rotation_table_is_the_frozen_artifact(spark, sf_dir):
         _Q195_M,
         q217_incremental_opq_index,
     )
+    from wetsa_cams_solrad_timeseries_spark._artifacts import load_params
     from wetsa_cams_solrad_timeseries_spark.catalog import table
 
     q217_incremental_opq_index(spark, sf_dir).collect()  # ensure generation
@@ -122,7 +123,7 @@ def test_opq_rotation_table_is_the_frozen_artifact(spark, sf_dir):
         if t.name.startswith("wetsa_opqrot_")
     ]
     assert tabs, "q217 did not persist its rotation"
-    persisted = {r["i"]: list(r["r"]) for r in spark.table(tabs[0]).collect()}
+    persisted = load_params(spark, tabs[0])["rot"]
 
     emb = table(spark, sf_dir, "embeddings")
     hist = emb.filter(F.col("vec_id") % 10 != 7)

@@ -356,6 +356,24 @@ def test_streaming_distinct_single_batch_raises(spark, sf_dir, tmp_path):
     assert views_after == views_before
 
 
+def test_upsert_single_batch_raises(spark, sf_dir, tmp_path):
+    """The upsert's multi-batch contract raises RuntimeError like every
+    other drain — not an assert, which ``python -O`` strips: a one-file
+    replay must fail loudly."""
+    import pytest
+
+    from wetsa_cams_solrad_timeseries_spark.streaming.upsert_stream import (
+        streaming_foreachbatch_upsert,
+    )
+
+    split_dir = str(tmp_path / "one_file_events")
+    spark.read.parquet(f"{sf_dir}/events.parquet").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(split_dir)
+    with pytest.raises(RuntimeError, match="multi-batch"):
+        streaming_foreachbatch_upsert(spark, split_dir)
+
+
 def test_drain_partitions_restores_conf_when_body_raises(
     spark, sf_dir, monkeypatch
 ):

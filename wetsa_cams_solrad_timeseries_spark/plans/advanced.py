@@ -2875,9 +2875,6 @@ GROUP BY 1
 # q185 — two-dimensional range query over the z-ordered layout
 # --------------------------------------------------------------------------
 
-_Q185_TOKEN = __import__("uuid").uuid4().hex[:12]
-
-
 def q185_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The query form q120's z-order manifest promises: events are
     sort-WRITTEN by the Morton key (``repartitionByRange(z) +
@@ -2901,22 +2898,13 @@ def q185_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     stabilize."""
     import glob
     import os
-    import tempfile
 
     import pyarrow.parquet as pq
 
-    from wetsa_cams_solrad_timeseries_spark._artifacts import claim_artifact_dir
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
     from wetsa_cams_solrad_timeseries_spark.plans.curation import _zvalue
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    zdir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_zorder_*_{sf_tag}"),
-        _Q185_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(), f"wetsa_zorder_{_Q185_TOKEN}_{sf_tag}"
-        ),
-    )
-    if not os.path.exists(os.path.join(zdir, "_SUCCESS")):
+    def write(path: str) -> None:
         ev = table(spark, sf_dir, "events")
         a = (F.col("user_id") % 256).cast("int")
         b = F.least(
@@ -2929,8 +2917,10 @@ def q185_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             keyed.repartitionByRange(16, "z")
             .sortWithinPartitions("z")
             .write.mode("overwrite")
-            .parquet(zdir)
+            .parquet(path)
         )
+
+    zdir = tmp_generation(sf_dir, "zorder", write)
 
     # Footer-level skip proof: files whose (a, b) envelope intersects the
     # rectangle. This is the math any lakehouse reader runs; if the
@@ -3570,30 +3560,20 @@ def q252_streaming_quantile_digest(
 
 
 def _split_lineitem(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
-    """Lineitem twin of curation._split_documents (same artifact
-    discipline) — the multi-file replay input for fact-table streams."""
-    import os
-    import tempfile
+    """Lineitem twin of curation._split_documents (same tmp generation)
+    — the multi-file replay input for fact-table streams."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
 
-    from wetsa_cams_solrad_timeseries_spark._artifacts import claim_artifact_dir
-    from wetsa_cams_solrad_timeseries_spark.plans.pipeline_ops import (
-        _PROC_TOKEN,
+    return tmp_generation(
+        sf_dir,
+        "li_split",
+        lambda path: spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        .select("l_extendedprice")
+        .repartition(n_files)
+        .write.mode("overwrite")
+        .parquet(path),
+        suffix=f"_f{n_files}",
     )
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    split_dir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_li_split_*_{sf_tag}*"),
-        _PROC_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(),
-            f"wetsa_li_split_{_PROC_TOKEN}_{sf_tag}_f{n_files}",
-        ),
-    )
-    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-            "l_extendedprice"
-        ).repartition(n_files).write.mode("overwrite").parquet(split_dir)
-    return split_dir
 
 
 _Q191_LEVELS_SQL = ", ".join(f"CAST({q} AS DOUBLE)" for q in _Q191_LEVELS)
@@ -3653,7 +3633,6 @@ JOIN ex ON ex.qlevel = p.qlevel
 # q193 — incremental (cross-run) dedup against a persisted LSH index
 # --------------------------------------------------------------------------
 
-_Q193_TOKEN = __import__("uuid").uuid4().hex[:12]
 _Q193_PERM, _Q193_BANDS, _Q193_BUCKETS = 16, 4, 16
 
 
@@ -3689,8 +3668,7 @@ def q193_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the index table is also the APPEND target: today's band rows
     insert into the same bucketed layout, so tomorrow's probe sees them
     with no reorganization."""
-    import os
-
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
     from wetsa_cams_solrad_timeseries_spark.operators.dedup import (
         lsh_band_rows,
         minhash_signatures,
@@ -3719,39 +3697,18 @@ def q193_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             bands=_Q193_BANDS,
         )
 
-    # Persist the index bucketed on the probe key (q81's artifact
-    # lifecycle: process-unique token, orphan sweep, atexit removal).
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    tname = f"wetsa_lshidx_{tag}_{_Q193_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        claim_warehouse_table(spark, f"wetsa_lshidx_{tag}_*", _Q193_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-    try:
-        if not spark.catalog.tableExists(tname):
-            write_bucketed(
-                hist_band(), tname, "bucket", n_buckets=_Q193_BUCKETS,
-                sort_col="bucket",
-            )
-        hist_idx = spark.table(tname)
-    except Exception as ex:  # noqa: BLE001 — catalog unavailable: plain frame
-        # Diagnosable, not silent: this fallback re-shingles the FULL
-        # history every call (correct output, incremental contract
-        # lost), which inflates any benchmark of this query ~5x — if a
-        # bench number looks like the build instead of the probe, this
-        # line is the first thing to look for.
-        import sys as _sys
-
-        print(
-            f"# q193: warehouse/catalog unavailable ({ex}); falling back "
-            "to full history re-index per call",
-            file=_sys.stderr,
-        )
-        hist_idx = hist_band()
+    # Persist the index bucketed on the probe key (the shared warehouse
+    # generation: process token, orphan sweep, atexit removal).
+    names = table_generation(
+        spark,
+        sf_dir,
+        ("lshidx",),
+        lambda n: write_bucketed(
+            hist_band(), n[0], "bucket", n_buckets=_Q193_BUCKETS,
+            sort_col="bucket",
+        ),
+    )
+    hist_idx = hist_band() if names is None else spark.table(names[0])
 
     probe = lsh_band_rows(
         minhash_signatures(new_sh, "doc_id", n_perm=_Q193_PERM),
@@ -3861,7 +3818,6 @@ Q193_ORACLE = _q193_oracle()
 # q201 — incrementally-maintained postings index (mergeable BM25 stats)
 # --------------------------------------------------------------------------
 
-_Q201_TOKEN = __import__("uuid").uuid4().hex[:12]
 _Q201_BUCKETS = 16
 
 
@@ -3890,8 +3846,7 @@ def q201_incremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is a bucketed ordered scan, shuffle-free forever after the one
     write. At 100 TB the merged stats write back through the same
     bucketed layout, touching only tokens the delta contained."""
-    import os
-
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
     from wetsa_cams_solrad_timeseries_spark.operators.text import (
         postings_stats,
     )
@@ -3903,27 +3858,18 @@ def q201_incremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stats(part: DataFrame) -> DataFrame:
         return postings_stats(part, "doc_id", "text")
 
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    tname = f"wetsa_postidx_{tag}_{_Q201_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        claim_warehouse_table(
-            spark, f"wetsa_postidx_{tag}_*", _Q201_TOKEN, tname
-        )
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-    try:
-        if not spark.catalog.tableExists(tname):
-            write_bucketed(
-                stats(docs.filter(~is_new)), tname, "token",
-                n_buckets=_Q201_BUCKETS, sort_col="token",
-            )
-        hist = spark.table(tname)
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frame
-        hist = stats(docs.filter(~is_new))
+    names = table_generation(
+        spark,
+        sf_dir,
+        ("postidx",),
+        lambda n: write_bucketed(
+            stats(docs.filter(~is_new)), n[0], "token",
+            n_buckets=_Q201_BUCKETS, sort_col="token",
+        ),
+    )
+    hist = (
+        stats(docs.filter(~is_new)) if names is None else spark.table(names[0])
+    )
 
     delta = stats(docs.filter(is_new))
     h = hist.select(

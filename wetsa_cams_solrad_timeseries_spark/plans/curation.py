@@ -1114,31 +1114,19 @@ def q117_json_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (K3) is where repeated analytics should run; this query is the
     landing-zone reader.
     """
-    import tempfile
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
 
-    from wetsa_cams_solrad_timeseries_spark._artifacts import (
-        claim_artifact_dir,
-    )
-    from wetsa_cams_solrad_timeseries_spark.plans.pipeline_ops import (
-        _PROC_TOKEN,
-    )
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    json_dir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_events_json_*_{sf_tag}"),
-        _PROC_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(), f"wetsa_events_json_{_PROC_TOKEN}_{sf_tag}"
-        ),
-    )
     ev = table(spark, sf_dir, "events")
     # Default JSON timestampFormat truncates to milliseconds; declare
     # microsecond precision on BOTH sides so event times round-trip.
     ts_fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-    if not os.path.exists(os.path.join(json_dir, "_SUCCESS")):
-        ev.write.mode("overwrite").option("timestampFormat", ts_fmt).json(
-            json_dir
-        )
+    json_dir = tmp_generation(
+        sf_dir,
+        "events_json",
+        lambda path: ev.write.mode("overwrite")
+        .option("timestampFormat", ts_fmt)
+        .json(path),
+    )
     parsed = (
         spark.read.schema(ev.schema)
         .option("timestampFormat", ts_fmt)
@@ -2446,30 +2434,19 @@ Q229_ORACLE = _q229_oracle()
 
 
 def _split_documents(spark: SparkSession, sf_dir: str, n_files: int = 2) -> str:
-    """Documents twin of vector._split_embeddings (same artifact
-    discipline: process-unique token, _SUCCESS gate, sweep + atexit) —
-    the multi-file replay input for document-stream queries."""
-    import tempfile
+    """Documents twin of vector._split_embeddings (same tmp generation)
+    — the multi-file replay input for document-stream queries."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
 
-    from wetsa_cams_solrad_timeseries_spark._artifacts import claim_artifact_dir
-    from wetsa_cams_solrad_timeseries_spark.plans.pipeline_ops import (
-        _PROC_TOKEN,
+    return tmp_generation(
+        sf_dir,
+        "docs_split",
+        lambda path: spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .repartition(n_files)
+        .write.mode("overwrite")
+        .parquet(path),
+        suffix=f"_f{n_files}",
     )
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    split_dir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_docs_split_*_{sf_tag}*"),
-        _PROC_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(),
-            f"wetsa_docs_split_{_PROC_TOKEN}_{sf_tag}_f{n_files}",
-        ),
-    )
-    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
-        spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-            n_files
-        ).write.mode("overwrite").parquet(split_dir)
-    return split_dir
 
 
 def q234_streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2645,9 +2622,6 @@ GROUP BY d.source
 # q245 — incremental curation: the day's shard against persisted state
 # --------------------------------------------------------------------------
 
-_Q245_TOKEN = __import__("uuid").uuid4().hex[:12]
-
-
 def q245_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q229's curation pipeline in its INCREMENTAL form — the shape a
     production ingest actually runs every day: curate ONLY the new shard
@@ -2697,6 +2671,7 @@ def q245_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         _N_PERM as _LSH_PERMS,
         quality_score_expr,
     )
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
     from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import (
         write_bucketed,
     )
@@ -2734,38 +2709,24 @@ def q245_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             bands=_LSH_BANDS,
         )
 
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    hash_t = f"wetsa_curhash_{tag}_{_Q245_TOKEN}"
-    band_t = f"wetsa_curband_{tag}_{_Q245_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
+    def build(names: list[str]) -> None:
+        hash_t, band_t = names
+        hq = hist_q().localCheckpoint(eager=True)  # hash AND band build
+        hq.select(F.md5("text").alias("__md5")).distinct().write.mode(
+            "overwrite"
+        ).saveAsTable(hash_t)
+        # Band index LAST: the commit gate for the state generation.
+        write_bucketed(
+            hist_bands(hq), band_t, "bucket", n_buckets=16, sort_col="bucket"
         )
 
-        for fam, tname in (
-            (f"wetsa_curhash_{tag}_*", hash_t),
-            (f"wetsa_curband_{tag}_*", band_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q245_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-    try:
-        if not spark.catalog.tableExists(band_t):
-            hq = hist_q().localCheckpoint(eager=True)  # hash AND band build
-            hq.select(F.md5("text").alias("__md5")).distinct().write.mode(
-                "overwrite"
-            ).saveAsTable(hash_t)
-            # Band index LAST: the commit gate for the state generation.
-            write_bucketed(
-                hist_bands(hq), band_t, "bucket", n_buckets=16,
-                sort_col="bucket",
-            )
-        hist_md5 = spark.table(hash_t)
-        hist_idx = spark.table(band_t)
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
+    names = table_generation(spark, sf_dir, ("curhash", "curband"), build)
+    if names is None:
         hq = hist_q().localCheckpoint(eager=True)
         hist_md5 = hq.select(F.md5("text").alias("__md5")).distinct()
         hist_idx = hist_bands(hq)
+    else:
+        hist_md5, hist_idx = (spark.table(n) for n in names)
 
     # 1. quality gate on the shard.
     s1 = d0n.filter(

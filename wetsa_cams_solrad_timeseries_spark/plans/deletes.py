@@ -49,7 +49,6 @@ from pyspark.sql import functions as F
 from wetsa_cams_solrad_timeseries_spark.catalog import table
 from wetsa_cams_solrad_timeseries_spark.plans._spec import make_specs, round6
 
-_DEL_TOKEN = __import__("uuid").uuid4().hex[:12]
 _DEL_PERM, _DEL_BANDS, _DEL_BUCKETS = 16, 4, 16
 # The takedown list: history docs with doc_id ≡ 4 (mod 13) — arrives
 # AFTER the index was built over the full history (that ordering is the
@@ -88,6 +87,25 @@ def _hist_band_rows(docs: DataFrame) -> DataFrame:
     )
 
 
+def _tombstone_table(
+    spark: SparkSession, sf_dir: str, family: str, tombs: DataFrame
+) -> str | None:
+    """The takedown ids as their own one-table warehouse generation,
+    claimed AFTER the index's (the arrival order deletes actually have:
+    the index holds the deleted rows until a compaction). Overwrite =
+    idempotent: a re-registered id already compacted away anti-joins to
+    nothing. None when the catalog is unavailable."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
+
+    names = table_generation(
+        spark,
+        sf_dir,
+        (family,),
+        lambda n: tombs.write.mode("overwrite").saveAsTable(n[0]),
+    )
+    return None if names is None else names[0]
+
+
 def _ensure_lsh_delete_artifacts(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, str | None]:
@@ -97,41 +115,26 @@ def _ensure_lsh_delete_artifacts(
     None when the catalog is unavailable (plain-frame fallback — q253
     still correct via the anti-join; q254 falls back to tombstone-
     filtered serve, which its shared oracle proves equivalent)."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
     from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import write_bucketed
 
     docs = table(spark, sf_dir, "documents")
     tombs = docs.filter(_is_takedown()).select("doc_id")
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    idx_t = f"wetsa_lshdel_{tag}_{_DEL_TOKEN}"
-    tomb_t = f"wetsa_lshtomb_{tag}_{_DEL_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        for fam, tname in (
-            (f"wetsa_lshdel_{tag}_*", idx_t),
-            (f"wetsa_lshtomb_{tag}_*", tomb_t),
-        ):
-            claim_warehouse_table(spark, fam, _DEL_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-    try:
-        if not spark.catalog.tableExists(idx_t):
-            write_bucketed(
-                _hist_band_rows(docs), idx_t, "bucket",
-                n_buckets=_DEL_BUCKETS, sort_col="bucket",
-            )
-            # Tombstones registered AFTER the index exists (the arrival
-            # order deletes actually have). Overwrite = idempotent: a
-            # re-registered id already compacted away anti-joins to
-            # nothing.
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-        elif not spark.catalog.tableExists(tomb_t):
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-        return spark.table(idx_t), spark.table(tomb_t), idx_t
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
+    names = table_generation(
+        spark,
+        sf_dir,
+        ("lshdel",),
+        lambda n: write_bucketed(
+            _hist_band_rows(docs), n[0], "bucket",
+            n_buckets=_DEL_BUCKETS, sort_col="bucket",
+        ),
+    )
+    tomb_t = None if names is None else _tombstone_table(
+        spark, sf_dir, "lshtomb", tombs
+    )
+    if tomb_t is None:
         return _hist_band_rows(docs), tombs, None
+    return spark.table(names[0]), spark.table(tomb_t), names[0]
 
 
 def _probe_and_verify(
@@ -408,9 +411,6 @@ def q255_oracle_for(sf_dir: str) -> str | None:
 # q256 — graph delete repair: affected-only re-link ≡ survivor rebuild
 # --------------------------------------------------------------------------
 
-_Q256_TOKEN = __import__("uuid").uuid4().hex[:12]
-
-
 def _ensure_graph_delete_artifacts(spark: SparkSession, sf_dir: str):
     """The q256 index generation: frozen (centroids, medoids) params +
     kind-tagged directed edges (knn/bridge, with the bridge's cell) +
@@ -422,6 +422,11 @@ def _ensure_graph_delete_artifacts(spark: SparkSession, sf_dir: str):
     cell-partitioned and the repair's read prunes to affected cells.
 
     Returns (cents, medoids dict, edges_df, probes_df)."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import (
+        load_params,
+        save_params,
+        table_generation,
+    )
     from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
         cell_knn_edges,
         cell_knn_edges_incremental,
@@ -437,24 +442,6 @@ def _ensure_graph_delete_artifacts(spark: SparkSession, sf_dir: str):
     emb = table(spark, sf_dir, "embeddings")
     is_new = F.col("vec_id") % 10 == 7
     hist = emb.filter(~is_new)
-
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    edges_t = f"wetsa_gdeledges_{tag}_{_Q256_TOKEN}"
-    probes_t = f"wetsa_gdelprobes_{tag}_{_Q256_TOKEN}"
-    params_t = f"wetsa_gdelparams_{tag}_{_Q256_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        for fam, tname in (
-            (f"wetsa_gdeledges_{tag}_*", edges_t),
-            (f"wetsa_gdelprobes_{tag}_*", probes_t),
-            (f"wetsa_gdelparams_{tag}_*", params_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q256_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
 
     def _build():
         cents = ivf_train_centroids(hist, k=16, n_iter=2)
@@ -486,38 +473,24 @@ def _ensure_graph_delete_artifacts(spark: SparkSession, sf_dir: str):
         )
         return cents, medoids, edges, probes
 
-    built = None
-    try:
-        if not spark.catalog.tableExists(params_t):
-            built = _build()
-            cents, medoids, edges, probes = built
-            edges.write.mode("overwrite").saveAsTable(edges_t)
-            probes.write.mode("overwrite").saveAsTable(probes_t)
-            # Medoid NODE IDS get a dedicated bigint column: routing
-            # them through the float payload (``vals[0]``) would
-            # round-trip lossily above 2^53 — silently wrong at the id
-            # scale a 100 TB corpus reaches (round-12 ADVICE).
-            rows = [
-                ("cent", c, None, list(cents[c])) for c in range(len(cents))
-            ]
-            rows += [
-                ("medoid", c, int(m), []) for c, m in sorted(medoids.items())
-            ]
-            spark.createDataFrame(
-                rows, "kind string, idx int, id bigint, vals array<double>"
-            ).write.mode("overwrite").saveAsTable(params_t)  # commit gate
-        cents_by_idx, medoids = {}, {}
-        for r in spark.table(params_t).collect():
-            if r["kind"] == "cent":
-                cents_by_idx[r["idx"]] = list(r["vals"])
-            else:
-                medoids[r["idx"]] = int(r["id"])
-        cents = [cents_by_idx[i] for i in range(len(cents_by_idx))]
-        return cents, medoids, spark.table(edges_t), spark.table(probes_t)
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
-        if built is None:
-            built = _build()
-        return built
+    def build(names: list[str]) -> None:
+        cents, medoids, edges, probes = _build()
+        edges.write.mode("overwrite").saveAsTable(names[0])
+        probes.write.mode("overwrite").saveAsTable(names[1])
+        save_params(spark, names[2], cent=cents, medoid=medoids)  # commit gate
+
+    names = table_generation(
+        spark, sf_dir, ("gdeledges", "gdelprobes", "gdelparams"), build
+    )
+    if names is None:
+        return _build()
+    params = load_params(spark, names[2])
+    return (
+        params["cent"],
+        params.get("medoid", {}),
+        spark.table(names[0]),
+        spark.table(names[1]),
+    )
 
 
 def q256_graph_delete_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -718,91 +691,26 @@ Q256_ORACLE = None  # LAZY — oracle_fn resolved at call time
 # q259 — cell-LOCAL delete compaction on the partitioned IVF-SQ8 index
 # --------------------------------------------------------------------------
 
-_Q259_TOKEN = __import__("uuid").uuid4().hex[:12]
-
-
 def _ensure_ivfsq_delete_artifacts(spark: SparkSession, sf_dir: str):
-    """q259's generation: frozen (coarse, vmin, step) params + the
-    history code table directory-PARTITIONED BY CELL (q227's layout) +
-    the takedown tombstone table. Params written LAST as the commit
-    gate. Returns (coarse, vmin, step, codes_table_name_or_None,
-    codes_df, tombstones_df)."""
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        hash_bounded_sample,
-        ivfsq_encode,
-        ivfsq_train,
-    )
-    from wetsa_cams_solrad_timeseries_spark.plans.vector import _Q223_CELLS
+    """q259's generation: q227's IVF-SQ8 build (vector._ivfsq_index —
+    frozen (coarse, vmin, step) params + the history code table
+    directory-PARTITIONED BY CELL, params LAST as the commit gate) on
+    its own ``sqdel`` table family, then the takedown tombstone table.
+    Returns (coarse, vmin, step, codes_table_name_or_None, codes_df,
+    tombstones_df)."""
+    from wetsa_cams_solrad_timeseries_spark.plans.vector import _ivfsq_index
 
     emb = table(spark, sf_dir, "embeddings")
-    hist = emb.filter(F.col("vec_id") % 10 != 7)
     tombs = emb.filter(_vec_takedown_pred()).select("vec_id")
-
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    codes_t = f"wetsa_sqdelcodes_{tag}_{_Q259_TOKEN}"
-    params_t = f"wetsa_sqdelparams_{tag}_{_Q259_TOKEN}"
-    tomb_t = f"wetsa_sqdeltomb_{tag}_{_Q259_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        for fam, tname in (
-            (f"wetsa_sqdelcodes_{tag}_*", codes_t),
-            (f"wetsa_sqdelparams_{tag}_*", params_t),
-            (f"wetsa_sqdeltomb_{tag}_*", tomb_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q259_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-
-    artifacts = None
-    try:
-        if not spark.catalog.tableExists(params_t):
-            coarse, vmin, step = ivfsq_train(
-                hash_bounded_sample(hist), cells=_Q223_CELLS
-            )
-            artifacts = (coarse, vmin, step)
-            (
-                ivfsq_encode(hist, coarse, vmin, step)
-                .select(F.col("vec_id").alias("neighbor_id"), "cell", "cd")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .saveAsTable(codes_t)
-            )
-            rows = [("coarse", c, list(coarse[c])) for c in range(_Q223_CELLS)]
-            rows += [("vmin", 0, list(vmin)), ("step", 0, list(step))]
-            spark.createDataFrame(
-                rows, "kind string, idx int, vals array<double>"
-            ).write.mode("overwrite").saveAsTable(params_t)  # commit gate
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-        elif not spark.catalog.tableExists(tomb_t):
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-        if artifacts is None:
-            coarse = [None] * _Q223_CELLS
-            vmin = step = None
-            for r in spark.table(params_t).collect():
-                if r["kind"] == "coarse":
-                    coarse[r["idx"]] = list(r["vals"])
-                elif r["kind"] == "vmin":
-                    vmin = list(r["vals"])
-                else:
-                    step = list(r["vals"])
-            artifacts = (coarse, vmin, step)
-        coarse, vmin, step = artifacts
-        return coarse, vmin, step, codes_t, spark.table(codes_t), spark.table(
-            tomb_t
-        )
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
-        if artifacts is None:
-            artifacts = ivfsq_train(
-                hash_bounded_sample(hist), cells=_Q223_CELLS
-            )
-        coarse, vmin, step = artifacts
-        codes = ivfsq_encode(hist, coarse, vmin, step).select(
-            F.col("vec_id").alias("neighbor_id"), "cell", "cd"
-        )
+    coarse, vmin, step, codes, codes_t = _ivfsq_index(
+        spark, sf_dir, emb.filter(F.col("vec_id") % 10 != 7), "sqdel"
+    )
+    tomb_t = None if codes_t is None else _tombstone_table(
+        spark, sf_dir, "sqdeltomb", tombs
+    )
+    if tomb_t is None:
         return coarse, vmin, step, None, codes, tombs
+    return coarse, vmin, step, codes_t, codes, spark.table(tomb_t)
 
 
 def compact_partitioned_cells(
@@ -1094,7 +1002,6 @@ Q260_ORACLE = _q260_oracle()
 # q262 — decremental postings maintenance: affected-token repair
 # --------------------------------------------------------------------------
 
-_Q262_TOKEN = __import__("uuid").uuid4().hex[:12]
 _Q262_BUCKETS = 16
 _Q262_TOPK = 50
 
@@ -1110,6 +1017,9 @@ def _ensure_postings_delete_artifacts(spark: SparkSession, sf_dir: str):
     per-token stats table and the tombstones. Stats written LAST as the
     commit gate. Returns (postings_t|None, stats_t|None,
     postings_df, stats_df, tombstones_df)."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
+    from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import write_bucketed
+
     docs = table(spark, sf_dir, "documents")
     tombs = docs.filter(_q262_doc_takedown()).select("doc_id")
 
@@ -1131,49 +1041,31 @@ def _ensure_postings_delete_artifacts(spark: SparkSession, sf_dir: str):
             F.max(F.struct("tf", "doc_id")).alias("top"),
         )
 
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    post_t = f"wetsa_postdel_{tag}_{_Q262_TOKEN}"
-    stats_t = f"wetsa_postdelstats_{tag}_{_Q262_TOKEN}"
-    tomb_t = f"wetsa_postdeltomb_{tag}_{_Q262_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
+    def build(names: list[str]) -> None:
+        post_t, stats_t = names
+        write_bucketed(
+            doc_tf(docs), post_t, "token",
+            n_buckets=_Q262_BUCKETS, sort_col="token",
         )
+        stats_of(spark.table(post_t)).write.mode("overwrite").saveAsTable(
+            stats_t
+        )  # commit gate
 
-        for fam, tname in (
-            (f"wetsa_postdel_{tag}_*", post_t),
-            (f"wetsa_postdelstats_{tag}_*", stats_t),
-            (f"wetsa_postdeltomb_{tag}_*", tomb_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q262_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-    try:
-        from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import (
-            write_bucketed,
-        )
-
-        if not spark.catalog.tableExists(stats_t):
-            write_bucketed(
-                doc_tf(docs), post_t, "token",
-                n_buckets=_Q262_BUCKETS, sort_col="token",
-            )
-            stats_of(spark.table(post_t)).write.mode("overwrite").saveAsTable(
-                stats_t
-            )  # commit gate
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-        elif not spark.catalog.tableExists(tomb_t):
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-        return (
-            post_t,
-            stats_t,
-            spark.table(post_t),
-            spark.table(stats_t),
-            spark.table(tomb_t),
-        )
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
+    names = table_generation(spark, sf_dir, ("postdel", "postdelstats"), build)
+    tomb_t = None if names is None else _tombstone_table(
+        spark, sf_dir, "postdeltomb", tombs
+    )
+    if tomb_t is None:
         postings = doc_tf(docs)
         return None, None, postings, stats_of(postings), tombs
+    post_t, stats_t = names
+    return (
+        post_t,
+        stats_t,
+        spark.table(post_t),
+        spark.table(stats_t),
+        spark.table(tomb_t),
+    )
 
 
 def q262_decremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1306,23 +1198,10 @@ def _split_cdc_events(spark: SparkSession, sf_dir: str) -> str:
     """The CDC replay input: new-shard documents as 'insert' events and
     history takedowns as 'delete' events, repartitioned into 3 files so
     micro-batches interleave the two arbitrarily (the order-independence
-    under test). Same artifact discipline as every replay dir."""
-    import tempfile
+    under test). The same tmp generation as every replay dir."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
 
-    from wetsa_cams_solrad_timeseries_spark._artifacts import claim_artifact_dir
-    from wetsa_cams_solrad_timeseries_spark.plans.pipeline_ops import (
-        _PROC_TOKEN,
-    )
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    split_dir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_cdc_split_*_{sf_tag}*"),
-        _PROC_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(), f"wetsa_cdc_split_{_PROC_TOKEN}_{sf_tag}_f3"
-        ),
-    )
-    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
+    def write(path: str) -> None:
         docs = table(spark, sf_dir, "documents")
         events = docs.filter(_is_new()).select(
             "doc_id", "text", F.lit("insert").alias("op")
@@ -1331,8 +1210,9 @@ def _split_cdc_events(spark: SparkSession, sf_dir: str) -> str:
                 "doc_id", "text", F.lit("delete").alias("op")
             )
         )
-        events.repartition(3).write.mode("overwrite").parquet(split_dir)
-    return split_dir
+        events.repartition(3).write.mode("overwrite").parquet(path)
+
+    return tmp_generation(sf_dir, "cdc_split", write, suffix="_f3")
 
 
 def q263_streaming_cdc_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1449,23 +1329,9 @@ def _split_vec_cdc_events(spark: SparkSession, sf_dir: str) -> str:
     """Vector twin of :func:`_split_cdc_events`: new-shard vectors as
     'insert' events and history takedowns as 'delete' events,
     repartitioned into 3 files so micro-batches interleave the kinds."""
-    import tempfile
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
 
-    from wetsa_cams_solrad_timeseries_spark._artifacts import claim_artifact_dir
-    from wetsa_cams_solrad_timeseries_spark.plans.pipeline_ops import (
-        _PROC_TOKEN,
-    )
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    split_dir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_gcdc_split_*_{sf_tag}*"),
-        _PROC_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(),
-            f"wetsa_gcdc_split_{_PROC_TOKEN}_{sf_tag}_f3",
-        ),
-    )
-    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
+    def write(path: str) -> None:
         emb = table(spark, sf_dir, "embeddings")
         events = emb.filter(F.col("vec_id") % 10 == 7).select(
             "vec_id", "embedding", F.lit("insert").alias("op")
@@ -1474,8 +1340,9 @@ def _split_vec_cdc_events(spark: SparkSession, sf_dir: str) -> str:
                 "vec_id", "embedding", F.lit("delete").alias("op")
             )
         )
-        events.repartition(3).write.mode("overwrite").parquet(split_dir)
-    return split_dir
+        events.repartition(3).write.mode("overwrite").parquet(path)
+
+    return tmp_generation(sf_dir, "gcdc_split", write, suffix="_f3")
 
 
 def q264_streaming_graph_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1576,7 +1443,6 @@ Q264_ORACLE = None  # LAZY — q255's oracle (stream-CDC ≡ batch mark-delete)
 # q267/q268 — pHash (perceptual) index delete lifecycle
 # --------------------------------------------------------------------------
 
-_Q267_TOKEN = __import__("uuid").uuid4().hex[:12]
 _PH_BUCKETS = 8  # q210's bucket count — the layout contract under test
 
 
@@ -1603,37 +1469,26 @@ def _ensure_phash_delete_artifacts(
     """(phash_index, tombstones, index_table_name) — the q267/q268
     fixture: q210's bucketed signature index built over the FULL history
     (deletes arrive after the build), takedown ids registered after."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
     from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import write_bucketed
 
     docs = table(spark, sf_dir, "documents")
     tombs = docs.filter(_is_takedown()).select("doc_id")
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    idx_t = f"wetsa_phdel_{tag}_{_Q267_TOKEN}"
-    tomb_t = f"wetsa_phtomb_{tag}_{_Q267_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        for fam, tname in (
-            (f"wetsa_phdel_{tag}_*", idx_t),
-            (f"wetsa_phtomb_{tag}_*", tomb_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q267_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-    try:
-        if not spark.catalog.tableExists(idx_t):
-            write_bucketed(
-                _phash_rows(docs.filter(~_is_new())), idx_t, "bkey",
-                n_buckets=_PH_BUCKETS, sort_col="bkey",
-            )
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-        elif not spark.catalog.tableExists(tomb_t):
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-        return spark.table(idx_t), spark.table(tomb_t), idx_t
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
+    names = table_generation(
+        spark,
+        sf_dir,
+        ("phdel",),
+        lambda n: write_bucketed(
+            _phash_rows(docs.filter(~_is_new())), n[0], "bkey",
+            n_buckets=_PH_BUCKETS, sort_col="bkey",
+        ),
+    )
+    tomb_t = None if names is None else _tombstone_table(
+        spark, sf_dir, "phtomb", tombs
+    )
+    if tomb_t is None:
         return _phash_rows(docs.filter(~_is_new())), tombs, None
+    return spark.table(names[0]), spark.table(tomb_t), names[0]
 
 
 def _phash_probe(
@@ -1763,126 +1618,37 @@ Q268_ORACLE = Q267_ORACLE
 # q269/q270/q271 — PQ / OPQ codebook-index delete lifecycle
 # --------------------------------------------------------------------------
 
-_Q269_TOKEN = __import__("uuid").uuid4().hex[:12]
-_Q271_TOKEN = __import__("uuid").uuid4().hex[:12]
-
-
 def _ensure_code_delete_artifacts(
     spark: SparkSession,
     sf_dir: str,
     family: str,
-    token: str,
     rotated: bool,
 ):
-    """Shared q269/q270/q271 fixture: a q197/q217-style generation —
-    frozen codebooks (and, for OPQ, the frozen rotation) trained on the
-    FULL history (deletes arrive after the build, so the deleted rows
-    ARE in the training set and in the code table — that ordering is the
-    point), history codes bucketed on ``neighbor_id``, takedown vec_ids
-    in a tombstone table, books written LAST as the commit gate.
+    """Shared q269/q270/q271 fixture: q197/q217's index build
+    (vector._pq_index — frozen codebooks and, for OPQ, the frozen
+    rotation, history codes bucketed on ``neighbor_id``, books written
+    LAST as the commit gate) on its own ``<family>del`` table family,
+    trained on the FULL history (deletes arrive after the build, so the
+    deleted rows ARE in the training set and in the code table — that
+    ordering is the point), then the takedown vec_ids in a tombstone
+    table.
 
     Returns (rotation | None, books, hist_codes, tombstones,
     codes_table | None, tomb_table | None)."""
-    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        opq_train,
-        pq_encode,
-        pq_train_codebooks,
-        rotate_vectors,
-    )
-    from wetsa_cams_solrad_timeseries_spark.plans.vector import (
-        _DIM,
-        _Q195_KSUB,
-        _Q195_M,
-        _Q197_BUCKETS,
-    )
-    from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import write_bucketed
+    from wetsa_cams_solrad_timeseries_spark.plans.vector import _pq_index
 
     emb = table(spark, sf_dir, "embeddings")
-    hist = emb.filter(F.col("vec_id") % 10 != 7)
     tombs = emb.filter(_vec_takedown_pred()).select("vec_id")
-
-    def as_codes(df: DataFrame) -> DataFrame:
-        return df.select(F.col("vec_id").alias("neighbor_id"), "sub", "code")
-
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    codes_t = f"wetsa_{family}delcodes_{tag}_{token}"
-    books_t = f"wetsa_{family}delbooks_{tag}_{token}"
-    rot_t = f"wetsa_{family}delrot_{tag}_{token}"
-    tomb_t = f"wetsa_{family}deltomb_{tag}_{token}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        fams = [
-            (f"wetsa_{family}delcodes_{tag}_*", codes_t),
-            (f"wetsa_{family}delbooks_{tag}_*", books_t),
-            (f"wetsa_{family}deltomb_{tag}_*", tomb_t),
-        ]
-        if rotated:
-            fams.append((f"wetsa_{family}delrot_{tag}_*", rot_t))
-        for fam, tname in fams:
-            claim_warehouse_table(spark, fam, token, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-
-    def _train():
-        if rotated:
-            return opq_train(hist, m=_Q195_M, ksub=_Q195_KSUB, dim=_DIM)
-        return None, pq_train_codebooks(
-            hist, m=_Q195_M, ksub=_Q195_KSUB, dim=_DIM
-        )
-
-    def _encode(df: DataFrame, rotation, books) -> DataFrame:
-        src = rotate_vectors(df, rotation) if rotated else df
-        return as_codes(pq_encode(src, books))
-
-    rotation = books = None
-    try:
-        if not spark.catalog.tableExists(books_t):
-            rotation, books = _train()
-            write_bucketed(
-                _encode(hist, rotation, books),
-                codes_t,
-                "neighbor_id",
-                n_buckets=_Q197_BUCKETS,
-                sort_col="neighbor_id",
-            )
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-            if rotated:
-                spark.createDataFrame(
-                    [(i, list(row)) for i, row in enumerate(rotation)],
-                    "i int, r array<double>",
-                ).write.mode("overwrite").saveAsTable(rot_t)
-            spark.createDataFrame(
-                [
-                    (s, c, books[s][c])
-                    for s in range(_Q195_M)
-                    for c in range(_Q195_KSUB)
-                ],
-                "sub int, code int, c array<double>",
-            ).write.mode("overwrite").saveAsTable(books_t)  # commit gate
-        elif not spark.catalog.tableExists(tomb_t):
-            tombs.write.mode("overwrite").saveAsTable(tomb_t)
-        if books is None:
-            if rotated:
-                rotation = [None] * _DIM
-                for r in spark.table(rot_t).collect():
-                    rotation[r["i"]] = list(r["r"])
-            books = [[None] * _Q195_KSUB for _ in range(_Q195_M)]
-            for r in spark.table(books_t).collect():
-                books[r["sub"]][r["code"]] = list(r["c"])
-        return (
-            rotation, books, spark.table(codes_t), spark.table(tomb_t),
-            codes_t, tomb_t,
-        )
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
-        if books is None:
-            rotation, books = _train()
-        return (
-            rotation, books, _encode(hist, rotation, books), tombs, None,
-            None,
-        )
+    rotation, books, codes, codes_t = _pq_index(
+        spark, sf_dir, emb.filter(F.col("vec_id") % 10 != 7),
+        f"{family}del", rotated,
+    )
+    tomb_t = None if codes_t is None else _tombstone_table(
+        spark, sf_dir, f"{family}deltomb", tombs
+    )
+    if tomb_t is None:
+        return rotation, books, codes, tombs, None, None
+    return rotation, books, codes, spark.table(tomb_t), codes_t, tomb_t
 
 
 def _code_probe(
@@ -1954,7 +1720,7 @@ def q269_pq_tombstone_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the SAME full-history-trained frozen books (frozen means
     frozen: FAISS semantics keep the codebooks through deletes)."""
     _rot, books, codes, tombs, _, _ = _ensure_code_delete_artifacts(
-        spark, sf_dir, "pq", _Q269_TOKEN, rotated=False
+        spark, sf_dir, "pq", rotated=False
     )
     return _code_probe(spark, sf_dir, None, books, codes, tombs, False)
 
@@ -1977,7 +1743,7 @@ def q270_pq_tombstone_compaction(
 
     _rot, books, codes, tombs, codes_t, tomb_t = (
         _ensure_code_delete_artifacts(
-            spark, sf_dir, "pq", _Q269_TOKEN, rotated=False
+            spark, sf_dir, "pq", rotated=False
         )
     )
     if codes_t is None:
@@ -2022,7 +1788,7 @@ def q271_opq_tombstone_compaction(
 
     rot, books, codes, tombs, codes_t, tomb_t = (
         _ensure_code_delete_artifacts(
-            spark, sf_dir, "opq", _Q271_TOKEN, rotated=True
+            spark, sf_dir, "opq", rotated=True
         )
     )
     if codes_t is None:

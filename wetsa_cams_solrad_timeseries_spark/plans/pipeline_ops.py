@@ -11,8 +11,6 @@ oracle (DuckDB sums to HUGEINT), float aggregates round via the nudge.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -22,9 +20,6 @@ from wetsa_cams_solrad_timeseries_spark.plans._spec import (
     round6,
     round6_sql,
 )
-
-_PROC_TOKEN = uuid.uuid4().hex[:12]
-
 
 # --------------------------------------------------------------------------
 # q86 — deterministic train/val/test hash split
@@ -339,29 +334,17 @@ def q91_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the exact-decimal sum: the rewritten layout's row order
     differs from the source file's, which is exactly the reorder case
     round6 alone cannot stabilize."""
-    import os
-    import tempfile
-
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
     from wetsa_cams_solrad_timeseries_spark.plans._spec import exact_sum
 
-    from wetsa_cams_solrad_timeseries_spark._artifacts import claim_artifact_dir
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    # Process-unique token, not the pid: /tmp outlives the process and a
-    # recycled pid would reuse a stale layout via the _SUCCESS gate.
-    # claim_artifact_dir sweeps prior-generation layouts for this SF and
-    # registers ours for atexit removal (bounded /tmp growth).
-    part_dir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_events_parts_*_{sf_tag}"),
-        _PROC_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(), f"wetsa_events_parts_{_PROC_TOKEN}_{sf_tag}"
-        ),
+    part_dir = tmp_generation(
+        sf_dir,
+        "events_parts",
+        lambda path: table(spark, sf_dir, "events")
+        .write.mode("overwrite")
+        .partitionBy("event_type")
+        .parquet(path),
     )
-    if not os.path.exists(os.path.join(part_dir, "_SUCCESS")):
-        table(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(part_dir)
 
     df = (
         spark.read.parquet(part_dir)

@@ -51,6 +51,38 @@ from wetsa_cams_solrad_timeseries_spark.plans._spec import QuerySpec
 # MUST be pinned ahead of the automatic rotation so their fresh row
 # lands on the changed code.
 _PIN_FIRST = (
+    # Every persisted index and replay layout is one generation of the
+    # _artifacts kernels: table_generation (warehouse tables, commit
+    # gate last, plain-frame fallback with one stderr note),
+    # save_params/load_params (frozen parameters) and tmp_generation
+    # (/tmp layouts behind a _SUCCESS gate), all named with the one
+    # process TOKEN. Outputs must be unchanged; the pins put a fresh
+    # correctness row on every query whose generation moved onto them
+    # and was not pinned below: the warehouse sites first, then the tmp
+    # layouts.
+    "q81_bucketed_colocated_join",
+    "q193_incremental_dedup",
+    "q197_incremental_pq_index",
+    "q201_incremental_postings",
+    "q207_hybrid_from_index",
+    "q210_incremental_phash",
+    "q217_incremental_opq_index",
+    "q227_incremental_ivfsq_index",
+    "q233_hybrid_sla_from_index",
+    "q245_incremental_curation",
+    "q253_lsh_tombstone_serve",
+    "q254_lsh_tombstone_compaction",
+    "q259_ivfsq_delete_compaction",
+    "q262_decremental_postings",
+    "q267_phash_tombstone_serve",
+    "q268_phash_tombstone_compaction",
+    "q269_pq_tombstone_serve",
+    "q270_pq_tombstone_compaction",
+    "q271_opq_tombstone_compaction",
+    "q91_partition_pruned_scan",
+    "q117_json_source_scan",
+    "q122_incremental_agg",
+    "q185_zorder_pruned_scan",
     # Every streaming query drains through streaming/_drain.run_drain
     # (disposable checkpoints, the lowered shuffle-partition conf, start →
     # drain → stop, fed-batch counts), most of them through its

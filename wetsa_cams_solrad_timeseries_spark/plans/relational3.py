@@ -5,8 +5,6 @@ customers (Q18), disjunctive predicate pushdown (Q19), and market share
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,9 +16,6 @@ from wetsa_cams_solrad_timeseries_spark.plans._spec import (
     round6,
     round6_sql,
 )
-
-_PROC_TOKEN = uuid.uuid4().hex[:12]
-
 
 # --------------------------------------------------------------------------
 # q74 — large-volume customers (TPC-H Q18 shape)
@@ -363,41 +358,24 @@ def q81_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_bucketing.py). Falls back to the identical plain join when
     the session can't host managed tables (e.g. a read-only metastore
     cwd), so the correctness row never depends on catalog health."""
-    import os
-
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
     from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import write_bucketed
 
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    # Process-unique token, NOT the pid: the warehouse dir outlives the
-    # process (driver runs leave ./spark-warehouse behind), and a recycled
-    # pid would make tableExists() skip the write and read a stale table.
-    lt = f"wetsa_b_li_{tag}_{_PROC_TOKEN}"
-    ot = f"wetsa_b_o_{tag}_{_PROC_TOKEN}"
-    # Sweep prior-generation bucketed table dirs (their owning processes'
-    # in-memory metastores are gone, so the warehouse files are orphans)
-    # and register ours for atexit removal — bounded warehouse growth.
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_artifact_dir,
-        )
 
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        wh = wh.removeprefix("file://").removeprefix("file:")
-        for t, fam in ((lt, f"wetsa_b_li_{tag}_*"), (ot, f"wetsa_b_o_{tag}_*")):
-            claim_artifact_dir(
-                os.path.join(wh, fam), _PROC_TOKEN, os.path.join(wh, t)
-            )
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-    try:
-        if not spark.catalog.tableExists(lt):
-            write_bucketed(li, lt, "l_orderkey", n_buckets=16)
-        if not spark.catalog.tableExists(ot):
-            write_bucketed(o, ot, "o_orderkey", n_buckets=16)
+    def build(names: list[str]) -> None:
+        lt, ot = names
+        write_bucketed(li, lt, "l_orderkey", n_buckets=16)
+        write_bucketed(o, ot, "o_orderkey", n_buckets=16)  # commit gate
+
+    names = table_generation(spark, sf_dir, ("b_li", "b_o"), build)
+    if names is None:
+        j = li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+    else:
+        lt, ot = names
         # hint("merge"): at gate SF the orders side is broadcast-small,
         # which would plan a BroadcastExchange and hide the property
         # under test; the bucketed fact-fact join IS the sort-merge path
@@ -410,10 +388,6 @@ def q81_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 "bucketed join planned an Exchange — bucket pruning broke"
             )
-    except RuntimeError:
-        raise
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain join
-        j = li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return j.groupBy("o_orderstatus").agg(
         round6(exact_sum(rev)).alias("revenue"),

@@ -535,14 +535,12 @@ GROUP BY user_id
 # --------------------------------------------------------------------------
 # Shared multi-file replay input for the cross-batch streaming queries
 # --------------------------------------------------------------------------
-_SPLIT_TOKEN = __import__("uuid").uuid4().hex[:12]
-
-
 def _split_events(spark: SparkSession, sf_dir: str, n_files: int = 2) -> str:
     """Materialize the (single-file) events table as ``n_files`` parquet
     files so ``maxFilesPerTrigger=1`` yields one micro-batch per file.
-    Written once per process per SF (the _SUCCESS marker gates the
-    rewrite); per-process dir so concurrent harnesses never race.
+    Written once per process per SF (a tmp generation: the _SUCCESS
+    marker gates the rewrite); per-process dir so concurrent harnesses
+    never race.
 
     Default is TWO files: the minimum that exercises cross-batch state
     (every consumer asserts >1 micro-batch fed rows, and the
@@ -552,32 +550,20 @@ def _split_events(spark: SparkSession, sf_dir: str, n_files: int = 2) -> str:
     harness: offset/commit log writes, state-store delta commits, task
     scheduling) while adding no new semantics — 3 files was measured
     pure bench tax across the five consumers."""
-    import tempfile
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
 
-    from wetsa_cams_solrad_timeseries_spark._artifacts import claim_artifact_dir
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    # Process-unique token, not the pid: /tmp outlives the process and a
-    # recycled pid would reuse a stale split via the _SUCCESS gate.
-    # claim_artifact_dir sweeps prior-generation splits for this SF and
-    # registers ours for atexit removal (bounded /tmp growth).
     # n_files is part of the cache identity: the _SUCCESS gate would
     # otherwise hand a caller requesting 3 files whichever split ran
-    # first in this process. The sweep pattern stays wide so stale
-    # generations of ANY file count are collected.
-    split_dir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_events_split_*_{sf_tag}*"),
-        _SPLIT_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(),
-            f"wetsa_events_split_{_SPLIT_TOKEN}_{sf_tag}_f{n_files}",
-        ),
+    # first in this process.
+    return tmp_generation(
+        sf_dir,
+        "events_split",
+        lambda path: spark.read.parquet(f"{sf_dir}/events.parquet")
+        .repartition(n_files)
+        .write.mode("overwrite")
+        .parquet(path),
+        suffix=f"_f{n_files}",
     )
-    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
-        spark.read.parquet(f"{sf_dir}/events.parquet").repartition(
-            n_files
-        ).write.mode("overwrite").parquet(split_dir)
-    return split_dir
 
 
 # --------------------------------------------------------------------------
@@ -956,7 +942,6 @@ Q195_ORACLE = None
 # q197 — incremental PQ index: frozen codebooks + persisted code table
 # --------------------------------------------------------------------------
 
-_Q197_TOKEN = __import__("uuid").uuid4().hex[:12]
 _Q197_QBOUND = 100  # queries = new-shard ids below this bound (≤10 queries)
 _Q197_K = 3
 _Q197_BUCKETS = 16
@@ -994,82 +979,97 @@ def q197_incremental_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         adc_topk,
         pq_encode,
         pq_query_luts,
-        pq_train_codebooks,
     )
-    from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import write_bucketed
 
     emb = table(spark, sf_dir, "embeddings")
     is_new = F.col("vec_id") % 10 == 7
-    hist = emb.filter(~is_new)
-
-    def as_codes(df: DataFrame) -> DataFrame:
-        return df.select(F.col("vec_id").alias("neighbor_id"), "sub", "code")
-
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    books_t = f"wetsa_pqbooks_{tag}_{_Q197_TOKEN}"
-    codes_t = f"wetsa_pqcodes_{tag}_{_Q197_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        for fam, tname in (
-            (f"wetsa_pqbooks_{tag}_*", books_t),
-            (f"wetsa_pqcodes_{tag}_*", codes_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q197_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-
-    books = None
-    try:
-        if not spark.catalog.tableExists(books_t):
-            # Index build (once per corpus generation): train on history,
-            # persist books + bucketed history codes.
-            books = pq_train_codebooks(
-                hist, m=_Q195_M, ksub=_Q195_KSUB, dim=_DIM
-            )
-            # Codes FIRST, books LAST: tableExists(books_t) is the
-            # steady-state gate, so the gate table must be the final
-            # write of the generation — the reverse order left a
-            # committed books_t beside a failed codes write, and every
-            # later run then silently fell into the full-re-encode
-            # except-branch (correct output, incremental contract lost).
-            write_bucketed(
-                as_codes(pq_encode(hist, books)),
-                codes_t,
-                "neighbor_id",
-                n_buckets=_Q197_BUCKETS,
-                sort_col="neighbor_id",
-            )
-            spark.createDataFrame(
-                [
-                    (s, c, books[s][c])
-                    for s in range(_Q195_M)
-                    for c in range(_Q195_KSUB)
-                ],
-                "sub int, code int, c array<double>",
-            ).write.mode("overwrite").saveAsTable(books_t)
-        if books is None:
-            # Steady state: the frozen books come off the catalog —
-            # m·ksub rows, a bounded (and documented) collect.
-            books = [
-                [None] * _Q195_KSUB for _ in range(_Q195_M)
-            ]
-            for r in spark.table(books_t).collect():
-                books[r["sub"]][r["code"]] = list(r["c"])
-        hist_codes = spark.table(codes_t)
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
-        if books is None:
-            books = pq_train_codebooks(
-                hist, m=_Q195_M, ksub=_Q195_KSUB, dim=_DIM
-            )
-        hist_codes = as_codes(pq_encode(hist, books))
-
-    new_codes = as_codes(pq_encode(emb.filter(is_new), books))
+    _rot, books, hist_codes, _ = _pq_index(
+        spark, sf_dir, emb.filter(~is_new), "pq", rotated=False
+    )
+    new_codes = pq_encode(emb.filter(is_new), books).select(
+        F.col("vec_id").alias("neighbor_id"), "sub", "code"
+    )
     index = hist_codes.unionByName(new_codes)
     q_src = emb.filter(is_new & (F.col("vec_id") < _Q197_QBOUND))
     return adc_topk(index, pq_query_luts(q_src, books), k=_Q197_K)
+
+
+def _pq_index(
+    spark: SparkSession,
+    sf_dir: str,
+    hist: DataFrame,
+    prefix: str,
+    rotated: bool,
+):
+    """The frozen-codebook index generation — one build shared by q197
+    (``pq``), q217 (``opq``, rotated) and the q269–q271 delete lifecycle
+    (``pqdel``/``opqdel``), each on its own table family: ``hist``
+    trains the codebooks (rotated: OPQ's alternating solver trains R
+    and the books on the rotated sample) ONCE, its codes persist in
+    ``<prefix>codes`` bucketed on ``neighbor_id``, R in ``<prefix>rot``,
+    and the books in ``<prefix>books``. Codes FIRST, books LAST: the
+    books table is the commit gate, so it must be the generation's
+    final write — the reverse order left a committed books table beside
+    a failed codes write, and every later run silently fell into the
+    full re-encode fallback (correct output, incremental contract lost).
+
+    Steady state loads the frozen (R, books) — parameter-sized collects
+    (dim + m·ksub rows) — and never re-trains or re-encodes history
+    (tests/test_pq_incremental.py bombs the trainers). Returns
+    (rotation | None, books, hist_codes, codes_table | None); the table
+    is None when the catalog is unavailable (plain frames)."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import (
+        load_params,
+        save_params,
+        table_generation,
+    )
+    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
+        opq_train,
+        pq_encode,
+        pq_train_codebooks,
+        rotate_vectors,
+    )
+    from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import write_bucketed
+
+    def train():
+        if rotated:
+            return opq_train(hist, m=_Q195_M, ksub=_Q195_KSUB, dim=_DIM)
+        return None, pq_train_codebooks(
+            hist, m=_Q195_M, ksub=_Q195_KSUB, dim=_DIM
+        )
+
+    def codes(rotation, books) -> DataFrame:
+        src = rotate_vectors(hist, rotation) if rotated else hist
+        return pq_encode(src, books).select(
+            F.col("vec_id").alias("neighbor_id"), "sub", "code"
+        )
+
+    def build(names: list[str]) -> None:
+        rotation, books = train()
+        write_bucketed(
+            codes(rotation, books),
+            names[0],
+            "neighbor_id",
+            n_buckets=_Q197_BUCKETS,
+            sort_col="neighbor_id",
+        )
+        if rotated:
+            save_params(spark, names[1], rot=rotation)
+        save_params(
+            spark, names[-1], **{f"sub{s}": books[s] for s in range(_Q195_M)}
+        )
+
+    fams = [f"{prefix}codes", f"{prefix}books"]
+    if rotated:
+        fams.insert(1, f"{prefix}rot")
+    names = table_generation(spark, sf_dir, fams, build)
+    if names is None:
+        rotation, books = train()
+        return rotation, books, codes(rotation, books), None
+    rotation = load_params(spark, names[1])["rot"] if rotated else None
+    p = load_params(spark, names[-1])
+    books = [p[f"sub{s}"] for s in range(_Q195_M)]
+    return rotation, books, spark.table(names[0]), names[0]
 
 
 # Everything downstream of the ``vecs`` CTE — shared verbatim by the
@@ -1214,32 +1214,24 @@ def _split_embeddings(
     pred=None,
     variant: str = "",
 ) -> str:
-    """Embeddings twin of :func:`_split_events` (same artifact
-    discipline: process-unique token, _SUCCESS gate, sweep + atexit).
+    """Embeddings twin of :func:`_split_events` (same tmp generation).
     ``pred``/``variant`` carve a sub-shard replay (q257 streams the NEW
     shard only — history is the pre-existing index side); ``variant``
     keys the artifact dir so filtered and full splits coexist."""
-    import tempfile
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
 
-    from wetsa_cams_solrad_timeseries_spark._artifacts import claim_artifact_dir
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) + (
-        f"v{variant}" if variant else ""
-    )
-    split_dir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_emb_split_*_{sf_tag}*"),
-        _SPLIT_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(),
-            f"wetsa_emb_split_{_SPLIT_TOKEN}_{sf_tag}_f{n_files}",
-        ),
-    )
-    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
+    def write(path: str) -> None:
         src = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         if pred is not None:
             src = src.filter(pred)
-        src.repartition(n_files).write.mode("overwrite").parquet(split_dir)
-    return split_dir
+        src.repartition(n_files).write.mode("overwrite").parquet(path)
+
+    return tmp_generation(
+        sf_dir,
+        "emb_split",
+        write,
+        suffix=(f"v{variant}" if variant else "") + f"_f{n_files}",
+    )
 
 
 def q203_streaming_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1987,9 +1979,6 @@ Q216_ORACLE = None  # LAZY — oracle_fn resolved at call time (q56 pattern)
 # q217 — incremental OPQ index: frozen rotation + frozen books + code table
 # --------------------------------------------------------------------------
 
-_Q217_TOKEN = __import__("uuid").uuid4().hex[:12]
-
-
 def q217_incremental_opq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q197's cross-run index lifecycle with OPQ's learned rotation
     threaded through it — the round-9 verdict's missing lifecycle: the
@@ -2016,83 +2005,20 @@ def q217_incremental_opq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally: encoding is a pure function of (vector, R, books)."""
     from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
         adc_topk,
-        opq_train,
         pq_encode,
         pq_query_luts,
         rotate_vectors,
     )
-    from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import write_bucketed
 
     emb = table(spark, sf_dir, "embeddings")
     is_new = F.col("vec_id") % 10 == 7
-    hist = emb.filter(~is_new)
-
-    def as_codes(df: DataFrame) -> DataFrame:
-        return df.select(F.col("vec_id").alias("neighbor_id"), "sub", "code")
-
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    rot_t = f"wetsa_opqrot_{tag}_{_Q217_TOKEN}"
-    codes_t = f"wetsa_opqcodes_{tag}_{_Q217_TOKEN}"
-    books_t = f"wetsa_opqbooks_{tag}_{_Q217_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        for fam, tname in (
-            (f"wetsa_opqrot_{tag}_*", rot_t),
-            (f"wetsa_opqcodes_{tag}_*", codes_t),
-            (f"wetsa_opqbooks_{tag}_*", books_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q217_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-
-    rotation = books = None
-    try:
-        if not spark.catalog.tableExists(books_t):
-            rotation, books = opq_train(
-                hist, m=_Q195_M, ksub=_Q195_KSUB, dim=_DIM
-            )
-            write_bucketed(
-                as_codes(pq_encode(rotate_vectors(hist, rotation), books)),
-                codes_t,
-                "neighbor_id",
-                n_buckets=_Q197_BUCKETS,
-                sort_col="neighbor_id",
-            )
-            spark.createDataFrame(
-                [(i, list(row)) for i, row in enumerate(rotation)],
-                "i int, r array<double>",
-            ).write.mode("overwrite").saveAsTable(rot_t)
-            # books LAST: the commit gate for the whole generation.
-            spark.createDataFrame(
-                [
-                    (s, c, books[s][c])
-                    for s in range(_Q195_M)
-                    for c in range(_Q195_KSUB)
-                ],
-                "sub int, code int, c array<double>",
-            ).write.mode("overwrite").saveAsTable(books_t)
-        if books is None:
-            rotation = [None] * _DIM
-            for r in spark.table(rot_t).collect():
-                rotation[r["i"]] = list(r["r"])
-            books = [[None] * _Q195_KSUB for _ in range(_Q195_M)]
-            for r in spark.table(books_t).collect():
-                books[r["sub"]][r["code"]] = list(r["c"])
-        hist_codes = spark.table(codes_t)
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
-        if books is None:
-            rotation, books = opq_train(
-                hist, m=_Q195_M, ksub=_Q195_KSUB, dim=_DIM
-            )
-        hist_codes = as_codes(
-            pq_encode(rotate_vectors(hist, rotation), books)
-        )
-
+    rotation, books, hist_codes, _ = _pq_index(
+        spark, sf_dir, emb.filter(~is_new), "opq", rotated=True
+    )
     rot_new = rotate_vectors(emb.filter(is_new), rotation)
-    new_codes = as_codes(pq_encode(rot_new, books))
+    new_codes = pq_encode(rot_new, books).select(
+        F.col("vec_id").alias("neighbor_id"), "sub", "code"
+    )
     index = hist_codes.unionByName(new_codes)
     q_src = rot_new.filter(F.col("vec_id") < _Q197_QBOUND)
     return adc_topk(index, pq_query_luts(q_src, books), k=_Q197_K)
@@ -2910,8 +2836,58 @@ Q224_ORACLE = None  # LAZY — oracle_fn resolved at call time (q56 pattern)
 # q227 — incremental IVF-SQ8 index: cell-PARTITIONED codes, pruned probes
 # --------------------------------------------------------------------------
 
-_Q227_TOKEN = __import__("uuid").uuid4().hex[:12]
 _Q227_NPROBE = _Q223_NPROBE  # shared probe width — the oracle template reuses it
+
+
+def _ivfsq_index(
+    spark: SparkSession, sf_dir: str, hist: DataFrame, prefix: str
+):
+    """The IVF-SQ8 index generation — one build shared by q227
+    (``ivfsq``) and q259's delete lifecycle (``sqdel``), each on its own
+    table family: ``hist``'s hash-bounded sample trains the frozen
+    (coarse, vmin, step) ONCE, its residual-SQ8 codes persist in
+    ``<prefix>codes`` directory-PARTITIONED BY CELL, and the params
+    (≤ n_cells + 2 rows) in ``<prefix>params``, written LAST as the
+    commit gate (the q197 commit-order lesson). Returns (coarse, vmin,
+    step, hist_codes, codes_table | None); the table is None when the
+    catalog is unavailable (plain frames)."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import (
+        load_params,
+        save_params,
+        table_generation,
+    )
+    from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
+        hash_bounded_sample,
+        ivfsq_encode,
+        ivfsq_train,
+    )
+
+    def codes(coarse, vmin, step) -> DataFrame:
+        return ivfsq_encode(hist, coarse, vmin, step).select(
+            F.col("vec_id").alias("neighbor_id"), "cell", "cd"
+        )
+
+    def train():
+        return ivfsq_train(hash_bounded_sample(hist), cells=_Q223_CELLS)
+
+    def build(names: list[str]) -> None:
+        coarse, vmin, step = train()
+        codes(coarse, vmin, step).write.mode("overwrite").partitionBy(
+            "cell"
+        ).saveAsTable(names[0])
+        save_params(spark, names[1], coarse=coarse, vmin=[vmin], step=[step])
+
+    names = table_generation(
+        spark, sf_dir, (f"{prefix}codes", f"{prefix}params"), build
+    )
+    if names is None:
+        coarse, vmin, step = train()
+        return coarse, vmin, step, codes(coarse, vmin, step), None
+    p = load_params(spark, names[1])
+    return (
+        p["coarse"], p["vmin"][0], p["step"][0], spark.table(names[0]),
+        names[0],
+    )
 
 
 def q227_incremental_ivfsq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2947,75 +2923,16 @@ def q227_incremental_ivfsq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         to_double_array,
     )
     from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
-        hash_bounded_sample,
         ivf_cell_ranks,
         ivfsq_encode,
-        ivfsq_train,
     )
     from pyspark.sql import Window
 
     emb = table(spark, sf_dir, "embeddings")
     is_new = F.col("vec_id") % 10 == 7
-    hist = emb.filter(~is_new)
-
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    codes_t = f"wetsa_ivfsqcodes_{tag}_{_Q227_TOKEN}"
-    params_t = f"wetsa_ivfsqparams_{tag}_{_Q227_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        for fam, tname in (
-            (f"wetsa_ivfsqcodes_{tag}_*", codes_t),
-            (f"wetsa_ivfsqparams_{tag}_*", params_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q227_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-
-    artifacts = None
-    try:
-        if not spark.catalog.tableExists(params_t):
-            coarse, vmin, step = ivfsq_train(
-                hash_bounded_sample(hist), cells=_Q223_CELLS
-            )
-            artifacts = (coarse, vmin, step)
-            (
-                ivfsq_encode(hist, coarse, vmin, step)
-                .select(F.col("vec_id").alias("neighbor_id"), "cell", "cd")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .saveAsTable(codes_t)
-            )
-            # params LAST: the commit gate for the whole generation.
-            rows = [("coarse", c, list(coarse[c])) for c in range(_Q223_CELLS)]
-            rows += [("vmin", 0, list(vmin)), ("step", 0, list(step))]
-            spark.createDataFrame(
-                rows, "kind string, idx int, vals array<double>"
-            ).write.mode("overwrite").saveAsTable(params_t)
-        if artifacts is None:
-            coarse = [None] * _Q223_CELLS
-            vmin = step = None
-            for r in spark.table(params_t).collect():
-                if r["kind"] == "coarse":
-                    coarse[r["idx"]] = list(r["vals"])
-                elif r["kind"] == "vmin":
-                    vmin = list(r["vals"])
-                else:
-                    step = list(r["vals"])
-            artifacts = (coarse, vmin, step)
-        hist_codes = spark.table(codes_t)
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
-        if artifacts is None:
-            artifacts = ivfsq_train(
-                hash_bounded_sample(hist), cells=_Q223_CELLS
-            )
-        coarse, vmin, step = artifacts
-        hist_codes = ivfsq_encode(hist, coarse, vmin, step).select(
-            F.col("vec_id").alias("neighbor_id"), "cell", "cd"
-        )
-    coarse, vmin, step = artifacts
+    coarse, vmin, step, hist_codes, _ = _ivfsq_index(
+        spark, sf_dir, emb.filter(~is_new), "ivfsq"
+    )
 
     new_codes = ivfsq_encode(emb.filter(is_new), coarse, vmin, step).select(
         F.col("vec_id").alias("neighbor_id"), "cell", "cd"
@@ -3507,7 +3424,6 @@ ORDER BY rrf DESC, doc_id LIMIT {_Q194_TOPK}
 # q207 — hybrid retrieval SERVED from the persisted postings index
 # --------------------------------------------------------------------------
 
-_Q207_TOKEN = __import__("uuid").uuid4().hex[:12]
 _Q207_BUCKETS = 16
 
 
@@ -3551,6 +3467,7 @@ def _q207_postings(
     gate table — built once per process per SF, then read from the
     catalog. Shared by q207 (fixed-depth serving) and q233 (SLA-derived
     depths), so both serve from the SAME index generation."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
     from wetsa_cams_solrad_timeseries_spark.functions.tokenize import norm_words
     from wetsa_cams_solrad_timeseries_spark.sinks.bucketed import write_bucketed
 
@@ -3571,36 +3488,20 @@ def _q207_postings(
         )
         return postings, stats
 
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    post_t = f"wetsa_postfull_{tag}_{_Q207_TOKEN}"
-    stats_t = f"wetsa_poststats_{tag}_{_Q207_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
+    def write(names: list[str]) -> None:
+        postings, stats = build()
+        # Postings FIRST, the 1-row stats gate table LAST, so the gate
+        # implies a complete generation (the q197 commit-order lesson).
+        write_bucketed(
+            postings, names[0], "term",
+            n_buckets=_Q207_BUCKETS, sort_col="term",
         )
+        stats.write.mode("overwrite").saveAsTable(names[1])
 
-        for fam, tname in (
-            (f"wetsa_postfull_{tag}_*", post_t),
-            (f"wetsa_poststats_{tag}_*", stats_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q207_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-    try:
-        if not spark.catalog.tableExists(stats_t):
-            postings, stats = build()
-            # Postings FIRST, the 1-row stats gate table LAST, so
-            # tableExists(stats_t) implies a complete generation (the
-            # q197 commit-order lesson).
-            write_bucketed(
-                postings, post_t, "term",
-                n_buckets=_Q207_BUCKETS, sort_col="term",
-            )
-            stats.write.mode("overwrite").saveAsTable(stats_t)
-        post, stats = spark.table(post_t), spark.table(stats_t)
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
-        post, stats = build()
-    return post, stats
+    names = table_generation(spark, sf_dir, ("postfull", "poststats"), write)
+    if names is None:
+        return build()
+    return spark.table(names[0]), spark.table(names[1])
 
 
 # --------------------------------------------------------------------------
@@ -5086,9 +4987,6 @@ Q237_ORACLE = None  # LAZY — oracle_fn resolved at call time (q56 pattern)
 # q238 — incremental graph-ANN index: persisted edges, insert-only updates
 # --------------------------------------------------------------------------
 
-_Q238_TOKEN = __import__("uuid").uuid4().hex[:12]
-
-
 def q238_incremental_graph_ann(
     spark: SparkSession, sf_dir: str, tombstones: DataFrame | None = None
 ) -> DataFrame:
@@ -5129,6 +5027,11 @@ def q238_incremental_graph_ann(
     literals — history kNN among history, new kNN against all
     cell-mates, one uniform bridge formula (valid because the medoids
     are frozen), the unrolled beam — incremental ≡ batch."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import (
+        load_params,
+        save_params,
+        table_generation,
+    )
     from wetsa_cams_solrad_timeseries_spark.operators.similarity import (
         cell_knn_edges,
         cell_knn_edges_incremental,
@@ -5141,22 +5044,6 @@ def q238_incremental_graph_ann(
     is_new = F.col("vec_id") % 10 == 7
     hist = emb.filter(~is_new)
 
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    edges_t = f"wetsa_graphedges_{tag}_{_Q238_TOKEN}"
-    params_t = f"wetsa_graphparams_{tag}_{_Q238_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        for fam, tname in (
-            (f"wetsa_graphedges_{tag}_*", edges_t),
-            (f"wetsa_graphparams_{tag}_*", params_t),
-        ):
-            claim_warehouse_table(spark, fam, _Q238_TOKEN, tname)
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-
     def _build_artifacts():
         cents = ivf_train_centroids(hist, k=16, n_iter=2)
         # Parameter-sized collect: n_cells medoid ids — the frozen hubs.
@@ -5165,56 +5052,35 @@ def q238_incremental_graph_ann(
         }
         return cents, medoids
 
-    def _base_edges(cents, med_df):
+    def _med_df(medoids):
+        return spark.createDataFrame(
+            sorted(medoids.items()), "cell int, medoid long"
+        )
+
+    def _base_edges(cents, medoids):
         knn_h = cell_knn_edges(hist, cents, m=_Q232_M)
         probes_h = ivf_assign(hist, cents, n_probe=1 + _Q232_BRIDGE)
-        return knn_h.unionByName(_medoid_bridges(probes_h, med_df))
+        return knn_h.unionByName(_medoid_bridges(probes_h, _med_df(medoids)))
 
-    artifacts = None
-    try:
-        if not spark.catalog.tableExists(params_t):
-            cents, medoids = _build_artifacts()
-            artifacts = (cents, medoids)
-            med_df = spark.createDataFrame(
-                sorted(medoids.items()), "cell int, medoid long"
-            )
-            _base_edges(cents, med_df).write.mode("overwrite").saveAsTable(
-                edges_t
-            )
-            # params LAST: the commit gate for the whole generation.
-            rows = [("cent", c, list(cents[c])) for c in range(len(cents))]
-            rows += [
-                ("medoid", c, [float(m)]) for c, m in sorted(medoids.items())
-            ]
-            spark.createDataFrame(
-                rows, "kind string, idx int, vals array<double>"
-            ).write.mode("overwrite").saveAsTable(params_t)
-        if artifacts is None:
-            cents_by_idx, medoids = {}, {}
-            for r in spark.table(params_t).collect():
-                if r["kind"] == "cent":
-                    cents_by_idx[r["idx"]] = list(r["vals"])
-                else:
-                    medoids[r["idx"]] = int(r["vals"][0])
-            artifacts = (
-                [cents_by_idx[i] for i in range(len(cents_by_idx))],
-                medoids,
-            )
-        base_edges = spark.table(edges_t)
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frames
-        if artifacts is None:
-            artifacts = _build_artifacts()
-        cents, medoids = artifacts
-        base_edges = _base_edges(
-            cents,
-            spark.createDataFrame(
-                sorted(medoids.items()), "cell int, medoid long"
-            ),
+    def build(names: list[str]) -> None:
+        cents, medoids = _build_artifacts()
+        _base_edges(cents, medoids).write.mode("overwrite").saveAsTable(
+            names[0]
         )
-    cents, medoids = artifacts
-    med_df = spark.createDataFrame(
-        sorted(medoids.items()), "cell int, medoid long"
+        # params LAST: the commit gate for the whole generation.
+        save_params(spark, names[1], cent=cents, medoid=medoids)
+
+    names = table_generation(
+        spark, sf_dir, ("graphedges", "graphparams"), build
     )
+    if names is None:
+        cents, medoids = _build_artifacts()
+        base_edges = _base_edges(cents, medoids)
+    else:
+        params = load_params(spark, names[1])
+        cents, medoids = params["cent"], params.get("medoid", {})
+        base_edges = spark.table(names[0])
+    med_df = _med_df(medoids)
 
     # --- insert: the new shard, frozen quantizer + frozen hubs ---
     new_knn = cell_knn_edges_incremental(emb, is_new, cents, m=_Q232_M)
@@ -6902,7 +6768,6 @@ WHERE {_Q208_HAMMING} <= {_Q208_MAX_HAMMING}
 # q210 — incremental perceptual-hash index (cross-run image dedup)
 # --------------------------------------------------------------------------
 
-_Q210_TOKEN = __import__("uuid").uuid4().hex[:12]
 _Q210_BUCKETS = 8
 
 
@@ -6948,6 +6813,7 @@ def q210_incremental_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per run, work = new-shard Arrow hash pass (4 int64s
     per payload) + a bucket-colocated probe join + candidate-sized
     popcounts. Appends ride the bucketed layout (q193's discipline)."""
+    from wetsa_cams_solrad_timeseries_spark._artifacts import table_generation
     from wetsa_cams_solrad_timeseries_spark.operators.multimodal import (
         attach_payload,
         dhash_bands,
@@ -6960,27 +6826,20 @@ def q210_incremental_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sigs(part: DataFrame) -> DataFrame:
         return dhash_bands(attach_payload(part, "doc_id", "text"))
 
-    tag = "".join(c for c in os.path.basename(sf_dir.rstrip("/")) if c.isalnum())
-    tname = f"wetsa_phashidx_{tag}_{_Q210_TOKEN}"
-    try:
-        from wetsa_cams_solrad_timeseries_spark._artifacts import (
-            claim_warehouse_table,
-        )
-
-        claim_warehouse_table(
-            spark, f"wetsa_phashidx_{tag}_*", _Q210_TOKEN, tname
-        )
-    except Exception:  # noqa: BLE001 — cleanup is best-effort only
-        pass
-    try:
-        if not spark.catalog.tableExists(tname):
-            write_bucketed(
-                _dhash_index_rows(sigs(docs.filter(~is_new))), tname,
-                "bkey", n_buckets=_Q210_BUCKETS, sort_col="bkey",
-            )
-        hist_idx = spark.table(tname)
-    except Exception:  # noqa: BLE001 — catalog unavailable: plain frame
-        hist_idx = _dhash_index_rows(sigs(docs.filter(~is_new)))
+    names = table_generation(
+        spark,
+        sf_dir,
+        ("phashidx",),
+        lambda n: write_bucketed(
+            _dhash_index_rows(sigs(docs.filter(~is_new))), n[0],
+            "bkey", n_buckets=_Q210_BUCKETS, sort_col="bkey",
+        ),
+    )
+    hist_idx = (
+        _dhash_index_rows(sigs(docs.filter(~is_new)))
+        if names is None
+        else spark.table(names[0])
+    )
 
     probe = _dhash_index_rows(sigs(docs.filter(is_new)))
     bands = [f"band{b}" for b in range(4)]

@@ -36,7 +36,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,21 +55,9 @@ def chrono_split(spark: SparkSession, sf_dir: str, n_files: int = 2) -> str:
     and the blind-spot oracle depends only on the FINAL watermark, not
     the file count. Each extra file costs a full micro-batch of join
     state-store and checkpoint overhead without new semantics."""
-    from wetsa_cams_solrad_timeseries_spark._artifacts import claim_artifact_dir
-    from wetsa_cams_solrad_timeseries_spark.plans.vector import _SPLIT_TOKEN
+    from wetsa_cams_solrad_timeseries_spark._artifacts import tmp_generation
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    # n_files participates in the cache identity (see vector._split_events).
-    split_dir = claim_artifact_dir(
-        os.path.join(tempfile.gettempdir(), f"wetsa_chrono_split_*_{sf_tag}*"),
-        _SPLIT_TOKEN,
-        os.path.join(
-            tempfile.gettempdir(),
-            f"wetsa_chrono_split_{_SPLIT_TOKEN}_{sf_tag}_f{n_files}",
-        ),
-    )
-    done = os.path.join(split_dir, "_SUCCESS")
-    if not os.path.exists(done):
+    def write(split_dir: str) -> None:
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         ts_fix = ts_fix_expr(dict(ev.dtypes).get("ts"))
         ev = ev.withColumn("ts", ts_fix)
@@ -94,9 +81,12 @@ def chrono_split(spark: SparkSession, sf_dir: str, n_files: int = 2) -> str:
             os.replace(src, os.path.join(split_dir, f"part-{i:05d}.parquet"))
             shutil.rmtree(tmp, ignore_errors=True)
             lo = hi
-        with open(done, "w"):
+        # The writer's own done marker: the generation gate checks it.
+        with open(os.path.join(split_dir, "_SUCCESS"), "w"):
             pass
-    return split_dir
+
+    # n_files participates in the cache identity (see vector._split_events).
+    return tmp_generation(sf_dir, "chrono_split", write, suffix=f"_f{n_files}")
 
 
 def streaming_left_outer_interval_join(

@@ -90,9 +90,10 @@ def streaming_foreachbatch_upsert(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Drain the multi-file replay through a foreachBatch MERGE and
-    return the final keyed table. Asserts the stream really delivered
-    more than one micro-batch (maxFilesPerTrigger=1 over a multi-file
-    split), so cross-batch merge associativity is exercised."""
+    return the final keyed table. Raises RuntimeError unless the stream
+    really delivered more than one micro-batch (maxFilesPerTrigger=1
+    over a multi-file split), so cross-batch merge associativity is
+    exercised."""
     from wetsa_cams_solrad_timeseries_spark.streaming._drain import (
         file_replay_reader,
         run_drain,
@@ -156,9 +157,10 @@ def streaming_foreachbatch_upsert(
             spark, batch_df.count(), reader.writeStream.foreachBatch(apply_batch)
         )
         gens = committed_gens()
-        assert len(gens) > 1, (
-            f"multi-batch upsert expected >1 micro-batch, got {len(gens)}"
-        )
+        if len(gens) <= 1:
+            raise RuntimeError(
+                f"multi-batch upsert expected >1 micro-batch, got {len(gens)}"
+            )
         result = spark.read.parquet(os.path.join(root, f"gen_{max(gens)}"))
         return spark.createDataFrame(result.collect(), schema=result.schema)
     finally:
